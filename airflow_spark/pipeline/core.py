@@ -666,7 +666,7 @@ class Pipeline:
                 completed[tname] = val
         attempt = 2
         new_id = f"{run_id}__r{attempt}"
-        prior = {r for r in (state_store.run_ids(self.name) or [])}
+        prior = set(state_store.run_ids(self.name))
         while new_id in prior:
             attempt += 1
             new_id = f"{run_id}__r{attempt}"

@@ -5,6 +5,20 @@ The reference persists DAG runs / task instances / XCom in Postgres
 run under a state dir — queryable with the same engine it orchestrates
 — plus a retention vacuum (O13/K4 analog: Airflow-Cleanup's 7-day
 file retention, dags/Airflow_Cleanup.py:46-58).
+
+Writes and reads take different paths:
+
+- Writes are made in-process with pyarrow (``_write_parquet``), not as
+  Spark jobs: a one-row record is all fixed per-job cost. Each write
+  goes to a hidden ``.part-<uuid>.snappy.parquet.tmp`` and is renamed
+  to ``part-<uuid>.snappy.parquet`` once complete, so readers — Spark's
+  parquet reader and ``DatasetTrigger`` both skip ``.``/``_`` names —
+  see whole files or nothing, and concurrent writers never collide.
+- Reads (``runs()``, ``xcoms()`` and everything built on them) stay
+  Spark queries over the directory.
+- ``vacuum`` writes the kept rows as one new file *before* deleting the
+  files it supersedes: a crash in between leaves duplicate rows, never
+  lost history.
 """
 
 from __future__ import annotations
@@ -12,7 +26,10 @@ from __future__ import annotations
 import datetime as dt
 import json
 import os
+import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -37,6 +54,39 @@ XCOM_SCHEMA = T.StructType(
         T.StructField("recorded", T.TimestampType()),
     ]
 )
+
+# Arrow types for the store's Spark types. The tz-aware timestamp makes
+# Spark read ``TimestampType`` (an instant), not ``TimestampNTZType``.
+_ARROW_TYPES = {
+    T.StringType(): pa.string(),
+    T.DoubleType(): pa.float64(),
+    T.TimestampType(): pa.timestamp("us", tz="UTC"),
+}
+
+
+def _write_parquet(dirpath: str, schema: T.StructType, rows) -> None:
+    """Append ``rows`` (tuples in ``schema`` order) to the parquet table
+    at ``dirpath`` as one new file, written in-process with pyarrow.
+
+    Timestamps go through ``TimestampType.toInternal``, the conversion
+    ``createDataFrame`` applies, so a naive value stores the same
+    instant Spark would store for it under any process ``TZ``."""
+    columns = list(zip(*rows))
+    arrays = [
+        pa.array(
+            [f.dataType.toInternal(v) for v in col]
+            if isinstance(f.dataType, T.TimestampType)
+            else col,
+            type=_ARROW_TYPES[f.dataType],
+        )
+        for f, col in zip(schema.fields, columns)
+    ]
+    table = pa.Table.from_arrays(arrays, names=schema.names)
+    os.makedirs(dirpath, exist_ok=True)
+    name = f"part-{uuid.uuid4()}.snappy.parquet"
+    tmp = os.path.join(dirpath, f".{name}.tmp")
+    pq.write_table(table, tmp, compression="snappy")
+    os.replace(tmp, os.path.join(dirpath, name))
 
 
 class RunStateStore:
@@ -70,8 +120,7 @@ class RunStateStore:
                 ),
             )
         ]
-        df = self.spark.createDataFrame(row, RUN_SCHEMA)
-        df.coalesce(1).write.mode("append").parquet(self.path)
+        _write_parquet(self.path, RUN_SCHEMA, row)
         self._record_xcom(pipeline.name, run)
 
     # -- XCom persistence (Airflow metadata-DB XCom table analog,
@@ -100,9 +149,7 @@ class RunStateStore:
                 )
             )
         if rows:
-            self.spark.createDataFrame(rows, XCOM_SCHEMA).coalesce(1).write.mode(
-                "append"
-            ).parquet(self.xcom_path)
+            _write_parquet(self.xcom_path, XCOM_SCHEMA, rows)
 
     def task_statuses(self, pipeline: str, run_id: str) -> dict:
         """Per-task status map of one recorded run (parsed from the
@@ -124,17 +171,14 @@ class RunStateStore:
     def run_ids(self, pipeline: str) -> list[str]:
         """All recorded run ids for a pipeline (collect is bounded by
         run count — control-plane scale, and vacuumed)."""
-        try:
-            return [
-                r["run_id"]
-                for r in self.runs()
-                .where(F.col("pipeline") == pipeline)
-                .select("run_id")
-                .distinct()
-                .collect()
-            ]
-        except Exception:
-            return []
+        return [
+            r["run_id"]
+            for r in self.runs()
+            .where(F.col("pipeline") == pipeline)
+            .select("run_id")
+            .distinct()
+            .collect()
+        ]
 
     def xcoms(self) -> DataFrame:
         return self.spark.read.schema(XCOM_SCHEMA).parquet(self.xcom_path)
@@ -172,53 +216,44 @@ class RunStateStore:
         return rows[0] if rows else None
 
     def vacuum(self, retention: dt.timedelta, now: dt.datetime | None = None) -> int:
-        """Drop run records older than ``retention`` (rewrite-compact).
-        Returns rows kept. The destructive step is a state-table
-        rewrite, never external file deletion."""
+        """Drop run and XCom records older than ``retention``
+        (rewrite-compact). Returns run rows kept.
+
+        Each table's kept rows become one new file before the files
+        they came from are deleted, so a crash in between leaves
+        duplicate rows but never loses history. The destructive step is
+        this state-table rewrite, never external file deletion."""
         now = now or dt.datetime.now(dt.timezone.utc)
         cutoff = (now - retention).replace(tzinfo=None)
-        kept = self.runs().where(F.col("started") >= F.lit(cutoff))
-        rows = kept.collect()  # state table is small by construction
-
-        # write the kept rows FIRST, then swap the old files out: a
-        # crash between delete and rewrite would otherwise lose the
-        # whole run history (same swap discipline as sources/tables.py)
-        def _swap(dirpath, schema, keep_rows):
-            tmp = dirpath.rstrip("/") + ".__vacuum__"
-            self.spark.createDataFrame(keep_rows, schema).coalesce(
-                1
-            ).write.mode("overwrite").parquet(tmp)
-            for f in os.listdir(dirpath):
-                full = os.path.join(dirpath, f)
-                if os.path.isfile(full):
-                    os.remove(full)
-            for f in os.listdir(tmp):
-                src = os.path.join(tmp, f)
-                if os.path.isfile(src):
-                    os.rename(src, os.path.join(dirpath, f))
-            import shutil
-
-            shutil.rmtree(tmp, ignore_errors=True)
-
-        if rows:
-            _swap(self.path, RUN_SCHEMA, rows)
-        else:
-            for f in os.listdir(self.path):
-                full = os.path.join(self.path, f)
-                if os.path.isfile(full):
-                    os.remove(full)
-        # same retention applies to the XCom table
+        kept = self._compact(self.path, RUN_SCHEMA, "started", cutoff)
         if os.path.isdir(self.xcom_path):
-            xkept = self.xcoms().where(F.col("recorded") >= F.lit(cutoff)).collect()
-            if xkept:
-                _swap(self.xcom_path, XCOM_SCHEMA, xkept)
-            else:
-                for f in os.listdir(self.xcom_path):
-                    full = os.path.join(self.xcom_path, f)
-                    if os.path.isfile(full):
-                        os.remove(full)
-        return len(rows)
+            self._compact(self.xcom_path, XCOM_SCHEMA, "recorded", cutoff)
+        return kept
 
+    def _compact(self, dirpath, schema, ts_col, cutoff) -> int:
+        # Only the files listed here are read and then superseded, so a
+        # record appended meanwhile is neither duplicated nor deleted.
+        # In-flight ``.tmp`` files belong to concurrent writers.
+        names = [
+            f
+            for f in os.listdir(dirpath)
+            if not f.endswith(".tmp") and os.path.isfile(os.path.join(dirpath, f))
+        ]
+        superseded = [os.path.join(dirpath, f) for f in names]
+        data = [os.path.join(dirpath, f) for f in names if not f.startswith((".", "_"))]
+        rows = (
+            self.spark.read.schema(schema)
+            .parquet(*data)
+            .where(F.col(ts_col) >= F.lit(cutoff))
+            .collect()
+            if data
+            else []
+        )
+        if rows:
+            _write_parquet(dirpath, schema, rows)
+        for full in superseded:
+            os.remove(full)
+        return len(rows)
 
     # -- run analytics (the Airflow UI "DAG runs" panel as queries over
     # the engine's own store; SLA misses mirror Airflow's sla_miss

@@ -59,6 +59,7 @@ echo "== job: lint =="
 echo "== job: smoke =="
 python3 -m pytest tests/test_bench_contract.py -q
 python3 -m pytest tests/test_pipeline.py -q -k "jwt or jwks or auth or role"
+python3 -m pytest -q -p no:cacheprovider perfbench/tests
 python3 -c "import __spark_entry__, bench, airflow_spark"
 
 echo "ci_local: lint + smoke green (full-tests job: python -m pytest tests/ -q)"

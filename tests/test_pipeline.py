@@ -487,6 +487,164 @@ def test_xcom_vacuum_respects_retention(spark, tmp_path):
     assert store.xcom_pull("xv", "t", default=None) is None
 
 
+def _write_with_spark(spark, path, rows, schema):
+    """The store's former writer: one Spark job per append."""
+    spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(path)
+
+
+@pytest.mark.parametrize("tz", ["UTC", "America/New_York"])
+def test_state_store_arrow_writes_match_spark_writes(spark, tmp_path, monkeypatch, tz):
+    import time
+
+    from airflow_spark.pipeline.state import RUN_SCHEMA, XCOM_SCHEMA, _write_parquet
+
+    naive = dt.datetime(2026, 3, 8, 2, 30, 0, 123456)  # in a New York DST gap
+    runs = [
+        ("p", "r1", "success", naive, 1.5,
+         '{"tâche_é✓": {"status": "success", "error": null}}'),
+        ("p", "r2", "failed", dt.datetime(2026, 1, 1), 0.25, None),
+        ("pïpe", "r3", None, dt.datetime(2025, 11, 2, 1, 30), 3.0, "{}"),
+    ]
+    xcoms = [
+        ("p", "r1", "tâche_é✓", '{"n": 1}', naive),
+        ("p", "r2", "t", None, dt.datetime(2026, 1, 1)),
+    ]
+    monkeypatch.setenv("TZ", tz)
+    time.tzset()
+    try:
+        arrow = RunStateStore(spark, str(tmp_path / "arrow"))
+        legacy = RunStateStore(spark, str(tmp_path / "spark"))
+        _write_parquet(arrow.path, RUN_SCHEMA, runs)
+        _write_parquet(arrow.xcom_path, XCOM_SCHEMA, xcoms)
+        _write_with_spark(spark, legacy.path, runs, RUN_SCHEMA)
+        _write_with_spark(spark, legacy.xcom_path, xcoms, XCOM_SCHEMA)
+
+        def read(store):
+            return (
+                store.runs()
+                .select("*", F.unix_micros("started"))
+                .orderBy("run_id")
+                .collect(),
+                store.xcoms()
+                .select("*", F.unix_micros("recorded"))
+                .orderBy("run_id")
+                .collect(),
+            )
+
+        assert read(arrow) == read(legacy)
+        assert arrow.runs().orderBy("run_id").collect()[0]["task_statuses"] == runs[0][5]
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+
+
+def test_state_store_reads_and_vacuums_legacy_spark_files(spark, tmp_path):
+    import os
+
+    from airflow_spark.pipeline.state import RUN_SCHEMA, XCOM_SCHEMA
+
+    store = RunStateStore(spark, str(tmp_path / "runs"))
+    old_started = dt.datetime(2026, 1, 1)
+    _write_with_spark(
+        spark, store.path, [("legacy", "old", "success", old_started, 1.0, "{}")],
+        RUN_SCHEMA,
+    )
+    _write_with_spark(
+        spark, store.xcom_path, [("legacy", "old", "t", '"v"', old_started)], XCOM_SCHEMA
+    )
+    assert "_SUCCESS" in os.listdir(store.path)
+    assert any(f.endswith(".crc") for f in os.listdir(store.path))
+    p = Pipeline("legacy")
+
+    @p.task
+    def t(ctx):
+        return "new"
+
+    p.run(spark, state_store=store, run_id="new")
+    assert sorted(r["run_id"] for r in store.runs().collect()) == ["new", "old"]
+    assert store.xcom_pull("legacy", "t", run_id="old") == "v"
+    assert store.xcom_pull("legacy", "t", run_id="new") == "new"
+
+    assert store.vacuum(dt.timedelta(days=3650)) == 2
+    for d in (store.path, store.xcom_path):
+        files = [f for f in os.listdir(d) if os.path.isfile(os.path.join(d, f))]
+        assert len(files) == 1 and files[0].endswith(".snappy.parquet"), files
+    assert sorted(r["run_id"] for r in store.runs().collect()) == ["new", "old"]
+    assert store.xcoms().count() == 2
+
+
+def test_state_store_concurrent_records_and_reads(spark, tmp_path):
+    import os
+    import threading
+
+    store = RunStateStore(spark, str(tmp_path / "runs"))
+    p = Pipeline("concurrent")
+
+    @p.task
+    def t(ctx):
+        return {"ok": True}
+
+    runs = [p.run(spark, run_id=f"r{i}") for i in range(8)]
+    done = threading.Event()
+    read_errors = []
+
+    def reader():
+        while not done.is_set():
+            try:
+                store.runs().count()
+            except Exception as e:  # surfaced by the assert below
+                read_errors.append(e)
+
+    r = threading.Thread(target=reader)
+    r.start()
+    writers = [threading.Thread(target=store.record_run, args=(p, run)) for run in runs]
+    try:
+        for w in writers:
+            w.start()
+        for w in writers:
+            w.join(timeout=60)
+            assert not w.is_alive()
+    finally:
+        done.set()
+        r.join(timeout=60)
+    assert not r.is_alive()
+    assert read_errors == []
+    assert store.runs().count() == 8
+    assert store.xcoms().count() == 8
+    leftovers = [f for _d, _s, fs in os.walk(store.path) for f in fs if f.endswith(".tmp")]
+    assert leftovers == []
+
+
+def test_record_run_launches_no_spark_job(spark, tmp_path):
+    store = RunStateStore(spark, str(tmp_path / "runs"))
+    p = Pipeline("jobless")
+
+    @p.task
+    def t(ctx):
+        return {"n": 1}
+
+    run = p.run(spark, run_id="r1")
+    sc = spark.sparkContext
+    group = "test-record-run-jobs"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        store.record_run(p, run)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert store.runs().count() == 1 and store.xcom_pull("jobless", "t") == {"n": 1}
+
+
+def test_run_ids_raises_on_failed_read(spark, tmp_path):
+    from py4j.protocol import Py4JJavaError
+
+    store = RunStateStore(spark, str(tmp_path / "runs"))
+    assert store.run_ids("p") == []  # an empty store reads as no runs
+    (tmp_path / "runs" / "part-corrupt.snappy.parquet").write_bytes(b"not parquet")
+    with pytest.raises(Py4JJavaError, match="FAILED_READ_FILE"):
+        store.run_ids("p")
+
+
 # ---------------------------------------------------------------------------
 # HTTP control plane
 # ---------------------------------------------------------------------------
