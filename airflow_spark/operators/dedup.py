@@ -752,7 +752,6 @@ def _write_sig_version(store_path: str) -> None:
 def dedup_clusters(
     pairs: DataFrame,
     max_iters: int = 20,
-    require_convergence: bool = True,
     pairs_distinct: bool = False,
 ) -> DataFrame:
     """Connected components over a near-dup pair graph (id_a, id_b) →
@@ -763,7 +762,7 @@ def dedup_clusters(
     label ← min over neighbors' labels, then label ← label(label)),
     so chains converge in O(log diameter) rounds, not O(diameter).
     Every round's frame is materialized through the graph family's
-    lineage-truncating checkpoint (``graph._materialize_truncated``):
+    lineage-truncating checkpoint (``graph._CacheOwner.truncate``):
     the pair frame usually arrives with a huge upstream plan (the
     whole LSH pipeline), and a union-of-joins loop over an untruncated
     lineage makes Catalyst re-analyze a combinatorially growing tree
@@ -772,8 +771,10 @@ def dedup_clusters(
     Deterministic. Stops early at fixpoint (checked via count of
     changed labels). If the fixpoint is not reached within
     ``max_iters``, partial clusters would silently retain duplicates —
-    so that raises unless ``require_convergence=False`` (then it warns
-    and returns the partial labels).
+    so that raises, like ``graph.connected_components``.
+
+    The returned frame owns the final round's checkpoint blocks:
+    ``unpersist()`` releases them (the graph family's cache contract).
 
     ``pairs_distinct=True`` skips the defensive ``distinct`` on the
     symmetric edge frame: a canonical ``id_a < id_b`` pair list that is
@@ -781,7 +782,7 @@ def dedup_clusters(
     construction, so the dedup shuffle would be a pure no-op pass over
     the heaviest frame in the loop (every LSH pair generator in this
     module emits exactly that shape)."""
-    from .graph import _materialize_truncated
+    from .graph import _CacheOwner, _TruncatedFrame
 
     # Evaluate the pair frame EXACTLY ONCE. The pair plan is usually
     # the whole LSH + exact-verify pipeline; the old spelling
@@ -804,114 +805,91 @@ def dedup_clusters(
     ).select("e.id_a", "e.id_b")
     if not pairs_distinct:
         sym_raw = sym_raw.distinct()
-    sym = _materialize_truncated(sym_raw)
-    # SELF-LOOP FOLD: append one (id, id) row per node so the per-round
-    # neighbor-min aggregate sees the node's OWN label through its
-    # self-loop — least(own, nbr_min) then needs no |V|-sized left join
-    # against the label frame (one join gone per round), and round 1
-    # needs no join at ALL (labels start as identity, so min(id_b) over
-    # neighbors ∪ self IS the propagated label). The old label for the
-    # convergence probe is recovered inside the same aggregate as
-    # min(label WHERE id_b = id_a) — exactly the self-loop row.
-    # The loop rows are materialized separately (|V|-sized, read from
-    # the sym checkpoint) and the per-round edge frame is the LAZY
-    # union of the two checkpoints — no second |E|-sized copy.
-    loops = _materialize_truncated(
-        sym.select(F.col("id_a")).distinct().select(
-            "id_a", F.col("id_a").alias("id_b")
-        )
-    )
-    edges = sym.unionByName(loops)
-    labels: DataFrame | None = None  # None ⇒ identity (round 1)
-    converged = False
-    prev_round: DataFrame | None = None
-    for _ in range(max_iters):
-        if labels is None:
-            propagated = edges.groupBy("id_a").agg(
-                F.min("id_b").alias("cluster"),
-                F.min(
-                    F.when(F.col("id_b") == F.col("id_a"), F.col("id_b"))
-                ).alias("__prev"),
+    with _CacheOwner() as caches:
+        sym = caches.truncate(sym_raw)
+        # SELF-LOOP FOLD: append one (id, id) row per node so the
+        # per-round neighbor-min aggregate sees the node's OWN label
+        # through its self-loop — least(own, nbr_min) then needs no
+        # |V|-sized left join against the label frame (one join gone per
+        # round), and round 1 needs no join at ALL (labels start as
+        # identity, so min(id_b) over neighbors ∪ self IS the propagated
+        # label). The old label for the convergence probe is recovered
+        # inside the same aggregate as min(label WHERE id_b = id_a) —
+        # exactly the self-loop row. The loop rows are materialized
+        # separately (|V|-sized, read from the sym checkpoint) and the
+        # per-round edge frame is the LAZY union of the two checkpoints
+        # — no second |E|-sized copy.
+        loops = caches.truncate(
+            sym.select(F.col("id_a")).distinct().select(
+                "id_a", F.col("id_a").alias("id_b")
             )
-        else:
-            propagated = (
-                edges.join(
-                    labels.select(
+        )
+        edges = sym.unionByName(loops)
+        new_labels = None  # None ⇒ identity labels (round 1)
+        for _ in range(max_iters):
+            if new_labels is None:
+                label, rows = F.col("id_b"), edges
+            else:
+                label = F.col("__lb")
+                rows = edges.join(
+                    new_labels.select(
                         F.col("id").alias("id_b"), F.col("cluster").alias("__lb")
                     ),
                     "id_b",
                 )
-                .groupBy("id_a")
-                .agg(
-                    F.min("__lb").alias("cluster"),
-                    F.min(
-                        F.when(F.col("id_b") == F.col("id_a"), F.col("__lb"))
-                    ).alias("__prev"),
+            # the jump join consumes ``propagated`` on BOTH sides and
+            # Spark does not reuse repeated unpersisted subtrees, so
+            # without this checkpoint each round ran the edges⋈labels
+            # aggregate twice
+            propagated = caches.truncate(
+                rows.groupBy("id_a").agg(
+                    F.min(label).alias("cluster"),
+                    F.min(F.when(F.col("id_b") == F.col("id_a"), label)).alias(
+                        "__prev"
+                    ),
                 )
             )
-        # the jump join consumes ``propagated`` on BOTH sides and Spark
-        # does not reuse repeated unpersisted subtrees, so without this
-        # checkpoint each round ran the edges⋈labels aggregate twice
-        propagated = _materialize_truncated(propagated)
-        # pointer jumping: label ← label(label). Labels are always ids
-        # of same-component nodes, so the self-join stays inside the
-        # component while halving the remaining chain depth. Every
-        # label IS a node id and every node appears in ``propagated``
-        # (self-loops guarantee it), so the jump join is safely INNER.
-        # The OLD label rides along as __prev so the convergence probe
-        # is a filter over the materialized frame, not a join of two
-        # rounds.
-        new_labels = _materialize_truncated(
-            propagated.alias("a")
-            .join(
-                propagated.select(
-                    F.col("id_a").alias("pid"), F.col("cluster").alias("pcluster")
-                ),
-                F.col("a.cluster") == F.col("pid"),
+            # pointer jumping: label ← label(label). Labels are always
+            # ids of same-component nodes, so the self-join stays inside
+            # the component while halving the remaining chain depth.
+            # Every label IS a node id and every node appears in
+            # ``propagated`` (self-loops guarantee it), so the jump join
+            # is safely INNER. The OLD label rides along as __prev so
+            # the convergence probe is a filter over the materialized
+            # frame, not a join of two rounds.
+            stale, new_labels = new_labels, caches.truncate(
+                propagated.alias("a")
+                .join(
+                    propagated.select(
+                        F.col("id_a").alias("pid"), F.col("cluster").alias("pcluster")
+                    ),
+                    F.col("a.cluster") == F.col("pid"),
+                )
+                .select(
+                    F.col("a.id_a").alias("id"),
+                    F.least(F.col("a.cluster"), F.col("pcluster")).alias("cluster"),
+                    F.col("a.__prev").alias("__prev"),
+                )
             )
-            .select(
-                F.col("a.id_a").alias("id"),
-                F.least(F.col("a.cluster"), F.col("pcluster")).alias("cluster"),
-                F.col("a.__prev").alias("__prev"),
+            # new_labels is materialized — the jump input's blocks are
+            # dead weight from here
+            caches.drop(propagated)
+            changed = (
+                new_labels.where(F.col("cluster") != F.col("__prev"))
+                .limit(1)
+                .count()
             )
-        )
-        # new_labels is materialized — the jump input's blocks are
-        # dead weight from here
-        propagated.unpersist()
-        changed = (
-            new_labels.where(F.col("cluster") != F.col("__prev"))
-            .limit(1)
-            .count()
-        )
-        # round k is materialized (eagerly, above) — round k-1's
-        # checkpoint blocks are dead weight from here
-        if prev_round is not None:
-            prev_round.unpersist()
-        prev_round = new_labels
-        labels = new_labels.select("id", "cluster")
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        msg = (
-            f"dedup_clusters did not reach a fixpoint in {max_iters} "
-            "iterations (a component has diameter > max_iters); the "
-            "partial labels would keep extra duplicates"
-        )
-        if require_convergence:
-            sym.unpersist()
-            loops.unpersist()
-            if prev_round is not None:
-                prev_round.unpersist()
-            raise RuntimeError(msg + " — raise max_iters")
-        import warnings
-
-        warnings.warn(msg, stacklevel=2)
-    # the returned labels read only the final round's checkpoint; the
-    # edge checkpoints' blocks are consumed
-    sym.unpersist()
-    loops.unpersist()
-    return labels
+            # round k is materialized — round k-1's checkpoint blocks
+            # are dead weight from here
+            caches.drop(stale)
+            if changed == 0:
+                final = caches.keep(new_labels)
+                return _TruncatedFrame(final.select("id", "cluster"), final._ckpt_jrdd)
+    raise RuntimeError(
+        f"dedup_clusters did not reach a fixpoint in {max_iters} "
+        "iterations (a component has diameter > max_iters); the "
+        "partial labels would keep extra duplicates — raise max_iters"
+    )
 
 
 def keep_representatives(

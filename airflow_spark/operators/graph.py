@@ -7,23 +7,33 @@ scale, checkpointed every ~10 rounds to truncate the plan). Both
 operators here follow that shape — no driver-side collects, no Python
 row work; each round is one shuffle keyed by node id.
 
-At 100 TB: pre-partition ``edges`` by ``src`` (bucketed write) and the
-per-round join inherits the partitioning — rounds become zero-Exchange
-on the edge side, shuffling only the (node, rank/label) frame.
+Partitioning: PageRank repartitions its edge frame by ``src`` before
+checkpointing it, but the checkpoint reports ``UnknownPartitioning(0)``:
+building the degree-joined edge frame re-shuffles the edges on ``src``,
+and every round's planned join has an ``Exchange hashpartitioning(src)``
+over that frame's scan. On ``op_pagerank`` at sf0.1 with the session
+defaults, AQE turns each round's join into a broadcast of the |V|-sized
+rank side at run time, so a round shuffles only its contribution
+aggregate; on a graph whose rank side is too large to broadcast, each
+round re-shuffles all |E| edges.
 
 Public algorithms: PageRank (Brin/Page), label-propagation connected
 components (the min-label hashmin variant used by e.g. GraphFrames).
 
-Cache contract (uniform across the iterative ops): the RETURNED frame
-is persisted and already materialized; every internal cache — the
-co-partitioned adjacency, loop invariants, per-round checkpoints and
-frontiers — is unpersisted before return, on the error paths too. The
-caller owns the single remaining cache and may ``result.unpersist()``
-when done; ``tests/test_graph.py`` asserts the persistent-RDD ledger
-returns to baseline after that.
+Cache contract (uniform across the iterative ops, enforced by
+:class:`_CacheOwner`): the RETURNED frame is persisted and already
+materialized; every internal cache — adjacency, loop invariants,
+per-round checkpoints and frontiers — is released when the op exits,
+whether it returns, raises or has its jobs cancelled. The caller owns
+the single remaining cache and may ``result.unpersist()`` when done;
+``tests/test_graph.py`` asserts the persistent-RDD ledger returns to
+baseline after that, and after a raise or a cancelled job group.
 """
 
 from __future__ import annotations
+
+import contextlib
+import uuid
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -41,7 +51,10 @@ class _TruncatedFrame(_ClassicDataFrame):
     """A localCheckpoint-backed materialized frame whose ``unpersist()``
     releases the pinned checkpoint blocks. After unpersist the frame is
     NOT recomputable (its lineage was truncated away) — callers only
-    ever unpersist superseded or fully-consumed iteration frames."""
+    ever unpersist superseded or fully-consumed iteration frames.
+
+    ``jrdd`` is the checkpointed RDD; a projection of a checkpoint may
+    be wrapped with the same ``jrdd`` so that it owns those blocks."""
 
     def __init__(self, df: DataFrame, jrdd) -> None:
         super().__init__(df._jdf, df.sparkSession)
@@ -52,68 +65,186 @@ class _TruncatedFrame(_ClassicDataFrame):
         return self
 
 
-def _materialize_truncated(df: DataFrame) -> DataFrame:
-    """Materialize an iteration checkpoint AND truncate its lineage:
-    a plain persist caches the data but Catalyst still re-analyzes the
-    full N-round logical plan on every later action, so planning cost
-    grows with rounds — measured 2.4x on a 10-round PageRank whose
-    final frame was persisted but not truncated (and 95 s of pure
-    planning on an untruncated component loop at sf0.1).
+class _CacheOwner:
+    """Owns every frame an iterative loop caches.
 
-    Default mechanism: ``localCheckpoint(eager=True)`` — ONE job that
-    computes the segment once and pins the blocks executor-local, no
-    second write pass and no round-trip through the checkpoint
-    filesystem. That is the right trade for iteration checkpoints at
-    any scale: losing an executor mid-loop just re-runs the loop job,
-    and the per-round latency the reliable path adds (a full second
-    materialization job + a distributed-FS write + read-back) is paid
-    EVERY round on EVERY graph. Blocks are freed by the context
-    cleaner when the frame becomes unreachable
-    (``spark.cleaner.referenceTracking`` is on by default).
+    ``persist`` and ``truncate`` cache a frame and track it; ``drop``
+    releases a tracked frame the loop has superseded (untracked frames,
+    ``None`` included, are left alone); ``keep`` hands a tracked frame
+    to the caller. On exit every tracked frame not kept is released, on
+    every path: return, raise, and a cancelled job group. A failure to
+    release never replaces the loop's own exception."""
 
-    ``SPARK_GRAFT_RELIABLE_CKPT=1`` restores reliable
-    ``checkpoint(eager=True)`` for deployments whose loops are so long
-    that recomputing a lost segment costs more than the per-round
-    write tax (the frame then survives executor loss). Deployments
-    point ``setCheckpointDir`` at durable shared storage; when unset a
-    per-process tempdir is installed (correct in local mode), with an
-    atexit sweep so files never outlive the process."""
-    import os
+    def __init__(self) -> None:
+        self._held: list[DataFrame] = []
 
-    if os.environ.get("SPARK_GRAFT_RELIABLE_CKPT", "") not in ("1", "true"):
-        lc = df.localCheckpoint(eager=True)
+    def __enter__(self) -> _CacheOwner:
+        return self
+
+    def __exit__(self, exc_type, exc, tb) -> None:
+        held, self._held = self._held, []
+        failed = None
+        for df in reversed(held):
+            try:
+                df.unpersist()
+            except Exception as e:  # release the rest first
+                failed = failed or e
+        if failed is not None and exc_type is None:
+            raise failed
+
+    def _untrack(self, df) -> bool:
+        n = len(self._held)
+        self._held = [h for h in self._held if h is not df]
+        return len(self._held) < n
+
+    def persist(self, df: DataFrame) -> DataFrame:
+        df = df.persist()
+        self._held.append(df)
+        return df
+
+    def truncate(self, df: DataFrame) -> DataFrame:
+        """Materialize ``df`` AND truncate its lineage with
+        ``localCheckpoint(eager=True)``: ONE job computes the segment
+        once and pins the blocks executor-local. A plain persist caches
+        the data but Catalyst still re-analyzes the full N-round logical
+        plan on every later action, so planning cost grows with rounds —
+        measured 2.4x on a 10-round PageRank whose final frame was
+        persisted but not truncated (and 95 s of pure planning on an
+        untruncated component loop at sf0.1)."""
+        sc = df.sparkSession.sparkContext
+        # The checkpoint RDD is pinned BEFORE its job runs, so a job
+        # that fails or is cancelled leaves it registered with no frame
+        # to release it by. A unique creation site (a thread-local
+        # property) identifies it on that path.
+        site = f"graph.truncate-{uuid.uuid4().hex}"
+        outer = sc.getLocalProperty("callSite.short")
+        sc.setLocalProperty("callSite.short", site)
         try:
-            # DataFrame.unpersist only clears CacheManager entries, and
-            # a localCheckpoint never registers one — its blocks are
-            # pinned on the RDD itself. Grab that RDD (the LogicalRDD
-            # leaf the checkpoint produced) so the returned frame's
-            # unpersist() actually releases the blocks and the
-            # persistent-RDD ledger returns to baseline (the iterative
-            # ops' cache contract, pinned by tests/test_graph.py).
-            jrdd = lc._jdf.queryExecution().analyzed().rdd()
-        except Exception:
-            return lc  # plan shape changed underneath us: keep blocks,
-            #            the context cleaner frees them on GC
-        return _TruncatedFrame(lc, jrdd)
-    sc = df.sparkSession.sparkContext
-    if sc.getCheckpointDir() is None:
-        import atexit
-        import shutil
-        import tempfile
+            lc = df.localCheckpoint(eager=True)
+        except BaseException:
+            with contextlib.suppress(Exception):
+                pinned = sc._jsc.getPersistentRDDs()
+                for rid in pinned.keySet().toArray():
+                    r = pinned.get(rid)
+                    if r.rdd().creationSite().shortForm() == site:
+                        r.unpersist()
+            raise
+        finally:
+            sc.setLocalProperty("callSite.short", outer)
+        # DataFrame.unpersist only clears CacheManager entries, and a
+        # localCheckpoint never registers one — its blocks are pinned
+        # on the RDD itself (the LogicalRDD leaf of the plan)
+        out = _TruncatedFrame(lc, lc._jdf.queryExecution().analyzed().rdd())
+        self._held.append(out)
+        return out
 
-        ckpt = tempfile.mkdtemp(prefix=f"spark_graft_ckpt_{os.getpid()}_")
-        sc.setCheckpointDir(ckpt)
-        atexit.register(shutil.rmtree, ckpt, ignore_errors=True)
-    # classic checkpoint gotcha: the checkpoint-write job re-runs the
-    # RDD from lineage, so an unpersisted eager checkpoint computes
-    # the segment TWICE (measured ~2x on the 10-round PageRank).
-    # Persist first so the write job reads the cache, then drop the
-    # cache — the files hold the data from here.
-    df = df.persist()
-    df.count()
-    out = df.checkpoint(eager=True)
-    df.unpersist()
-    return out
+    def drop(self, df: DataFrame | None) -> None:
+        if self._untrack(df):
+            df.unpersist()
+
+    def keep(self, df: DataFrame) -> DataFrame:
+        self._untrack(df)
+        return df
+
+
+def _undirected(edges: DataFrame, src: str, dst: str, *extra) -> DataFrame:
+    """Canonical undirected edge set: one ``(lo, hi, *extra)`` row per
+    distinct non-loop edge, ``lo < hi``."""
+    return (
+        edges.select(
+            F.least(F.col(src), F.col(dst)).alias("lo"),
+            F.greatest(F.col(src), F.col(dst)).alias("hi"),
+            *extra,
+        )
+        .where(F.col("lo") != F.col("hi"))
+        .distinct()
+    )
+
+
+def _power_iteration(
+    edges: DataFrame,
+    iters: int,
+    damping: float,
+    src: str,
+    dst: str,
+    edges_distinct: bool,
+    symmetric: bool,
+    rank_terms,
+) -> DataFrame:
+    """The one PageRank body. ``rank_terms(nodes)`` sees the persisted
+    ``node`` frame and returns the ``(start, teleport)`` columns over
+    ``node`` — start rank and the ``(1−d)``-weighted teleport term — or
+    ``None`` when the graph has no nodes (the result is then empty).
+
+    Update: ``r'(v) = teleport(v) + d·Σ_{u→v} r(u)/outdeg(u)``."""
+    with _CacheOwner() as caches:
+        e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+        if not edges_distinct:
+            e = e.distinct()
+        # materialize the edge frame ONCE before anything is derived
+        # from it: nodes, outdeg and e_deg all reference ``e``, and
+        # Spark re-evaluates repeated unpersisted subtrees — with a
+        # real join feeding the edge list (op_pagerank:
+        # orders⋈lineitem + distinct) the input pipeline ran up to 4×
+        # across those materializations. The ``src`` repartition does
+        # not survive the checkpoint (see the module docstring).
+        e = caches.truncate(e.repartition("src"))
+        if symmetric:
+            nodes = caches.persist(e.select(F.col("src").alias("node")).distinct())
+        else:
+            nodes = caches.persist(
+                e.select(F.col("src").alias("node"))
+                .unionByName(e.select(F.col("dst").alias("node")))
+                .distinct()
+            )
+        terms = rank_terms(nodes)
+        if terms is None:
+            node_type = e.schema["src"].dataType.simpleString()
+            return e.sparkSession.createDataFrame([], f"node {node_type}, rank double")
+        start, teleport = terms
+        # the out-degree join is loop-invariant: fold deg into the edge
+        # frame ONCE so each round is a single join + one aggregate
+        outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
+        e_deg = caches.persist(e.join(outdeg, "src"))
+        ranks = nodes.select("node", start.alias("rank"))
+        ckpt = None
+        for i in range(iters):
+            contrib = (
+                e_deg.join(ranks.withColumnRenamed("node", "src"), "src")
+                .groupBy("dst")
+                .agg(F.sum(F.col("rank") / F.col("deg")).alias("__c"))
+                .withColumnRenamed("dst", "node")
+            )
+            if symmetric:
+                # every node of a symmetric graph has an in-edge, so the
+                # contribution aggregate already covers the whole node
+                # set — the |V| left join below would be a no-op
+                # exchange+join per round (verified: identical ranks
+                # with/without)
+                ranks = contrib.select(
+                    "node", (teleport + damping * F.col("__c")).alias("rank")
+                )
+            else:
+                ranks = nodes.join(contrib, "node", "left").select(
+                    "node",
+                    (
+                        teleport + damping * F.coalesce(F.col("__c"), F.lit(0.0))
+                    ).alias("rank"),
+                )
+            # truncate only every 4th round: a per-round barrier forces
+            # a materialization each iteration (measured 5× slower at
+            # 1.2M edges × 3 rounds), while UNBOUNDED lineage makes
+            # planning superlinear past a handful of rounds — periodic
+            # truncation is the middle that scales to both axes.
+            # (Skipping the mid-loop checkpoint for short runs was
+            # measured and REJECTED: 5-iteration PageRank ran 4.66 s →
+            # 5.43 s without it — re-analyzing the deeper plan at every
+            # AQE stage costs more than the one barrier saves.)
+            if (i + 1) % 4 == 0 and i + 1 < iters:
+                ranks = caches.truncate(ranks)
+                caches.drop(ckpt)  # a long run keeps one checkpoint
+                ckpt = ranks
+        return caches.keep(caches.truncate(ranks))
 
 
 def pagerank(
@@ -135,104 +266,24 @@ def pagerank(
     is a source) — together they remove two |E|-sized shuffles from
     the setup on graphs built from an already-distinct pair list.
 
-    Returns (node, rank) after ``iters`` rounds from a uniform start.
+    Returns (node, rank) after ``iters`` rounds from a uniform start;
+    an empty edge list gives an empty frame.
     Simplified update (no dangling redistribution):
     ``r'(v) = (1−d)/N + d·Σ_{u→v} r(u)/outdeg(u)``.
     """
-    # loop invariants: persist once, CO-PARTITIONED ON THE JOIN KEY —
-    # `distinct` leaves edges hash-partitioned on (src, dst), which
-    # does NOT satisfy the per-round join on src alone, so without the
-    # explicit repartition every round re-shuffles all |E| edges. With
-    # it, the only per-round exchange is the |V|-sized contribution
-    # aggregate (ranks arrive already hash-partitioned on the key via
-    # attribute lineage from the previous round's groupBy). The
-    # out-degree join is loop-invariant too: fold deg into the edge
-    # frame ONCE so each round is a single join + one aggregate.
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    if not edges_distinct:
-        e = e.distinct()
-    # materialize the partitioned edge frame ONCE before anything is
-    # derived from it: nodes, outdeg and e_deg all reference ``e``, and
-    # Spark re-evaluates repeated unpersisted subtrees — with a real
-    # join feeding the edge list (op_pagerank: orders⋈lineitem +
-    # distinct) the input pipeline ran up to 4× across those
-    # materializations. localCheckpoint preserves the hash partitioning
-    # on src, so the per-round join still needs no exchange.
-    e = _materialize_truncated(e.repartition("src"))
-    if symmetric:
-        nodes = e.select(F.col("src").alias("node")).distinct().persist()
-    else:
-        nodes = (
-            e.select(F.col("src").alias("node"))
-            .unionByName(e.select(F.col("dst").alias("node")))
-            .distinct()
-            .persist()
-        )
-    outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    e_deg = e.join(outdeg, "src").persist()
-    # |V| is one bounded scalar action over the persisted node set —
-    # riding it as a literal keeps a 1-row broadcast join out of every
-    # round's plan (planning cost dominates small-graph rounds)
-    n = nodes.count()
-    ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
-    prev_ckpt: DataFrame | None = None
-    for i in range(iters):
-        contrib = (
-            e_deg.join(ranks.withColumnRenamed("node", "src"), "src")
-            .groupBy("dst")
-            .agg(F.sum(F.col("rank") / F.col("deg")).alias("__c"))
-        )
-        if symmetric:
-            # every node of a symmetric graph has an in-edge, so the
-            # contribution aggregate already covers the whole node set
-            # — the |V| left join below would be a no-op exchange+join
-            # per round (verified: identical ranks with/without)
-            ranks = contrib.select(
-                F.col("dst").alias("node"),
-                (
-                    F.lit((1.0 - damping) / n) + damping * F.col("__c")
-                ).alias("rank"),
-            )
-        else:
-            ranks = nodes.join(
-                contrib.withColumnRenamed("dst", "node"), "node", "left"
-            ).select(
-                "node",
-                (
-                    F.lit((1.0 - damping) / n)
-                    + damping * F.coalesce(F.col("__c"), F.lit(0.0))
-                ).alias("rank"),
-            )
-        # persist only every 4th round: a per-round persist forces a
-        # materialization barrier each iteration (measured 5× slower
-        # at 1.2M edges × 3 rounds), while UNBOUNDED lineage makes
-        # planning superlinear past a handful of rounds — periodic
-        # truncation is the middle that scales to both axes. (Skipping
-        # the mid-loop checkpoint for short runs was measured and
-        # REJECTED: 5-iteration PageRank ran 4.66 s → 5.43 s without it
-        # — re-analyzing the deeper plan at every AQE stage costs more
-        # than the one barrier saves.)
-        if (i + 1) % 4 == 0 and i + 1 < iters:
-            # materialize the new checkpoint WITH lineage truncation
-            # (planning cost would otherwise grow superlinearly with
-            # rounds), then drop the previous one — a long run must
-            # not accumulate one cached frame per 4 rounds
-            ranks = _materialize_truncated(ranks)
-            if prev_ckpt is not None:
-                prev_ckpt.unpersist()
-            prev_ckpt = ranks
-    # cache contract (uniform across the iterative graph ops): the
-    # RETURNED frame is materialized with truncated lineage; every
-    # internal cache — loop invariants and the last periodic
-    # checkpoint — is dropped here. The caller owns the one remaining
-    # cache and may result.unpersist() when done.
-    ranks = _materialize_truncated(ranks)
-    if prev_ckpt is not None:
-        prev_ckpt.unpersist()
-    nodes.unpersist()
-    e_deg.unpersist()
-    e.unpersist()
-    return ranks
+
+    def uniform(nodes: DataFrame):
+        # |V| is one bounded scalar action over the persisted node set
+        # — riding it as a literal keeps a 1-row broadcast join out of
+        # every round's plan (planning cost dominates small-graph rounds)
+        n = nodes.count()
+        if n == 0:
+            return None
+        return F.lit(1.0 / n), F.lit((1.0 - damping) / n)
+
+    return _power_iteration(
+        edges, iters, damping, src, dst, edges_distinct, symmetric, uniform
+    )
 
 
 def connected_components(
@@ -252,111 +303,90 @@ def connected_components(
     |V|-keyed join per round measured strictly slower (2.5 s vs 1.8 s
     at sf0.1) because it cannot cut a round count that is already ~4.
     """
-    # Evaluate the edge frame EXACTLY ONCE (same restructure as
-    # dedup.dedup_clusters): the old spelling (edges ∪ edges-reversed,
-    # nodes derived from that union, self-loops unioned back)
-    # referenced the input subtree four times inside the first
-    # materialization, and Spark does not reuse repeated unpersisted
-    # subtrees — a window- or join-derived edge list re-ran that many
-    # times. Both directions come from one explode over a single pass.
-    sym_raw = _materialize_truncated(
-        edges.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col(src).alias("a"), F.col(dst).alias("b")
-                    ),
-                    F.struct(
-                        F.col(dst).alias("a"), F.col(src).alias("b")
-                    ),
-                )
-            ).alias("e")
-        )
-        .select("e.a", "e.b")
-        .distinct()
-    )
-    # SELF-LOOP FOLD (same restructure as dedup.dedup_clusters): one
-    # (node, node) row per node lets the per-round min aggregate see
-    # the node's OWN label through its self-loop — min over neighbors
-    # ∪ self IS least(own, neighbor-min), so the |V|-sized left join
-    # against the label frame disappears from every round, and round 1
-    # (identity labels) needs no join at all. The old label for the
-    # convergence probe is min(label WHERE b = a) — the self-loop row
-    # — one extra aggregate buffer instead of a join. Both invariants
-    # are checkpointed (lineage-truncated) and the per-round edge frame
-    # is their LAZY union — no second |E|-sized copy, and every later
-    # round's plan stays two LogicalRDD leaves instead of re-printing
-    # the whole input pipeline per reference.
-    loops = _materialize_truncated(
-        sym_raw.select(F.col("a").alias("n")).distinct().select(
-            F.col("n").alias("a"), F.col("n").alias("b")
-        )
-    )
-    sym = sym_raw.unionByName(loops)
-    labels: DataFrame | None = None  # None ⇒ identity (round 1)
-    prev_mat: DataFrame | None = None
-    for _ in range(max_iters):
-        # each node adopts min(own label, neighbors' labels); the OLD
-        # label rides along as __prev so convergence is a filter over
-        # the just-materialized frame — not a separate shuffle join of
-        # two cached rounds
-        if labels is None:
-            mat = (
-                sym.groupBy("a")
-                .agg(
-                    F.min("b").alias("component"),
-                    F.min(F.when(F.col("b") == F.col("a"), F.col("b"))).alias(
-                        "__prev"
-                    ),
-                )
-                .withColumnRenamed("a", "node")
-                .persist()
+    with _CacheOwner() as caches:
+        # Evaluate the edge frame EXACTLY ONCE (same restructure as
+        # dedup.dedup_clusters): the old spelling (edges ∪
+        # edges-reversed, nodes derived from that union, self-loops
+        # unioned back) referenced the input subtree four times inside
+        # the first materialization, and Spark does not reuse repeated
+        # unpersisted subtrees — a window- or join-derived edge list
+        # re-ran that many times. Both directions come from one explode
+        # over a single pass.
+        sym_raw = caches.truncate(
+            edges.select(
+                F.explode(
+                    F.array(
+                        F.struct(F.col(src).alias("a"), F.col(dst).alias("b")),
+                        F.struct(F.col(dst).alias("a"), F.col(src).alias("b")),
+                    )
+                ).alias("e")
             )
-        else:
-            mat = (
-                sym.join(
-                    labels.select(
+            .select("e.a", "e.b")
+            .distinct()
+        )
+        # SELF-LOOP FOLD (same restructure as dedup.dedup_clusters): one
+        # (node, node) row per node lets the per-round min aggregate see
+        # the node's OWN label through its self-loop — min over
+        # neighbors ∪ self IS least(own, neighbor-min), so the |V|-sized
+        # left join against the label frame disappears from every
+        # round, and round 1 (identity labels) needs no join at all. The
+        # old label for the convergence probe is min(label WHERE b = a)
+        # — the self-loop row — one extra aggregate buffer instead of a
+        # join. Both invariants are checkpointed (lineage-truncated) and
+        # the per-round edge frame is their LAZY union — no second
+        # |E|-sized copy, and every later round's plan stays two
+        # LogicalRDD leaves instead of re-printing the whole input
+        # pipeline per reference.
+        loops = caches.truncate(
+            sym_raw.select(F.col("a").alias("n")).distinct().select(
+                F.col("n").alias("a"), F.col("n").alias("b")
+            )
+        )
+        sym = sym_raw.unionByName(loops)
+        mat = None  # None ⇒ identity labels (round 1)
+        for _ in range(max_iters):
+            # each node adopts min(own label, neighbors' labels); the
+            # OLD label rides along as __prev so convergence is a filter
+            # over the just-materialized frame — not a separate shuffle
+            # join of two cached rounds
+            if mat is None:
+                label, rows = F.col("b"), sym
+            else:
+                label = F.col("__lb")
+                rows = sym.join(
+                    mat.select(
                         F.col("node").alias("b"),
                         F.col("component").alias("__lb"),
                     ),
                     "b",
                 )
-                .groupBy("a")
+            stale, mat = mat, caches.persist(
+                rows.groupBy("a")
                 .agg(
-                    F.min("__lb").alias("component"),
-                    F.min(F.when(F.col("b") == F.col("a"), F.col("__lb"))).alias(
+                    F.min(label).alias("component"),
+                    F.min(F.when(F.col("b") == F.col("a"), label)).alias(
                         "__prev"
                     ),
                 )
                 .withColumnRenamed("a", "node")
-                .persist()
             )
-        changed = (
-            mat.where(F.col("component") != F.col("__prev")).limit(1).count()
-        )
-        # the probe materialized `mat`; the superseded round's cache is
-        # dead weight from here — drop it (long runs would otherwise
-        # hold one cached frame per round)
-        if prev_mat is not None:
-            prev_mat.unpersist()
-        prev_mat = mat
-        labels = mat.select("node", "component")
-        if changed == 0:
-            # cache contract: the RETURNED frame must own the one
-            # remaining cache (callers unpersist it directly), so
-            # re-persist the two-column projection — materializing it
-            # only re-reads the final round's cached blocks — then
-            # drop that round's cache and the loop-invariant adjacency
-            out = labels.persist()
-            out.count()
-            mat.unpersist()
-            sym_raw.unpersist()
-            loops.unpersist()
-            return out
-    sym_raw.unpersist()
-    loops.unpersist()
-    if prev_mat is not None:
-        prev_mat.unpersist()
+            changed = (
+                mat.where(F.col("component") != F.col("__prev"))
+                .limit(1)
+                .count()
+            )
+            # the probe materialized `mat`; the superseded round is dead
+            # weight from here (long runs would otherwise hold one
+            # cached frame per round)
+            caches.drop(stale)
+            if changed == 0:
+                # the RETURNED frame must own the one remaining cache
+                # (callers unpersist it directly), so re-persist the
+                # two-column projection — materializing it only re-reads
+                # the final round's cached blocks
+                out = caches.persist(mat.select("node", "component"))
+                out.count()
+                return caches.keep(out)
     raise RuntimeError(
         f"connected_components did not converge in {max_iters} rounds "
         "(component diameter exceeds max_iters)"
@@ -388,14 +418,7 @@ def triangle_count(
     if edges_canonical:
         e = edges.select(F.col(src).alias("lo"), F.col(dst).alias("hi"))
     else:
-        e = (
-            edges.select(
-                F.least(F.col(src), F.col(dst)).alias("lo"),
-                F.greatest(F.col(src), F.col(dst)).alias("hi"),
-            )
-            .where(F.col("lo") != F.col("hi"))
-            .distinct()
-        )
+        e = _undirected(edges, src, dst)
     ab = e.select(F.col("lo").alias("a"), F.col("hi").alias("b"))
     bc = e.select(F.col("lo").alias("b"), F.col("hi").alias("c"))
     ac = e.select(F.col("lo").alias("a"), F.col("hi").alias("c"))
@@ -436,14 +459,7 @@ def link_predict_common_neighbors(
 
     Returns (a, b, n_common, score) with a < b.
     """
-    und = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("lo"),
-            F.greatest(F.col(src), F.col(dst)).alias("hi"),
-        )
-        .where(F.col("lo") != F.col("hi"))
-        .distinct()
-    )
+    und = _undirected(edges, src, dst)
     adj = und.select(F.col("lo").alias("node"), F.col("hi").alias("nbr")).unionAll(
         und.select(F.col("hi").alias("node"), F.col("lo").alias("nbr"))
     )
@@ -509,68 +525,50 @@ def bfs_distances(
 
     Returns (node, dist) including (source, 0)."""
     spark = edges.sparkSession
-    und = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("lo"),
-            F.greatest(F.col(src), F.col(dst)).alias("hi"),
+    und = _undirected(edges, src, dst)
+    with _CacheOwner() as caches:
+        adj = caches.persist(
+            und.select(
+                F.explode(
+                    F.array(
+                        F.struct(F.col("lo").alias("node"), F.col("hi").alias("nbr")),
+                        F.struct(F.col("hi").alias("node"), F.col("lo").alias("nbr")),
+                    )
+                ).alias("e")
+            )
+            .select("e.node", "e.nbr")
+            .repartition("node")
         )
-        .where(F.col("lo") != F.col("hi"))
-        .distinct()
-    )
-    adj = (
-        und.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col("lo").alias("node"), F.col("hi").alias("nbr")
-                    ),
-                    F.struct(
-                        F.col("hi").alias("node"), F.col("lo").alias("nbr")
-                    ),
-                )
-            ).alias("e")
-        )
-        .select("e.node", "e.nbr")
-        .repartition("node")
-        .persist()
-    )
-    dist = spark.createDataFrame([(source, 0)], "node bigint, dist int")
-    frontier = dist
-    # (A lazy probe-free variant for small depths was measured and
-    # REJECTED: each round references the previous frontier and the
-    # accumulator more than once, and AQE does NOT reuse the repeated
-    # subtrees across its runtime query stages, so the depth-3 op
-    # recomputed early rounds exponentially — 10.4 s vs 3.9 s, 54 jobs
-    # vs 26. The per-round persist + emptiness probe below is what
-    # keeps every round computed exactly once.)
-    frontiers: list[DataFrame] = []
-    for d in range(1, max_depth + 1):
-        nxt = (
-            frontier.join(adj, "node")
-            .select(F.col("nbr").alias("node"))
-            .distinct()
-            .join(dist, "node", "left_anti")
-            .select("node", F.lit(d).alias("dist"))
-            .persist()
-        )
-        frontiers.append(nxt)
-        if nxt.isEmpty():
-            break
-        # no per-round persist on the accumulator: it is a union of
-        # ALREADY-persisted frontiers, so recompute on reuse just
-        # reads cached blocks — a per-round persist here only adds a
-        # materialization barrier (measured 5× slower in pagerank)
-        dist = dist.unionByName(nxt)
-        frontier = nxt
-    # cache contract: persist + materialize the returned accumulator,
-    # then drop every per-round frontier and the adjacency — the
-    # caller owns the single remaining cache
-    dist = dist.persist()
-    dist.count()
-    for f in frontiers:
-        f.unpersist()
-    adj.unpersist()
-    return dist
+        dist = spark.createDataFrame([(source, 0)], "node bigint, dist int")
+        frontier = dist
+        # (A lazy probe-free variant for small depths was measured and
+        # REJECTED: each round references the previous frontier and the
+        # accumulator more than once, and AQE does NOT reuse the
+        # repeated subtrees across its runtime query stages, so the
+        # depth-3 op recomputed early rounds exponentially — 10.4 s vs
+        # 3.9 s, 54 jobs vs 26. The per-round persist + emptiness probe
+        # below is what keeps every round computed exactly once.)
+        for d in range(1, max_depth + 1):
+            nxt = caches.persist(
+                frontier.join(adj, "node")
+                .select(F.col("nbr").alias("node"))
+                .distinct()
+                .join(dist, "node", "left_anti")
+                .select("node", F.lit(d).alias("dist"))
+            )
+            if nxt.isEmpty():
+                break
+            # no per-round persist on the accumulator: it is a union of
+            # ALREADY-persisted frontiers, so recompute on reuse just
+            # reads cached blocks — a per-round persist here only adds a
+            # materialization barrier (measured 5× slower in pagerank)
+            dist = dist.unionByName(nxt)
+            frontier = nxt
+        # the returned accumulator is materialized from the cached
+        # frontiers before the owner releases them
+        dist = caches.persist(dist)
+        dist.count()
+        return caches.keep(dist)
 
 
 def sssp_bounded(
@@ -592,66 +590,48 @@ def sssp_bounded(
     both shuffles keyed by node; adjacency is co-partitioned once.
     Returns (node, dist) for nodes reachable within ``rounds`` hops."""
     spark = edges.sparkSession
-    und = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("lo"),
-            F.greatest(F.col(src), F.col(dst)).alias("hi"),
-            F.col(weight_col).cast("double").alias("w"),
+    und = _undirected(edges, src, dst, F.col(weight_col).cast("double").alias("w"))
+    with _CacheOwner() as caches:
+        adj = caches.persist(
+            und.select(
+                F.explode(
+                    F.array(
+                        F.struct(
+                            F.col("lo").alias("node"),
+                            F.col("hi").alias("nbr"),
+                            F.col("w"),
+                        ),
+                        F.struct(
+                            F.col("hi").alias("node"),
+                            F.col("lo").alias("nbr"),
+                            F.col("w"),
+                        ),
+                    )
+                ).alias("e")
+            )
+            .select("e.node", "e.nbr", "e.w")
+            .repartition("node")
         )
-        .where(F.col("lo") != F.col("hi"))
-        .distinct()
-    )
-    adj = (
-        und.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col("lo").alias("node"),
-                        F.col("hi").alias("nbr"),
-                        F.col("w"),
-                    ),
-                    F.struct(
-                        F.col("hi").alias("node"),
-                        F.col("lo").alias("nbr"),
-                        F.col("w"),
-                    ),
-                )
-            ).alias("e")
-        )
-        .select("e.node", "e.nbr", "e.w")
-        .repartition("node")
-        .persist()
-    )
-    dist = spark.createDataFrame([(source, 0.0)], "node bigint, dist double")
-    prev: DataFrame | None = None
-    for i in range(rounds):
-        cand = dist.join(adj, "node").select(
-            F.col("nbr").alias("node"), (F.col("dist") + F.col("w")).alias("dist")
-        )
-        dist = (
-            dist.unionByName(cand)
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-            .persist()
-        )
-        # materialize the new round, then drop the superseded cache —
-        # the relaxation only ever reads the latest dist frame, so
-        # keeping old rounds pinned is pure leak (same hygiene as
-        # pagerank's periodic checkpoints); EVERY round now, so the
-        # penultimate frame no longer outlives the loop. (A lazy
-        # no-materialization variant was measured and REJECTED: each
-        # round references the previous dist twice — join + union — and
-        # AQE does NOT reuse the repeated subtree across its runtime
-        # query stages, so the 3-round op recomputed early rounds
-        # exponentially: 5.4 s vs 2.8 s, 29 jobs vs 21.)
-        dist.count()
-        if prev is not None:
-            prev.unpersist()
-        prev = dist
-    # cache contract: the returned final-round frame is the only cache
-    # left — drop the adjacency (callers only read the dist frame)
-    adj.unpersist()
-    return dist
+        dist = spark.createDataFrame([(source, 0.0)], "node bigint, dist double")
+        for _ in range(rounds):
+            cand = dist.join(adj, "node").select(
+                F.col("nbr").alias("node"),
+                (F.col("dist") + F.col("w")).alias("dist"),
+            )
+            nxt = caches.persist(
+                dist.unionByName(cand).groupBy("node").agg(F.min("dist").alias("dist"))
+            )
+            # materialize the new round, then drop the superseded one —
+            # the relaxation only ever reads the latest dist frame. (A
+            # lazy no-materialization variant was measured and REJECTED:
+            # each round references the previous dist twice — join +
+            # union — and AQE does NOT reuse the repeated subtree across
+            # its runtime query stages, so the 3-round op recomputed
+            # early rounds exponentially: 5.4 s vs 2.8 s, 29 jobs vs 21.)
+            nxt.count()
+            caches.drop(dist)
+            dist = nxt
+        return caches.keep(dist)
 
 
 def kcore(
@@ -675,50 +655,43 @@ def kcore(
 
     Self-loops are dropped (a self-loop would let an isolated node
     keep itself alive forever); parallel edges collapse."""
-    sym = (
-        edges.where(F.col(src) != F.col(dst))
-        .select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .unionByName(
-            edges.where(F.col(src) != F.col(dst)).select(
-                F.col(dst).alias("a"), F.col(src).alias("b")
+    with _CacheOwner() as caches:
+        cur = caches.persist(
+            edges.where(F.col(src) != F.col(dst))
+            .select(F.col(src).alias("a"), F.col(dst).alias("b"))
+            .unionByName(
+                edges.where(F.col(src) != F.col(dst)).select(
+                    F.col(dst).alias("a"), F.col(src).alias("b")
+                )
             )
+            .distinct()
         )
-        .distinct()
-        .persist()
-    )
-    cur = sym
-    prev_edges = cur.count()
-    for _ in range(max_iters):
-        deg = cur.groupBy("a").agg(F.count(F.lit(1)).alias("deg"))
-        keep = deg.where(F.col("deg") >= k).select("a").persist()
-        nxt = (
-            cur.join(keep, "a", "left_semi")
-            .join(keep.withColumnRenamed("a", "b"), "b", "left_semi")
-            .persist()
-        )
-        n_edges = nxt.count()
-        # nxt is materialized; the peeled-away round's caches are dead
-        # weight from here (cur may be sym on round one — sym is only
-        # read through cur, so dropping it then is safe too)
-        keep.unpersist()
-        if cur.is_cached:
-            cur.unpersist()
-        if n_edges == prev_edges:
-            # cache contract: materialize the final degree agg as the
-            # returned cache, then drop the fixpoint edge set it reads
-            out = (
-                nxt.groupBy("a")
-                .agg(F.count(F.lit(1)).alias("deg"))
-                .select(F.col("a").alias("node"), "deg")
-                .orderBy("node")
-                .persist()
+        prev_edges = cur.count()
+        for _ in range(max_iters):
+            deg = cur.groupBy("a").agg(F.count(F.lit(1)).alias("deg"))
+            alive = caches.persist(deg.where(F.col("deg") >= k).select("a"))
+            nxt = caches.persist(
+                cur.join(alive, "a", "left_semi").join(
+                    alive.withColumnRenamed("a", "b"), "b", "left_semi"
+                )
             )
-            out.count()
-            nxt.unpersist()
-            return out
-        cur, prev_edges = nxt, n_edges
-    if cur.is_cached:
-        cur.unpersist()
+            n_edges = nxt.count()
+            # nxt is materialized; the peeled-away round's caches are
+            # dead weight from here
+            caches.drop(alive)
+            caches.drop(cur)
+            if n_edges == prev_edges:
+                # the final degree agg is the returned cache; the owner
+                # drops the fixpoint edge set it reads
+                out = caches.persist(
+                    nxt.groupBy("a")
+                    .agg(F.count(F.lit(1)).alias("deg"))
+                    .select(F.col("a").alias("node"), "deg")
+                    .orderBy("node")
+                )
+                out.count()
+                return caches.keep(out)
+            cur, prev_edges = nxt, n_edges
     raise RuntimeError(
         f"kcore did not reach a fixpoint in {max_iters} rounds"
     )
@@ -740,7 +713,7 @@ def personalized_pagerank(
     ``pagerank`` ("what's near THESE nodes", not "what's central").
 
     ``sources`` ride the plan as literals (the IVF-centroid pattern);
-    per-round cost and co-partitioning match ``pagerank`` exactly.
+    rounds run the same body as ``pagerank``.
     Nodes unreachable from the sources legitimately converge to 0."""
     if not sources:
         raise ValueError("personalized_pagerank needs a non-empty source set")
@@ -748,82 +721,24 @@ def personalized_pagerank(
     # implicitly, so [5, 5] would otherwise give node 5 mass 1/2 and
     # silently lose the rest
     srcs = sorted({int(x) for x in sources})
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    if not edges_distinct:
-        e = e.distinct()
-    # single-eval edge materialization — same rationale as ``pagerank``
-    e = _materialize_truncated(e.repartition("src"))
-    if symmetric:
-        nodes = e.select(F.col("src").alias("node")).distinct().persist()
-    else:
-        nodes = (
-            e.select(F.col("src").alias("node"))
-            .unionByName(e.select(F.col("dst").alias("node")))
-            .distinct()
-            .persist()
-        )
-    # a source absent from the graph would likewise leak teleport mass
-    # (all-zero ranks with no signal) — fail loudly instead; one small
-    # count over the already-persisted node set
-    n_found = nodes.where(F.col("node").isin(srcs)).count()
-    if n_found != len(srcs):
-        nodes.unpersist()  # error path: don't leak the invariant caches
-        e.unpersist()
-        raise ValueError(
-            f"{len(srcs) - n_found} source id(s) absent from the edge list"
-        )
-    # fold the loop-invariant out-degree into the edge frame once —
-    # same round shape as ``pagerank``
-    outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    e_deg = e.join(outdeg, "src").persist()
-    def teleport_of(col):
-        return F.when(
-            col.isin(srcs), F.lit(1.0 / len(srcs))
-        ).otherwise(F.lit(0.0))
 
-    teleport = teleport_of(F.col("node"))
-    ranks = nodes.select("node", teleport.alias("rank"))
-    prev_ckpt: DataFrame | None = None
-    for i in range(iters):
-        contrib = (
-            e_deg.join(ranks.withColumnRenamed("node", "src"), "src")
-            .groupBy("dst")
-            .agg(F.sum(F.col("rank") / F.col("deg")).alias("__c"))
-        )
-        if symmetric:
-            # symmetric ⇒ contrib covers every node; see ``pagerank``
-            ranks = contrib.select(
-                F.col("dst").alias("node"),
-                (
-                    (1.0 - damping) * teleport_of(F.col("dst"))
-                    + damping * F.col("__c")
-                ).alias("rank"),
+    def source_set(nodes: DataFrame):
+        # a source absent from the graph would likewise leak teleport
+        # mass (all-zero ranks with no signal) — fail loudly instead;
+        # one small count over the already-persisted node set
+        n_found = nodes.where(F.col("node").isin(srcs)).count()
+        if n_found != len(srcs):
+            raise ValueError(
+                f"{len(srcs) - n_found} source id(s) absent from the edge list"
             )
-        else:
-            ranks = nodes.join(
-                contrib.withColumnRenamed("dst", "node"), "node", "left"
-            ).select(
-                "node",
-                (
-                    (1.0 - damping) * teleport
-                    + damping * F.coalesce(F.col("__c"), F.lit(0.0))
-                ).alias("rank"),
-            )
-        # periodic truncated checkpoint — see ``pagerank``
-        if (i + 1) % 4 == 0 and i + 1 < iters:
-            ranks = _materialize_truncated(ranks)
-            if prev_ckpt is not None:
-                prev_ckpt.unpersist()
-            prev_ckpt = ranks
-    # same cache contract as ``pagerank``: returned frame materialized
-    # with truncated lineage, all internal caches dropped
-    ranks = _materialize_truncated(ranks)
-    if prev_ckpt is not None:
-        prev_ckpt.unpersist()
-    nodes.unpersist()
-    e_deg.unpersist()
-    e.unpersist()
-    return ranks
+        share = F.when(
+            F.col("node").isin(srcs), F.lit(1.0 / len(srcs))
+        ).otherwise(F.lit(0.0))
+        return share, (1.0 - damping) * share
+
+    return _power_iteration(
+        edges, iters, damping, src, dst, edges_distinct, symmetric, source_set
+    )
 
 
 def degree_stats(

@@ -106,10 +106,6 @@ def get_session(
         # keep stage-progress bars off stdout/stderr: the bench contract
         # is ONE parseable JSON line on stdout (builder-time-only conf)
         .config("spark.ui.showConsoleProgress", "false")
-        # iterative ops truncate lineage via reliable checkpoints
-        # (graph._materialize_truncated); let the context GC the
-        # checkpoint files once the frames are unreachable
-        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
     )
     for k, v in _SESSION_CONFS.items():
         builder = builder.config(k, v)

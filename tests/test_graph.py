@@ -2,10 +2,12 @@
 
 from __future__ import annotations
 
+import threading
+
 import pytest
 from pyspark.sql import Row
 
-from airflow_spark.operators import graph
+from airflow_spark.operators import dedup, graph
 
 
 def _edges(spark, pairs):
@@ -62,6 +64,21 @@ def test_connected_components_raises_when_not_converged(spark):
 
 def test_connected_components_empty_edges(spark):
     assert graph.connected_components(_edges(spark, [])).count() == 0
+
+
+def test_pagerank_empty_edges(spark):
+    # no nodes: an empty (node, rank) frame, not a 1/0 on the uniform
+    # start, and no internal cache left behind
+    before = _persisted_ids(spark)
+    out = graph.pagerank(_edges(spark, []))
+    assert out.schema.simpleString() == "struct<node:bigint,rank:double>"
+    assert out.count() == 0
+    out.unpersist()
+    assert _persisted_ids(spark) - before == set()
+    # no node can be a source: still a ValueError, still no cache left
+    with pytest.raises(ValueError, match="absent"):
+        graph.personalized_pagerank(_edges(spark, []), sources=[0])
+    assert _persisted_ids(spark) - before == set()
 
 
 def test_triangle_count_known_graphs(spark):
@@ -341,6 +358,7 @@ def _persisted_ids(spark):
         "bfs_distances",
         "sssp_bounded",
         "kcore",
+        "dedup_clusters",
     ],
 )
 def test_iterative_ops_leave_only_the_returned_cache(spark, opname):
@@ -356,6 +374,9 @@ def test_iterative_ops_leave_only_the_returned_cache(spark, opname):
         "bfs_distances": lambda: graph.bfs_distances(e, source=0),
         "sssp_bounded": lambda: graph.sssp_bounded(ew, source=0, rounds=3),
         "kcore": lambda: graph.kcore(e, k=2),
+        "dedup_clusters": lambda: dedup.dedup_clusters(
+            e.select(e.src.alias("id_a"), e.dst.alias("id_b"))
+        ),
     }
     before = _persisted_ids(spark)
     out = calls[opname]()
@@ -386,3 +407,51 @@ def test_iterative_ops_error_paths_leave_no_cache(spark):
     # the missing-source guard fires after `nodes` is persisted; the
     # raise path must still drop it
     assert _persisted_ids(spark) - before == set()
+
+
+@pytest.mark.parametrize(
+    "opname", ["pagerank", "connected_components", "kcore", "dedup_clusters"]
+)
+def test_cancelled_iterative_ops_leave_no_cache(spark, opname):
+    # a task timeout cancels the op's job group mid-loop (the pipeline
+    # watchdog): the op must raise and leave the ledger at baseline.
+    # A 400-node path keeps every op looping well past its third job.
+    chain = _edges(spark, [(i, i + 1) for i in range(400)])
+    calls = {
+        "pagerank": lambda: graph.pagerank(chain, iters=200),
+        "connected_components": lambda: graph.connected_components(
+            chain, max_iters=400
+        ),
+        "kcore": lambda: graph.kcore(chain, k=2, max_iters=400),
+        "dedup_clusters": lambda: dedup.dedup_clusters(
+            chain.select(chain.src.alias("id_a"), chain.dst.alias("id_b")),
+            max_iters=400,
+        ),
+    }
+    sc = spark.sparkContext
+    group = f"cancel-{opname}"
+    raised: list[Exception] = []
+
+    def run():
+        sc.setJobGroup(group, opname, interruptOnCancel=True)
+        try:
+            calls[opname]()
+        except Exception as e:
+            raised.append(e)
+
+    before = _persisted_ids(spark)
+    worker = threading.Thread(target=run, daemon=True)
+    worker.start()
+    tracker = sc.statusTracker()
+    while worker.is_alive() and len(tracker.getJobIdsForGroup(group)) < 3:
+        worker.join(0.01)
+    assert worker.is_alive(), f"{opname} finished before its third job"
+    # cancel repeatedly, as the watchdog does: a job submitted after
+    # one cancel would survive it
+    while worker.is_alive():
+        sc.cancelJobGroup(group)
+        worker.join(0.2)
+    assert raised and "cancel" in str(raised[0]).lower(), raised
+    assert _persisted_ids(spark) - before == set(), (
+        f"{opname}: cancellation left persisted RDDs behind"
+    )
