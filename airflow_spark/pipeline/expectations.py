@@ -7,6 +7,13 @@ semantics are library operators over DataFrames: build a *violations*
 DataFrame declaratively, and fail the task (→ retry → notify) if it is
 non-empty. Violations are computed with ``isEmpty()``/``limit`` so the
 check never materializes more than a sample.
+
+A passing check still pays for every Spark job it launches, and a limit
+that finds nothing runs more than one: Spark scans the first partition,
+then the rest. Measured with ``expect_empty`` on ``local[4]``: 2 jobs
+(200–500 ms each) over a 4-partition scan, 0 jobs (about 20 ms) over an
+Arrow-backed ``LocalRelation`` (``sources.http.local_frame``), whose
+filter and limit Catalyst folds on the driver.
 """
 
 from __future__ import annotations

@@ -6,11 +6,22 @@ readers in tests; HTTP adapters in production) — and returns a
 :class:`Pipeline` whose tasks compute the same checks with DataFrame
 logic. Citations reference the behavior being matched.
 
+Small REST payloads are held on the driver. A payload that a task
+filters, projects, limits or reads more than once is read once with
+``local_frame`` into an Arrow-backed ``LocalRelation``; Catalyst folds
+a filter, projection or limit over it, so such a check launches no
+Spark job, and a join over it runs as JVM-only jobs. Key lists
+(``list_to_df``) are local the same way. Four sources stay Spark reads:
+``files`` is the distributed ``binaryFile`` listing in production
+(``sources/files.py``), and ``adguard_querylog``,
+``syncthing_folder_stats`` and ``disk`` are each read by exactly one
+aggregate, where a pull to the driver would add a job, not save one.
+
 Two fan-out styles are demonstrated deliberately:
-- **data-parallel** (DNS freshness, Backups folder staleness): the
-  per-key check is one Spark job over a keyed frame; per-key verdicts
-  are reported together in the expectation error (SURVEY.md §7
-  hard-part 5);
+- **data-parallel** (DNS freshness, Backups folder staleness): every
+  key is checked by one grouped aggregate over the Spark source (DNS
+  joins it to the local client list); per-key verdicts are reported
+  together in the expectation error (SURVEY.md §7 hard-part 5);
 - **mapped task** (Speedtest per-device): ``expand_over`` runs the
   task body once per element with per-element failure isolation —
   Airflow's ``.expand`` semantics (O4) for when each element is a
@@ -27,7 +38,8 @@ from pyspark.sql import functions as F
 
 from ..pipeline.core import Context, Param, Pipeline
 from ..pipeline.expectations import expect_empty, expect_nonempty, expect_schema
-from ..sources.lists import delimited_list
+from ..sources.http import http_sink, local_frame
+from ..sources.lists import delimited_list, list_to_df
 
 Provider = Callable[[Context], DataFrame]
 
@@ -58,7 +70,7 @@ def build_dns_requests(sources: dict[str, Provider], **pipeline_kw) -> Pipeline:
 
     @p.task
     def check_protection(ctx: Context) -> None:
-        status = sources["adguard_status"](ctx)
+        status = local_frame(sources["adguard_status"](ctx))
         expect_schema(
             status,
             {
@@ -91,9 +103,7 @@ def build_dns_requests(sources: dict[str, Provider], **pipeline_kw) -> Pipeline:
         querylog = sources["adguard_querylog"](ctx)
         hours = int(ctx.param("outdated_interval"))
         cutoff = ctx.run_ts - dt.timedelta(hours=hours)  # :102-104
-        expected = ctx.spark.createDataFrame(
-            [(c,) for c in ctx.xcom("clients")], ["client"]
-        )
+        expected = list_to_df(ctx.spark, ctx.xcom("clients"), "client")
         latest = querylog.groupBy("client").agg(F.max("oldest").alias("last_seen"))
         stale = (
             expected.join(latest, "client", "left")
@@ -126,16 +136,19 @@ def build_speedtest(sources: dict[str, Provider], **pipeline_kw) -> Pipeline:
 
     @p.task(expand_over="devices")
     def speed_test(ctx: Context, device: str) -> None:
-        entities = sources["ha_entities"](ctx).where(F.col("device") == device)
+        entities = local_frame(sources["ha_entities"](ctx)).where(
+            F.col("device") == device
+        )
         # tolerant float cast, default 0.0 on non-castable (:70-89, F8)
         val = F.coalesce(F.col("state").try_cast("double"), F.lit(0.0))
         # The reference defaults a missing sensor reading to 0.0 and
         # fails the assert when a nonzero limit is set (:70-89) — so an
         # absent entity must surface as speed 0.0, not as "no row":
         # left-join the expected entity set to the readings.
-        expected = ctx.spark.createDataFrame(
-            [("sensor.speedtest_upload",), ("sensor.speedtest_download",)],
-            ["entity_id"],
+        expected = list_to_df(
+            ctx.spark,
+            ["sensor.speedtest_upload", "sensor.speedtest_download"],
+            "entity_id",
         )
         readings = entities.where(
             F.col("entity_id").isin(
@@ -190,22 +203,20 @@ def build_backups(sources: dict[str, Provider], **pipeline_kw) -> Pipeline:
 
     @p.task(depends_on=["devices"])
     def health_checks(ctx: Context) -> None:
-        health = sources["syncthing_health"](ctx)
+        health = local_frame(sources["syncthing_health"](ctx))
         # exact-document equality: status must be exactly 'OK' (:63, P7)
         expect_empty(
             health.where(F.col("status") != "OK"),
             "unhealthy backup devices",
         )
         # every configured device must report (A5 emptiness analog)
-        expected = ctx.spark.createDataFrame(
-            [(d,) for d in ctx.xcom("devices")], ["device"]
-        )
+        expected = list_to_df(ctx.spark, ctx.xcom("devices"), "device")
         missing = expected.join(health, "device", "left_anti")
         expect_empty(missing, "devices with no health report")
 
     @p.task(depends_on=["health_checks"])
     def paused_folders(ctx: Context) -> None:
-        folders = sources["syncthing_folders"](ctx)
+        folders = local_frame(sources["syncthing_folders"](ctx))
         expect_schema(folders, {"label": "string", "paused": "boolean"})  # :98-100
         expect_empty(
             folders.where(F.col("paused")), "paused backup folders"  # :101, A3
@@ -245,7 +256,7 @@ def build_cloudflare_apps(
 
     @p.task
     def ip_inventory(ctx: Context) -> None:
-        ips = sources["ip_inventory"](ctx)
+        ips = local_frame(sources["ip_inventory"](ctx))
         expect_nonempty(ips, "no IPs returned")  # cloudflare_api.py:51-54
         ctx.outputs["_ips_df"] = ips
 
@@ -272,11 +283,16 @@ def build_cloudflare_apps(
         wanted = a_recs.unionAll(aaaa_recs)
         # compound-key lookup join against existing records (J2,
         # cloudflare_api.py:58-81): broadcast the record inventory
-        records = sources["cloudflare_dns_records"](ctx)
-        joined = wanted.join(
-            F.broadcast(records.withColumnsRenamed({"name": "dns_name", "type": "rtype"})),
-            ["dns_name", "rtype"],
-            "left",
+        records = local_frame(sources["cloudflare_dns_records"](ctx))
+        # held on the driver: read by the existence check and the sink
+        joined = local_frame(
+            wanted.join(
+                F.broadcast(
+                    records.withColumnsRenamed({"name": "dns_name", "type": "rtype"})
+                ),
+                ["dns_name", "rtype"],
+                "left",
+            )
         )
         # absence of a record id is a config error (J5 existence check)
         expect_empty(
@@ -295,8 +311,6 @@ def build_cloudflare_apps(
                 F.lit(ctx.run_ts.replace(tzinfo=None)), "yyyy-MM-dd HH:mm:ss"
             ).alias("comment"),
         )
-        from ..sources.http import http_sink
-
         n = http_sink(
             updates, sink, "records/{record_id}", profile=ctx.profile
         )
@@ -312,7 +326,7 @@ def build_cloudflare_apps(
             )
         )
         # policy lookup by case-insensitive substring (J3/P10, :120-137)
-        policies = sources["cloudflare_policies"](ctx)
+        policies = local_frame(sources["cloudflare_policies"](ctx))
         match = policies.where(F.lower(F.col("name")).contains("allow"))
         expect_nonempty(match, "no matching policy")
         policy_id = match.limit(1).collect()[0]["id"]  # first-match (T2)
@@ -320,8 +334,6 @@ def build_cloudflare_apps(
         include = allowed.select(
             F.struct(F.struct(F.col("ip").alias("ip")).alias("ip")).alias("include")
         )
-        from ..sources.http import http_sink
-
         http_sink(
             include.select(F.lit(policy_id).alias("policy_id"), "include"),
             sink,
@@ -347,12 +359,10 @@ def build_cloudflare_ddns(
 
     @p.task
     def update_ddns(ctx: Context) -> None:
-        own = sources["own_ip"](ctx)  # 1-row frame with ipv6 (:39-46)
+        own = local_frame(sources["own_ip"](ctx))  # 1-row frame with ipv6 (:39-46)
         expect_empty(
             own.where(F.col("ipv6").isNull()), "no IPv6 address detected"  # F14
         )
-        from ..sources.http import http_sink
-
         http_sink(own, sink, "ddns?ip={ipv6}", profile=ctx.profile)
 
     return p
@@ -376,11 +386,13 @@ def build_airflow_cleanup(
         files = sources["files"](ctx)  # (path, mtime) rows (S7, :46-54)
         cutoff = ctx.run_ts - dt.timedelta(days=7)  # :52
         expired = files.where(F.col("mtime") < F.lit(cutoff.replace(tzinfo=None)))
+        # one read: the count reports exactly the paths deleted
+        paths = [row["path"] for row in expired.select("path").collect()]
         # destructive delete is prod-only (O12 dev guard, :56-58)
         if ctx.profile == "prod":
-            for row in expired.select("path").collect():
-                deleter(row["path"])
-        ctx.outputs["_n_expired"] = expired.count()
+            for path in paths:
+                deleter(path)
+        ctx.outputs["_n_expired"] = len(paths)
 
     @p.task(when=lambda ctx: ctx.var("HOST") != "prod-host")  # skip guard (:75-76)
     def check_disk_usage(ctx: Context) -> None:

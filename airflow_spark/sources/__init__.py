@@ -8,6 +8,7 @@ from .http import (  # noqa: F401
     fetch_per_key,
     http_json_source,
     http_sink,
+    local_frame,
 )
 from .http_client import RequestsFetcher, RequestsPoster  # noqa: F401
 from .lists import delimited_list, list_to_df  # noqa: F401

@@ -24,6 +24,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 
+#: Row cap of every driver-side read: a payload held on the driver
+#: (``local_frame``) and a sink's collected result (``http_sink``).
+MAX_ROWS = 10_000
+
+
 class HttpError(RuntimeError):
     """Non-2xx response or transport failure (retryable by the task
     retry loop, O5)."""
@@ -97,6 +102,26 @@ def fetch_per_key(
     return keys.mapInPandas(_fetch, out_schema)
 
 
+def local_frame(df: DataFrame) -> DataFrame:
+    """Read a small source frame once and hold it on the driver as an
+    Arrow-backed ``LocalRelation``.
+
+    The read is at most one Spark job. Catalyst folds a filter, projection or
+    limit over the result into a new ``LocalRelation``, so checks over it
+    launch no job; a join or union over it runs as JVM-only jobs with no
+    Python-fed RDD under them. Spark keeps the relation on the driver up
+    to ``spark.sql.execution.arrow.localRelationThreshold`` bytes and
+    ships it as an RDD above that. Raises ``ValueError`` above
+    ``MAX_ROWS`` rows: bulk data stays a distributed read.
+    """
+    table = df.limit(MAX_ROWS + 1).toArrow()
+    if table.num_rows > MAX_ROWS:
+        raise ValueError(f"local_frame source exceeds MAX_ROWS={MAX_ROWS}")
+    # the source schema, not the Arrow one: Spark reads a tz-less Arrow
+    # timestamp back as TIMESTAMP, not TIMESTAMP_NTZ
+    return df.sparkSession.createDataFrame(table, schema=df.schema)
+
+
 # ---------------------------------------------------------------------------
 # Sinks
 # ---------------------------------------------------------------------------
@@ -119,7 +144,7 @@ def http_sink(
     url_template: str,
     profile: str = "dev",
     allow_profiles: tuple[str, ...] = ("prod",),
-    max_rows: int = 10_000,
+    max_rows: int = MAX_ROWS,
 ) -> int:
     """Push each row as a JSON document (K1 idempotent-upsert posture).
 

@@ -6,6 +6,7 @@ Reference analog: ``Variable.get("DNS_CLIENTS").split("|")``
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -17,6 +18,7 @@ def delimited_list(value: str | None, sep: str = "|") -> list[str]:
 
 
 def list_to_df(spark: SparkSession, values: list[str], col: str) -> DataFrame:
-    """Key list → 1-column DataFrame (the fan-out frame for
-    data-parallel mapped work)."""
-    return spark.createDataFrame([(v,) for v in values], [col])
+    """Key list → 1-column string DataFrame (the fan-out frame for
+    data-parallel mapped work). Built from an Arrow table, so it is a
+    driver-resident ``LocalRelation``, not a Python-fed RDD."""
+    return spark.createDataFrame(pa.table({col: pa.array(values, pa.string())}))

@@ -37,6 +37,21 @@ def spark():
     yield s
 
 
+@pytest.fixture
+def untagged_jobs(spark):
+    """``count(fn) -> (fn(), n)``: ``n`` is the number of Spark jobs with
+    no job group that started while ``fn`` ran. Counted as new job ids,
+    so the UI's cap on retained jobs cannot hide them."""
+    tracker = spark.sparkContext.statusTracker()
+
+    def count(fn):
+        before = set(tracker.getJobIdsForGroup(None))
+        result = fn()
+        return result, len(set(tracker.getJobIdsForGroup(None)) - before)
+
+    return count
+
+
 @pytest.fixture(scope="session")
 def sf_smoke() -> str:
     return SF_SMOKE

@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
+
 from airflow_spark.pipeline import CollectingNotifier
 from airflow_spark.pipelines import (
     build_airflow_cleanup,
@@ -300,6 +302,76 @@ def test_cleanup_disk_threshold_and_host_skip(spark):
     # on the guarded host the check is pruned entirely (P11, :75-76)
     run2 = p.test(spark, run_ts=RUN_TS, variables={"HOST": "prod-host"})
     assert run2.tasks["check_disk_usage"].status == "skipped" and run2.ok
+
+
+def test_cleanup_job_count_reads_expired_once(spark, untagged_jobs):
+    # the disk check is skipped on prod-host, so the run is cleanup_data
+    for profile in ("dev", "prod"):
+        deleted = []
+        p = build_airflow_cleanup(
+            {"files": fx.files_listing(spark), "disk": fx.disk_usage(spark)},
+            deleter=deleted.append,
+        )
+        run, n = untagged_jobs(lambda: p.test(
+            spark, run_ts=RUN_TS, profile=profile, variables={"HOST": "prod-host"}
+        ))
+        assert run.ok and n == 1, (profile, n)
+        assert run.outputs["_n_expired"] == 2
+        assert len(deleted) == (run.outputs["_n_expired"] if profile == "prod" else 0)
+
+
+# ---------------------------------------------------------------------------
+# Job-count contract
+# ---------------------------------------------------------------------------
+
+#: Most untagged Spark jobs one pass-case run of each DAG may launch on
+#: its fixtures, with every small payload held on the driver
+#: (``local_frame``). A rise means a check scans a Spark source again.
+JOB_BUDGETS = {
+    "DNS-Requests": 5,
+    "Speedtest": 6,
+    "Backups": 6,
+    "Cloudflare-Apps": 6,
+    "Cloudflare-DDNS": 1,
+    "Airflow-Cleanup": 3,
+}
+
+
+def _pass_case(spark, name):
+    """(pipeline, ``Pipeline.test`` kwargs) of one DAG's pass case."""
+    if name == "DNS-Requests":
+        return build_dns_requests(_dns_sources(spark)), {
+            "variables": {"DNS_CLIENTS": "c1|c2"}}
+    if name == "Speedtest":
+        src = {"ha_entities": fx.ha_entities(spark, {"dev1": ("50.5", "200.0"),
+                                                     "dev2": ("80.0", "90.0")})}
+        return build_speedtest(src), {"variables": {
+            "SPEEDTEST_DEVICES": "dev1|dev2",
+            "SPEEDTEST_dev1_UPLOAD": "10.0",
+            "SPEEDTEST_dev2_DOWNLOAD": "50.0",
+        }}
+    if name == "Backups":
+        return build_backups(_backup_sources(spark)), {
+            "variables": {"BACKUP_DEVICES": "nas|offsite"}}
+    if name == "Cloudflare-Apps":
+        return build_cloudflare_apps(_cf_sources(spark), CollectingSink()), {
+            "profile": "prod"}
+    if name == "Cloudflare-DDNS":
+        return build_cloudflare_ddns({"own_ip": fx.own_ip(spark)}, CollectingSink()), {
+            "profile": "prod"}
+    return build_airflow_cleanup(
+        {"files": fx.files_listing(spark), "disk": fx.disk_usage(spark)},
+        deleter=lambda _: None,
+    ), {"profile": "prod", "variables": {"HOST": "x"}}
+
+
+@pytest.mark.parametrize("name", list(JOB_BUDGETS))
+def test_reference_dag_job_count(spark, untagged_jobs, name):
+    p, kw = _pass_case(spark, name)
+    assert p.name == name
+    run, n = untagged_jobs(lambda: p.test(spark, run_ts=RUN_TS, **kw))
+    assert run.ok, {k: (v.status, v.error) for k, v in run.tasks.items()}
+    assert 0 < n <= JOB_BUDGETS[name]
 
 
 # ---------------------------------------------------------------------------

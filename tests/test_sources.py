@@ -3,7 +3,10 @@ per-key fetch, sink guards) and the health endpoint (O14)."""
 
 from __future__ import annotations
 
+import datetime as dt
+
 import pytest
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from airflow_spark.pipeline import Pipeline, RunStateStore, Scheduler
@@ -15,8 +18,9 @@ from airflow_spark.sources import (
     http_json_source,
     http_sink,
     list_to_df,
+    local_frame,
 )
-from airflow_spark.sources.http import map_payload_source
+from airflow_spark.sources.http import MAX_ROWS, map_payload_source
 
 DICT_SCHEMA = T.StructType(
     [
@@ -102,6 +106,78 @@ def test_http_sink_profile_guard_and_cap(spark):
     big = spark.range(20).withColumnRenamed("id", "record_id")
     with pytest.raises(ValueError, match="max_rows"):
         http_sink(big, sink, "rec/{record_id}", profile="prod", max_rows=10)
+
+
+def _plan_root(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().nodeName()
+
+
+@pytest.mark.parametrize("tz", ["UTC", "America/New_York"])
+def test_local_frame_round_trip(spark, monkeypatch, tz):
+    import time
+
+    gap = dt.datetime(2026, 3, 8, 2, 30, 0, 123456)  # in a New York DST gap
+    rows = [
+        ("a", 1, 1.5, True, gap, gap),
+        (None, None, None, None, None, None),
+        ("tâche_é✓", -(2**63), -0.0, False,
+         dt.datetime(2025, 11, 2, 1, 30), dt.datetime(1969, 12, 31, 23, 59, 59)),
+    ]
+    schema = "s string, n bigint, x double, b boolean, t timestamp, ntz timestamp_ntz"
+    monkeypatch.setenv("TZ", tz)
+    time.tzset()
+    try:
+        src = spark.createDataFrame(rows, schema)
+        local = local_frame(src)
+
+        def read(df):
+            return df.select("*", F.unix_micros("t")).orderBy("n").collect()
+
+        assert local.dtypes == src.dtypes
+        assert read(local) == read(src)
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+
+
+def test_local_frame_empty_keeps_schema(spark):
+    src = spark.createDataFrame([], "s string, n bigint, t timestamp")
+    local = local_frame(src)
+    assert local.schema == src.schema
+    assert local.collect() == []
+
+
+def test_local_frame_checks_launch_no_job(spark, untagged_jobs):
+    src = spark.createDataFrame([(i, f"k{i}") for i in range(8)], "n bigint, k string")
+    # control: a passing empty check over a multi-partition scan
+    _, n_scan = untagged_jobs(lambda: src.where(F.col("n") < 0).limit(5).collect())
+    assert n_scan >= 2
+    local, n_pull = untagged_jobs(lambda: local_frame(src))
+    assert n_pull <= 1
+    assert _plan_root(local) == "LocalRelation"
+    checks = [
+        lambda: local.where(F.col("n") < 0).limit(5).collect(),
+        lambda: local.where(F.col("n") > 5).select("k").limit(1).collect(),
+        lambda: local.collect(),
+        lambda: local.isEmpty(),
+    ]
+    results = [untagged_jobs(c) for c in checks]
+    assert [n for _, n in results] == [0, 0, 0, 0]
+    assert [r for r, _ in results] == [[], [("k6",)], src.collect(), False]
+
+
+def test_local_frame_rejects_above_max_rows(spark):
+    with pytest.raises(ValueError, match=f"MAX_ROWS={MAX_ROWS}"):
+        local_frame(spark.range(MAX_ROWS + 1))
+    assert local_frame(spark.range(MAX_ROWS)).count() == MAX_ROWS
+
+
+def test_list_to_df_is_a_local_frame(spark, untagged_jobs):
+    keys, n = untagged_jobs(lambda: list_to_df(spark, ["c1", "c2"], "client"))
+    assert n == 0
+    assert _plan_root(keys) == "LocalRelation"
+    assert keys.dtypes == [("client", "string")]
+    assert list_to_df(spark, [], "client").dtypes == [("client", "string")]
 
 
 def test_delimited_list_edge_cases():
