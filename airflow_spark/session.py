@@ -72,6 +72,22 @@ def normalize_session(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def default_driver_mem() -> None:
+    """Size the local JVM from the host when no size is set: set
+    ``SPARK_GRAFT_DRIVER_MEM`` to half of physical memory, capped at
+    :func:`get_session`'s 32g default. A 32g heap on a 16 GB host grows
+    until the kernel OOM-kills it part way through a long run. Call it
+    before the first :func:`get_session`; a set value is kept."""
+    if "SPARK_GRAFT_DRIVER_MEM" in os.environ:
+        return
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return  # not Linux: keep the session default
+    os.environ["SPARK_GRAFT_DRIVER_MEM"] = f"{min(kb // 2048, 32 * 1024)}m"
+
+
 def get_session(
     app_name: str = "airflow_spark",
     cpus: int | None = None,

@@ -16,7 +16,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from airflow_spark.oracle import compare  # noqa: E402
-from airflow_spark.session import get_session  # noqa: E402
+from airflow_spark.session import default_driver_mem, get_session  # noqa: E402
 
 
 def main() -> int:
@@ -31,6 +31,7 @@ def main() -> int:
     import __spark_entry__ as e
     from airflow_spark.operators.registry import oracle_memo_plans
 
+    default_driver_mem()
     spark = get_session(app_name="check-correctness")
     spark.sparkContext.setLogLevel("ERROR")
     qs, sqls = e.queries(), e.oracle_sql()

@@ -62,6 +62,7 @@ python3 -m pytest tests/test_pipeline.py -q -k "jwt or jwks or auth or role"
 python3 -m pytest -q -p no:cacheprovider perfbench/tests
 python3 -m pytest tests/test_sources.py -q -k local_frame
 python3 -m pytest tests/test_reference_pipelines.py -q -k job_count
+python3 -m pytest tests/test_graph.py -q -k job_count
 python3 -c "import __spark_entry__, bench, airflow_spark"
 
 echo "ci_local: lint + smoke green (full-tests job: python -m pytest tests/ -q)"

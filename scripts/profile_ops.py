@@ -20,7 +20,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from airflow_spark.session import get_session  # noqa: E402
+from airflow_spark.session import default_driver_mem, get_session  # noqa: E402
 
 
 def main() -> None:
@@ -36,6 +36,7 @@ def main() -> None:
     cpus = args.cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0) or (
         os.cpu_count() or 8
     )
+    default_driver_mem()
     spark = get_session(app_name="profile_ops", cpus=cpus, shuffle_partitions=cpus)
     spark.sparkContext.setLogLevel("ERROR")
 

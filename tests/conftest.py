@@ -7,25 +7,10 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from airflow_spark.session import get_session  # noqa: E402
+from airflow_spark.session import default_driver_mem, get_session  # noqa: E402
 
-
-def _default_driver_mem() -> None:
-    """Size the suite's one JVM from the host when no size is set: half
-    of physical memory, capped at the session's 32g default. A 32g heap
-    on a 16 GB host grows until the kernel OOM-kills it part way through
-    the suite."""
-    if "SPARK_GRAFT_DRIVER_MEM" in os.environ:
-        return
-    try:
-        with open("/proc/meminfo") as f:
-            kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
-    except (OSError, StopIteration, ValueError):
-        return  # not Linux: keep the session default
-    os.environ["SPARK_GRAFT_DRIVER_MEM"] = f"{min(kb // 2048, 32 * 1024)}m"
-
-
-_default_driver_mem()
+# the suite's one JVM is sized from the host unless a size is set
+default_driver_mem()
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECT = "/root/testdata/sf0.01"

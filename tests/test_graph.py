@@ -235,6 +235,47 @@ def test_kcore_ignores_self_loops_and_duplicates(spark):
     assert kcore(edges, k=2).count() == 0
 
 
+def _plan_joins(df) -> int:
+    """Join nodes of ``df``'s analyzed plan: the lineage Catalyst analyzes
+    again on every later action (the optimized plan swaps a persisted
+    frame for its cache and shows no joins either way). A subtree shared
+    by several parents is counted once."""
+    ident = df.sparkSession.sparkContext._jvm.System.identityHashCode
+    seen, stack, joins = set(), [df._jdf.queryExecution().analyzed()], 0
+    while stack:
+        node = stack.pop()
+        key = ident(node)
+        if key in seen:
+            continue
+        seen.add(key)
+        joins += node.nodeName() == "Join"
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return joins
+
+
+def test_kcore_truncates_peel_lineage(spark):
+    # a pendant chain of m nodes off a K4 takes m peel rounds at k=2.
+    # Every 4th peel round truncates the edge set, so the returned
+    # frame's plan holds only the rounds since the last truncation: 5
+    # and 13 rounds both end one round past one, and 12 ends on one.
+    k4 = [(a, b) for a in range(4) for b in range(a + 1, 4)]
+
+    def run(m):
+        chain = [(0, 10)] + [(10 + j, 11 + j) for j in range(m - 1)]
+        before = _persisted_ids(spark)
+        out = graph.kcore(_edges(spark, k4 + chain), k=2)
+        got = {r.node: r.deg for r in out.collect()}
+        joins = _plan_joins(out)
+        out.unpersist()
+        assert _persisted_ids(spark) - before == set()
+        return got, joins
+
+    (got5, j5), (got12, j12), (got13, j13) = run(5), run(12), run(13)
+    assert got5 == got12 == got13 == {0: 3, 1: 3, 2: 3, 3: 3}
+    assert j5 == j13 > j12
+
+
 def test_personalized_pagerank_concentrates_near_sources(spark):
     from airflow_spark.operators.graph import personalized_pagerank
 
@@ -455,3 +496,45 @@ def test_cancelled_iterative_ops_leave_no_cache(spark, opname):
     assert _persisted_ids(spark) - before == set(), (
         f"{opname}: cancellation left persisted RDDs behind"
     )
+
+
+# ---------------------------------------------------------------------------
+# Job-count contract: the Spark jobs an iterative op launches on a small
+# fixture graph, pinned at the current plan. Setup and convergence work
+# rides on a materialization the loop already performs; a change that
+# adds a job per loop fails here, one that removes jobs lowers the pin.
+# ---------------------------------------------------------------------------
+
+
+@pytest.mark.parametrize(
+    "case, jobs",
+    [
+        ("pagerank_symmetric", 12),
+        ("pagerank_directed", 18),
+        ("personalized_pagerank", 18),
+        ("connected_components_chain", 31),
+        ("kcore_no_peel", 6),
+        ("kcore_one_peel", 13),
+    ],
+)
+def test_iterative_op_job_count(spark, untagged_jobs, case, jobs):
+    k4 = [(a, b) for a in range(4) for b in range(a + 1, 4)]
+    sym = _edges(spark, [(0, 1), (1, 0), (0, 2), (2, 0), (0, 3), (3, 0), (1, 2), (2, 1)])
+    directed = _edges(spark, [(0, 1), (1, 2), (2, 0), (2, 3), (3, 1)])
+    chain = _edges(spark, [(i, i + 1) for i in range(5)])
+    no_peel, one_peel = _edges(spark, k4), _edges(spark, k4 + [(0, 10)])
+    calls = {
+        "pagerank_symmetric": lambda: graph.pagerank(
+            sym, iters=3, edges_distinct=True, symmetric=True
+        ),
+        "pagerank_directed": lambda: graph.pagerank(directed, iters=3),
+        "personalized_pagerank": lambda: graph.personalized_pagerank(
+            directed, sources=[0], iters=3
+        ),
+        "connected_components_chain": lambda: graph.connected_components(chain),
+        "kcore_no_peel": lambda: graph.kcore(no_peel, k=2),
+        "kcore_one_peel": lambda: graph.kcore(one_peel, k=2),
+    }
+    out, n = untagged_jobs(calls[case])
+    out.unpersist()
+    assert n == jobs, f"{case}: {n} jobs, pinned at {jobs}"
