@@ -749,146 +749,18 @@ def _write_sig_version(store_path: str) -> None:
 # ---------------------------------------------------------------------------
 
 
-def dedup_clusters(
-    pairs: DataFrame,
-    max_iters: int = 20,
-    pairs_distinct: bool = False,
-) -> DataFrame:
+def dedup_clusters(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
     """Connected components over a near-dup pair graph (id_a, id_b) →
     (id, cluster) with cluster = min id of the component (the survivor
-    under the min-id keep rule).
+    under the min-id keep rule): :func:`graph.connected_components`
+    with its columns renamed, so chains converge in O(log diameter)
+    rounds and a non-converged run raises. The returned frame owns the
+    final round's cache: ``unpersist()`` releases it."""
+    from .graph import _TruncatedFrame, connected_components
 
-    Iterative min-label propagation with POINTER JUMPING (each round:
-    label ← min over neighbors' labels, then label ← label(label)),
-    so chains converge in O(log diameter) rounds, not O(diameter).
-    Every round's frame is materialized through the graph family's
-    lineage-truncating checkpoint (``graph._CacheOwner.truncate``):
-    the pair frame usually arrives with a huge upstream plan (the
-    whole LSH pipeline), and a union-of-joins loop over an untruncated
-    lineage makes Catalyst re-analyze a combinatorially growing tree
-    on every action — measured 95 s of pure driver-side planning on a
-    512-edge graph at sf0.1 before truncation, ~8 s after.
-    Deterministic. Stops early at fixpoint (checked via count of
-    changed labels). If the fixpoint is not reached within
-    ``max_iters``, partial clusters would silently retain duplicates —
-    so that raises, like ``graph.connected_components``.
-
-    The returned frame owns the final round's checkpoint blocks:
-    ``unpersist()`` releases them (the graph family's cache contract).
-
-    ``pairs_distinct=True`` skips the defensive ``distinct`` on the
-    symmetric edge frame: a canonical ``id_a < id_b`` pair list that is
-    itself duplicate-free produces a reversed union that is disjoint by
-    construction, so the dedup shuffle would be a pure no-op pass over
-    the heaviest frame in the loop (every LSH pair generator in this
-    module emits exactly that shape)."""
-    from .graph import _CacheOwner, _TruncatedFrame
-
-    # Evaluate the pair frame EXACTLY ONCE. The pair plan is usually
-    # the whole LSH + exact-verify pipeline; the old spelling
-    # (pairs ∪ pairs-reversed, then nodes derived from that union and
-    # unioned back for self-loops) referenced the pairs subtree FOUR
-    # times inside the one edge-materialization job, and Spark does not
-    # reuse repeated unpersisted subtrees — every reference re-ran the
-    # un-cached tail of the pipeline (measured ~2 s of the collapse
-    # rows at sf0.1). Both directions now come from one explode over a
-    # single pass, materialized before the node set is derived from it.
-    sym_raw = pairs.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("id_a"), F.col("id_b")),
-                F.struct(
-                    F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b")
-                ),
-            )
-        ).alias("e")
-    ).select("e.id_a", "e.id_b")
-    if not pairs_distinct:
-        sym_raw = sym_raw.distinct()
-    with _CacheOwner() as caches:
-        sym = caches.truncate(sym_raw)
-        # SELF-LOOP FOLD: append one (id, id) row per node so the
-        # per-round neighbor-min aggregate sees the node's OWN label
-        # through its self-loop — least(own, nbr_min) then needs no
-        # |V|-sized left join against the label frame (one join gone per
-        # round), and round 1 needs no join at ALL (labels start as
-        # identity, so min(id_b) over neighbors ∪ self IS the propagated
-        # label). The old label for the convergence probe is recovered
-        # inside the same aggregate as min(label WHERE id_b = id_a) —
-        # exactly the self-loop row. The loop rows are materialized
-        # separately (|V|-sized, read from the sym checkpoint) and the
-        # per-round edge frame is the LAZY union of the two checkpoints
-        # — no second |E|-sized copy.
-        loops = caches.truncate(
-            sym.select(F.col("id_a")).distinct().select(
-                "id_a", F.col("id_a").alias("id_b")
-            )
-        )
-        edges = sym.unionByName(loops)
-        new_labels = None  # None ⇒ identity labels (round 1)
-        for _ in range(max_iters):
-            if new_labels is None:
-                label, rows = F.col("id_b"), edges
-            else:
-                label = F.col("__lb")
-                rows = edges.join(
-                    new_labels.select(
-                        F.col("id").alias("id_b"), F.col("cluster").alias("__lb")
-                    ),
-                    "id_b",
-                )
-            # the jump join consumes ``propagated`` on BOTH sides and
-            # Spark does not reuse repeated unpersisted subtrees, so
-            # without this checkpoint each round ran the edges⋈labels
-            # aggregate twice
-            propagated = caches.truncate(
-                rows.groupBy("id_a").agg(
-                    F.min(label).alias("cluster"),
-                    F.min(F.when(F.col("id_b") == F.col("id_a"), label)).alias(
-                        "__prev"
-                    ),
-                )
-            )
-            # pointer jumping: label ← label(label). Labels are always
-            # ids of same-component nodes, so the self-join stays inside
-            # the component while halving the remaining chain depth.
-            # Every label IS a node id and every node appears in
-            # ``propagated`` (self-loops guarantee it), so the jump join
-            # is safely INNER. The OLD label rides along as __prev so
-            # the convergence probe is a filter over the materialized
-            # frame, not a join of two rounds.
-            stale, new_labels = new_labels, caches.truncate(
-                propagated.alias("a")
-                .join(
-                    propagated.select(
-                        F.col("id_a").alias("pid"), F.col("cluster").alias("pcluster")
-                    ),
-                    F.col("a.cluster") == F.col("pid"),
-                )
-                .select(
-                    F.col("a.id_a").alias("id"),
-                    F.least(F.col("a.cluster"), F.col("pcluster")).alias("cluster"),
-                    F.col("a.__prev").alias("__prev"),
-                )
-            )
-            # new_labels is materialized — the jump input's blocks are
-            # dead weight from here
-            caches.drop(propagated)
-            changed = (
-                new_labels.where(F.col("cluster") != F.col("__prev"))
-                .limit(1)
-                .count()
-            )
-            # round k is materialized — round k-1's checkpoint blocks
-            # are dead weight from here
-            caches.drop(stale)
-            if changed == 0:
-                final = caches.keep(new_labels)
-                return _TruncatedFrame(final.select("id", "cluster"), final._ckpt_jrdd)
-    raise RuntimeError(
-        f"dedup_clusters did not reach a fixpoint in {max_iters} "
-        "iterations (a component has diameter > max_iters); the "
-        "partial labels would keep extra duplicates — raise max_iters"
+    cc = connected_components(pairs, max_iters, src="id_a", dst="id_b")
+    return _TruncatedFrame(
+        cc.select(F.col("node").alias("id"), F.col("component").alias("cluster")), cc
     )
 
 
@@ -965,21 +837,20 @@ def collapse_and_survivors(
     Scale shape: the pair graph comes from the banded/bucket-capped
     LSH path (never all-pairs); components run on the pairs-sized
     graph with pointer jumping + lineage truncation
-    (:func:`dedup_clusters`); the cluster labels are persisted ONCE
-    so the two outputs share the physical computation — the caller
-    should unpersist via ``spark.catalog.clearCache()`` (or consume
-    both outputs in one job) when done."""
+    (:func:`dedup_clusters`); the cluster labels are cached ONCE so the
+    two outputs share the physical computation. Both outputs own that
+    one cache: ``unpersist()`` on either releases it, so call it once
+    both are consumed."""
     from pyspark.sql import Window
+
+    from .graph import _TruncatedFrame
 
     pairs = dedup_minhash_verified(
         df, id_col=id_col, threshold=threshold, **minhash_kwargs
     ).select("id_a", "id_b")
-    # dedup_clusters already materializes its result through the
-    # lineage-truncating checkpoint; persist() here makes the SHARING
-    # explicit so neither output recomputes the component loop
-    # (pairs_distinct: the verified pair list is canonical id_a<id_b
-    # and duplicate-free by construction)
-    clusters = dedup_clusters(pairs, pairs_distinct=True).persist()
+    # dedup_clusters returns its labels materialized and cached, so
+    # both outputs read them without recomputing the component loop
+    clusters = dedup_clusters(pairs)
     collapse = (
         clusters.groupBy(F.col("cluster").alias("keep_id"))
         .agg(F.count("*").alias("n_members"), F.sum("id").alias("id_sum"))
@@ -1003,7 +874,7 @@ def collapse_and_survivors(
             "quality",
         )
     )
-    return collapse, survivors
+    return _TruncatedFrame(collapse, clusters), _TruncatedFrame(survivors, clusters)
 
 
 # ---------------------------------------------------------------------------

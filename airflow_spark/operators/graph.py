@@ -29,8 +29,15 @@ round shuffles only it. A checkpointed edge frame measured worse:
 rounds 2 and 3 each wrote a 6.9 MB edge exchange and ran as 1 task of
 ~350 ms, and the op took 18 jobs instead of 15.
 
+Components: :func:`connected_components` is the engine's one
+components loop (``dedup.dedup_clusters`` renames its columns around
+it). Each round is a hashmin aggregate plus a pointer jump through the
+persisted previous round, materialized once and probed once; every
+4th round truncates the lineage.
+
 Public algorithms: PageRank (Brin/Page), label-propagation connected
-components (the min-label hashmin variant used by e.g. GraphFrames).
+components (the min-label hashmin variant used by e.g. GraphFrames,
+with pointer jumping).
 
 Cache contract (uniform across the iterative ops, enforced by
 :class:`_CacheOwner`): the RETURNED frame is persisted and already
@@ -67,7 +74,7 @@ class _TruncatedFrame(_ClassicDataFrame):
 
     ``jrdd`` is the checkpointed RDD; a projection of a checkpoint may
     be wrapped with the same ``jrdd`` so that it owns those blocks. A
-    projection of a persisted frame is wrapped the same way with that
+    frame derived from a cached one is wrapped the same way with that
     frame as ``jrdd``: its ``unpersist`` releases the frame's cache."""
 
     def __init__(self, df: DataFrame, jrdd) -> None:
@@ -320,82 +327,83 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
 ) -> DataFrame:
-    """Min-label propagation (hashmin): every node's label converges to
-    the smallest node id in its component. Returns (node, component).
+    """Min-label propagation (hashmin) with pointer jumping: every
+    node's label converges to the smallest node id in its component.
+    Returns (node, component). The engine's one components loop;
+    ``dedup.dedup_clusters`` renames its columns around it.
 
-    Rounds needed = graph diameter; raises if ``max_iters`` rounds do
-    not reach a fixpoint (silent partial labels would be wrong answers
-    — same contract as ``dedup.dedup_clusters``). Deliberately NO
-    pointer jumping here (unlike ``dedup.dedup_clusters``): on the
-    dense low-diameter graphs this op serves, the jump's extra
-    |V|-keyed join per round measured strictly slower (2.5 s vs 1.8 s
-    at sf0.1) because it cannot cut a round count that is already ~4.
-    """
+    Each round takes ``c``, the min label over the node's neighbors and
+    itself, then jumps: ``component = least(c, prev[c])``, where
+    ``prev`` is the previous round's labels. A path of n nodes closes
+    in ceil(log2 n) + 1 rounds instead of n. The jump joins the
+    persisted previous round, so it adds one query stage to a round
+    that is materialized once either way. Measured trade: on a
+    diameter-1 graph (the sf0.1 ``op_connected_components``) that stage
+    saves nothing and costs one job, 16 instead of 15; a 6-node path
+    runs 24 jobs instead of 31, and a 61-node path 7 rounds and 43 jobs
+    (an 11-node path took 56 jobs without the jump, and with no
+    truncation the plan grew until a 21-node path ran a 7.8 GB driver
+    heap out of memory).
+
+    Raises if ``max_iters`` rounds do not reach a fixpoint: silent
+    partial labels would be wrong answers (a dedup caller would keep
+    extra duplicates)."""
     with _CacheOwner() as caches:
-        # Evaluate the edge frame EXACTLY ONCE (same restructure as
-        # dedup.dedup_clusters): the old spelling (edges ∪
-        # edges-reversed, nodes derived from that union, self-loops
-        # unioned back) referenced the input subtree four times inside
-        # the first materialization, and Spark does not reuse repeated
-        # unpersisted subtrees — a window- or join-derived edge list
-        # re-ran that many times. Both directions come from one explode
-        # over a single pass.
+        # Evaluate the edge frame EXACTLY ONCE: Spark does not reuse
+        # repeated unpersisted subtrees, and a window-, join- or
+        # LSH-derived edge list referenced four times re-ran that many
+        # times. Both directions come from one explode over a single
+        # pass, and the checkpoint cuts the input's plan (a dedup pair
+        # frame arrives with the whole LSH pipeline's) out of every round.
         # SELF-LOOP FOLD: the explode also emits each endpoint's
         # (node, node) row (the distinct collapses repeats), so this one
         # checkpoint is the whole per-round edge frame. Through its
         # self-loop the min aggregate sees the node's OWN label — min
-        # over neighbors ∪ self IS least(own, neighbor-min) — so no round
-        # joins the |V|-sized label frame back, round 1 needs no join at
-        # all, and the old label for the convergence probe is
-        # min(label WHERE b = a), one extra aggregate buffer.
+        # over neighbors ∪ self IS least(own, neighbor-min) — so round 1
+        # needs no join at all, and the old label for the convergence
+        # probe is min(label WHERE b = a), one extra aggregate buffer.
         sym = caches.truncate(
             _pair_rows(edges, (src, dst), (dst, src), (src, src), (dst, dst)).distinct()
         )
-        mat = None  # None ⇒ identity labels (round 1)
-        for _ in range(max_iters):
-            # each node adopts min(own label, neighbors' labels); the
-            # OLD label rides along as __prev so convergence is a filter
-            # over the just-materialized frame — not a separate shuffle
-            # join of two cached rounds
+        mat = None  # None ⇒ identity labels (round 1: the jump is a no-op)
+        for i in range(max_iters):
             if mat is None:
                 label, rows = F.col("b"), sym
             else:
                 label = F.col("__lb")
                 rows = sym.join(
-                    mat.select(
-                        F.col("node").alias("b"),
-                        F.col("component").alias("__lb"),
-                    ),
+                    mat.select(F.col("node").alias("b"), F.col("component").alias("__lb")),
                     "b",
                 )
-            stale, mat = mat, caches.persist(
-                rows.groupBy("a")
-                .agg(
-                    F.min(label).alias("component"),
-                    F.min(F.when(F.col("b") == F.col("a"), label)).alias(
-                        "__prev"
-                    ),
-                )
-                .withColumnRenamed("a", "node")
+            hop = rows.groupBy(F.col("a").alias("node")).agg(
+                F.min(label).alias("component"),
+                F.min(F.when(F.col("b") == F.col("a"), label)).alias("__prev"),
             )
-            changed = (
-                mat.where(F.col("component") != F.col("__prev"))
-                .limit(1)
-                .count()
-            )
-            # the probe materialized `mat`; the superseded round is dead
-            # weight from here (long runs would otherwise hold one
-            # cached frame per round)
+            if mat is not None:
+                # pointer jump through the persisted previous round: every
+                # label is a node id of the same component, so the join
+                # is safely INNER and stays inside the component
+                hop = hop.join(
+                    mat.select(F.col("node").alias("component"), F.col("component").alias("__j")),
+                    "component",
+                ).select("node", F.least("component", "__j").alias("component"), "__prev")
+            # every 4th round truncates the lineage (as kcore does): a
+            # round reads the previous one twice, so each persisted
+            # round doubles the analyzed plan (2, 6, 14 joins after 1,
+            # 2, 3 rounds past a truncation)
+            stale = mat
+            mat = caches.truncate(hop) if (i + 1) % 4 == 0 else caches.persist(hop)
+            # the OLD label rides along as __prev, so convergence is a
+            # filter over the just-materialized round
+            changed = mat.where(F.col("component") != F.col("__prev")).limit(1).count()
             caches.drop(stale)
             if changed == 0:
-                # the RETURNED frame must own the one remaining cache
-                # (callers unpersist it directly): the two-column
-                # projection of the final round, which owns its blocks
+                # the RETURNED projection owns the final round's cache
                 final = caches.keep(mat)
                 return _TruncatedFrame(final.select("node", "component"), final)
     raise RuntimeError(
-        f"connected_components did not converge in {max_iters} rounds "
-        "(component diameter exceeds max_iters)"
+        f"connected_components did not reach a fixpoint in {max_iters} "
+        "rounds; partial labels would split components — raise max_iters"
     )
 
 

@@ -1290,16 +1290,14 @@ def op_dedup_collapse(spark: SparkSession, sf_dir: str) -> DataFrame:
     actually loses members.
 
     Scale shape: pairs come from the banded/bucket-capped LSH path (no
-    all-pairs), components converge in O(diameter) shuffles on the
+    all-pairs), components converge in O(log diameter) rounds on the
     pair graph only (near-dup components are shallow), and the final
     rollup is one groupBy on a pairs-sized frame — never corpus-wide."""
     t = load_tables(spark, sf_dir)
     pairs = dedup.dedup_minhash_verified(t.documents, threshold=0.8).select(
         "id_a", "id_b"
     )
-    # canonical id_a<id_b verified pairs are duplicate-free: skip the
-    # defensive distinct on the symmetric edge frame
-    clusters = dedup.dedup_clusters(pairs, pairs_distinct=True)
+    clusters = dedup.dedup_clusters(pairs)
     return (
         clusters.groupBy(F.col("cluster").alias("keep_id"))
         .agg(
@@ -1332,7 +1330,7 @@ def op_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = dedup.dedup_minhash_verified(t.documents, threshold=0.8).select(
         "id_a", "id_b"
     )
-    clusters = dedup.dedup_clusters(pairs, pairs_distinct=True)
+    clusters = dedup.dedup_clusters(pairs)
     members = (
         t.documents.select(
             "doc_id", F.length("text").cast("long").alias("quality")

@@ -30,7 +30,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from airflow_spark.session import get_session  # noqa: E402
+from airflow_spark.session import default_driver_mem, get_session  # noqa: E402
 
 
 def main() -> None:
@@ -44,6 +44,7 @@ def main() -> None:
     except ValueError:
         sf = None
 
+    default_driver_mem()
     spark = get_session(app_name="airflow_spark-bench", cpus=cpus,
                         shuffle_partitions=cpus)
     spark.sparkContext.setLogLevel("ERROR")

@@ -16,7 +16,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from airflow_spark.plans import audit_plan  # noqa: E402
-from airflow_spark.session import get_session  # noqa: E402
+from airflow_spark.session import default_driver_mem, get_session  # noqa: E402
 
 
 def main() -> int:
@@ -25,6 +25,7 @@ def main() -> int:
 
     import __spark_entry__ as e
 
+    default_driver_mem()
     spark = get_session(app_name="plan-report")
     spark.sparkContext.setLogLevel("ERROR")
     qs = e.queries()

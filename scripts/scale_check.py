@@ -40,7 +40,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from airflow_spark.catalog import load_table  # noqa: E402
-from airflow_spark.session import get_session  # noqa: E402
+from airflow_spark.session import default_driver_mem, get_session  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 REPL_TABLES = ("documents", "events", "embeddings")
@@ -417,6 +417,7 @@ def run_decade(
                 f"(leg ops: {sorted(leg_names)})"
             )
 
+    default_driver_mem()
     spark = get_session(app_name="scale-decade")
     spark.sparkContext.setLogLevel("ERROR")
     dirs = {1: SF_DIR}
@@ -704,6 +705,7 @@ def main() -> int:
     n = int(args[0]) if args and args[0].isdigit() else 10
     only = set(args[1:] if args and args[0].isdigit() else args)
 
+    default_driver_mem()
     spark = get_session(app_name="scale-check")
     spark.sparkContext.setLogLevel("ERROR")
     repl = build_replica(spark, n)

@@ -44,7 +44,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from airflow_spark.catalog import load_table  # noqa: E402
-from airflow_spark.session import get_session  # noqa: E402
+from airflow_spark.session import default_driver_mem, get_session  # noqa: E402
 from airflow_spark.streaming import monitors  # noqa: E402
 from scale_check import SF_DIR, _src_tag, build_replica  # noqa: E402
 
@@ -368,6 +368,7 @@ def main() -> int:
         scales = tuple(int(x) for x in args[i + 1].split(","))
         args = args[:i] + args[i + 2:]
     only = set(args)
+    default_driver_mem()
     spark = get_session(app_name="stream-bench")
     spark.sparkContext.setLogLevel("ERROR")
     dirs = {n: stage(spark, n) for n in scales}

@@ -276,6 +276,30 @@ def test_kcore_truncates_peel_lineage(spark):
     assert j5 == j13 > j12
 
 
+def test_connected_components_long_path_truncates_rounds(spark):
+    # pointer jumping closes an n-node path in ceil(log2 n) + 1 rounds,
+    # and every 4th round truncates the lineage, so the returned frame's
+    # plan holds only the rounds since the last truncation: a 61-node
+    # path (7 rounds) and a 600-node path (11 rounds) both end three
+    # rounds past one
+    def run(n, max_iters):
+        before = _persisted_ids(spark)
+        out = graph.connected_components(
+            _edges(spark, [(i, i + 1) for i in range(1, n)]), max_iters=max_iters
+        )
+        got = {(r.node, r.component) for r in out.collect()}
+        joins = _plan_joins(out)
+        out.unpersist()
+        assert _persisted_ids(spark) - before == set()
+        return got, joins
+
+    got61, j61 = run(61, 10)
+    assert got61 == {(i, 1) for i in range(1, 62)}
+    got600, j600 = run(600, 12)
+    assert got600 == {(i, 1) for i in range(1, 601)}
+    assert j61 == j600 > 0
+
+
 def test_personalized_pagerank_concentrates_near_sources(spark):
     from airflow_spark.operators.graph import personalized_pagerank
 
@@ -512,7 +536,8 @@ def test_cancelled_iterative_ops_leave_no_cache(spark, opname):
         ("pagerank_symmetric", 12),
         ("pagerank_directed", 18),
         ("personalized_pagerank", 18),
-        ("connected_components_chain", 31),
+        ("connected_components_chain", 24),
+        ("dedup_clusters_chain", 24),
         ("kcore_no_peel", 6),
         ("kcore_one_peel", 13),
     ],
@@ -532,6 +557,9 @@ def test_iterative_op_job_count(spark, untagged_jobs, case, jobs):
             directed, sources=[0], iters=3
         ),
         "connected_components_chain": lambda: graph.connected_components(chain),
+        "dedup_clusters_chain": lambda: dedup.dedup_clusters(
+            chain.select(chain.src.alias("id_a"), chain.dst.alias("id_b"))
+        ),
         "kcore_no_peel": lambda: graph.kcore(no_peel, k=2),
         "kcore_one_peel": lambda: graph.kcore(one_peel, k=2),
     }
