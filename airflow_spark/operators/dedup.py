@@ -82,6 +82,36 @@ def dedup_exact_text(
 
 
 # ---------------------------------------------------------------------------
+# Bucket guard (shared by every bucket-then-pair operator)
+# ---------------------------------------------------------------------------
+
+
+def bucket_members(rows: DataFrame, keys: list[str], max_bucket: int) -> DataFrame:
+    """The rows of ``rows`` whose bucket (equal ``keys``) holds
+    2..``max_bucket`` members: the hot-bucket cap of every LSH / banding
+    pair operator. It runs before the caller's ``collect_list``, so a
+    degenerate bucket (millions of identical docs) never materializes a
+    member array; singletons, which pair with nothing, drop here too.
+
+    The count is a window over the bucket, so ``rows`` is referenced
+    ONCE. A ``groupBy(keys).count()`` semi-joined back onto ``rows``
+    reads the input in two branches, and Spark evaluates the whole
+    subtree in each: a Python decode stage beneath it runs twice per
+    query. The window's exchange also serves the caller's
+    ``groupBy(keys)``, so the guard adds no shuffle of its own. Jobs
+    per query (build and collect), semi-join → window: sf0.001
+    ``op_image_neardup`` 8 → 6, ``op_audio_neardup`` 7 → 5,
+    ``op_dedup_simhash`` 10 → 8; sf0.1, first call in a process,
+    ``op_dedup_minhash`` 24 → 21."""
+    n = F.count(F.lit(1)).over(Window.partitionBy(*keys))
+    return (
+        rows.withColumn("__bucket_n", n)
+        .where((F.col("__bucket_n") > 1) & (F.col("__bucket_n") <= max_bucket))
+        .drop("__bucket_n")
+    )
+
+
+# ---------------------------------------------------------------------------
 # MinHash + LSH
 # ---------------------------------------------------------------------------
 
@@ -209,16 +239,6 @@ def minhash_candidate_pairs(
             )
         ).alias("band_id", "band_hash"),
     )
-    # Count first, collect second: a degenerate bucket (millions of
-    # identical docs) must be dropped BEFORE any task materializes its
-    # member array — the count aggregate has map-side combine; the
-    # collect then only ever sees buckets ≤ max_bucket.
-    ok_buckets = (
-        banded.groupBy("band_id", "band_hash")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .where((F.col("n") > 1) & (F.col("n") <= max_bucket))
-        .select("band_id", "band_hash")
-    )
     # sort ONCE in its own projection: inlining array_sort at every
     # reference inside the nested pair-enumeration lambdas made codegen
     # re-emit (and re-run) the sort per member — measured 16.5 s cold /
@@ -226,7 +246,7 @@ def minhash_candidate_pairs(
     # the sorted array bound to an attribute it is sorted once and the
     # generated code shrinks to the enumeration itself
     buckets = (
-        banded.join(ok_buckets, ["band_id", "band_hash"], "left_semi")
+        bucket_members(banded, ["band_id", "band_hash"], max_bucket)
         .groupBy("band_id", "band_hash")
         .agg(F.array_sort(F.collect_list("id")).alias("ids"))
     )
@@ -565,19 +585,11 @@ def simhash_neardup_pairs(
             )
         ).alias("bk"),
     ).select("id", "simhash", "bk.band", "bk.chunk")
-    # count-first bucket guard (see minhash_candidate_pairs): never
-    # materialize a hot bucket's member array
-    ok = (
-        banded.groupBy("band", "chunk")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .where((F.col("n") > 1) & (F.col("n") <= max_bucket))
-        .select("band", "chunk")
-    )
     # sort once, outside the nested enumeration lambdas — see the
     # identical rewrite in minhash_candidate_pairs (an inlined
     # array_sort re-ran per member and dominated the op's wall)
     buckets = (
-        banded.join(ok, ["band", "chunk"], "left_semi")
+        bucket_members(banded, ["band", "chunk"], max_bucket)
         .groupBy("band", "chunk")
         .agg(
             F.array_sort(
@@ -768,12 +780,15 @@ def keep_representatives(
     df: DataFrame, pairs: DataFrame, id_col: str = "doc_id"
 ) -> DataFrame:
     """Drop every near-dup cluster member except the min-id survivor
-    (the complete dedup: pairs → components → one kept per group)."""
+    (the complete dedup: pairs → components → one kept per group). The
+    result owns the cluster labels' cache: ``unpersist()`` releases it."""
+    from .graph import _TruncatedFrame
+
     clusters = dedup_clusters(pairs)
     losers = clusters.where(F.col("id") != F.col("cluster")).select(
         F.col("id").alias(id_col)
     )
-    return df.join(losers, id_col, "left_anti")
+    return _TruncatedFrame(df.join(losers, id_col, "left_anti"), clusters)
 
 
 def keep_best_representatives(
@@ -789,8 +804,9 @@ def keep_best_representatives(
 
     Same component machinery as :func:`keep_representatives`; the
     survivor pick is one window over the cluster-joined frame (cluster
-    cardinality per partition, never corpus-wide)."""
-    from pyspark.sql import Window
+    cardinality per partition, never corpus-wide). The result owns the
+    cluster labels' cache: ``unpersist()`` releases it."""
+    from .graph import _TruncatedFrame
 
     clusters = dedup_clusters(pairs)  # (id, cluster)
     members = df.join(
@@ -803,10 +819,11 @@ def keep_best_representatives(
     w = Window.partitionBy("cluster").orderBy(
         F.col(quality_col).desc(), F.col(id_col).asc()
     )
-    return (
+    return _TruncatedFrame(
         members.withColumn("__rn", F.row_number().over(w))
         .where(F.col("__rn") == 1)
-        .drop("__rn", "cluster")
+        .drop("__rn", "cluster"),
+        clusters,
     )
 
 

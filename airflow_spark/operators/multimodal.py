@@ -28,7 +28,13 @@ Scale notes:
 - feature extraction is ``mapInPandas`` (one Python worker per
   partition, Arrow transfer) — never a row-at-a-time UDF;
 - derived features (small) are split from payloads (huge) early, so
-  downstream joins/aggregations never shuffle the binary column.
+  downstream joins/aggregations never shuffle the binary column;
+- a Python stage's output reaches a global sort only across an
+  exchange (``repartition`` before ``orderBy``): the range partitioner
+  samples its child in a job of its own, so a ``mapInPandas`` child
+  would decode every row once for the sample and again for the sort.
+  Likewise a Python stage's output is referenced once per plan
+  (``dedup.bucket_members``), since each reference re-runs the stage.
 """
 
 from __future__ import annotations
@@ -40,6 +46,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .dedup import bucket_members
 
 #: Canonical media column convention: payload + typed metadata.
 MEDIA_META_SCHEMA = T.StructType(
@@ -495,9 +503,9 @@ def audio_fingerprint_pairs(
     payloads drop out (quarantine posture).
 
     Returns (id_a, id_b, fp) with id_a < id_b. Scale shape: only the
-    (id, fp) longs shuffle — one groupBy on the fingerprint with the
-    same count-first hot-bucket cap the SimHash band join uses;
-    payloads never leave the decode scan."""
+    (id, fp) longs shuffle — one groupBy on the fingerprint behind
+    ``dedup.bucket_members``' hot-bucket cap; payloads never leave the
+    decode scan."""
     import numpy as np
 
     from .mp3 import Mp3DecodeError, decode_mp3
@@ -523,14 +531,8 @@ def audio_fingerprint_pairs(
             yield pd.DataFrame({"id": ids, "fp": fps})
 
     sigs = df.select(id_col, data_col).mapInPandas(_fp, "id LONG, fp LONG")
-    ok = (
-        sigs.groupBy("fp")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .where((F.col("n") > 1) & (F.col("n") <= max_bucket))
-        .select("fp")
-    )
     buckets = (
-        sigs.join(ok, "fp", "left_semi")
+        bucket_members(sigs, ["fp"], max_bucket)
         .groupBy("fp")
         .agg(F.array_sort(F.collect_list("id")).alias("ids"))
     )

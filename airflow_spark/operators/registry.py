@@ -3702,6 +3702,8 @@ def op_audio_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vbr",
             "xing",
         )
+        # exchange first: the sort's range-sampling job re-runs its child
+        .repartition(spark.sparkContext.defaultParallelism)
         .orderBy("media_id")
     )
 
@@ -3760,11 +3762,16 @@ def op_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             )
 
-    return ids.mapInPandas(
-        _fp,
-        "media_id LONG, freq_bin LONG, mp3_peak_bin LONG, "
-        "wav_peak_bin LONG",
-    ).orderBy("media_id")
+    return (
+        ids.mapInPandas(
+            _fp,
+            "media_id LONG, freq_bin LONG, mp3_peak_bin LONG, "
+            "wav_peak_bin LONG",
+        )
+        # exchange first: the sort's range-sampling job re-runs its child
+        .repartition(spark.sparkContext.defaultParallelism)
+        .orderBy("media_id")
+    )
 
 
 def op_audio_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4302,6 +4309,8 @@ def op_video_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_frames",
             "video_codec",
         )
+        # exchange first: the sort's range-sampling job re-runs its child
+        .repartition(spark.sparkContext.defaultParallelism)
         .orderBy("media_id")
     )
 

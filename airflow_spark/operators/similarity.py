@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine_similarity, lit_vector
+from .dedup import bucket_members, keep_representatives
 
 
 def cosine_topk(
@@ -373,8 +374,6 @@ def semantic_dedup(
     corpus ``partitionBy(cell)``, and each cell dedups independently —
     embarrassingly parallel.
     """
-    from .dedup import keep_representatives
-
     if index is None:
         index = IVFIndex.train(df, vec_col, k=k_cells, seed=seed, id_col=id_col)
     b = df.select(
@@ -382,14 +381,8 @@ def semantic_dedup(
         F.col(vec_col).alias("v"),
         index.cell_col(vec_col).alias("bucket"),
     )
-    ok = (
-        b.groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .where((F.col("n") > 1) & (F.col("n") <= max_cell))
-        .select("bucket")
-    )
     buckets = (
-        b.join(ok, ["bucket"], "left_semi")
+        bucket_members(b, ["bucket"], max_cell)
         .groupBy("bucket")
         .agg(
             # sort once outside the enumeration lambdas (see
@@ -467,16 +460,8 @@ def cosine_neardup_pairs(
         F.col(vec_col).alias("v"),
         lsh.bucket_col(vec_col).alias("bucket"),
     )
-    # count-first bucket guard (see dedup.minhash_candidate_pairs):
-    # drop hot buckets before materializing any member array
-    ok = (
-        b.groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .where((F.col("n") > 1) & (F.col("n") <= max_bucket))
-        .select("bucket")
-    )
     buckets = (
-        b.join(ok, ["bucket"], "left_semi")
+        bucket_members(b, ["bucket"], max_bucket)
         .groupBy("bucket")
         .agg(
             # sort once outside the enumeration lambdas (see

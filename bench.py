@@ -319,8 +319,9 @@ def _comparable_totals(
 _SEMANTIC_CHANGES = {
     "op_pagerank": (
         "round-5 cache contract: the op now materializes its result "
-        "with a lineage-truncating reliable checkpoint and drops every "
-        "internal cache (graph._materialize_truncated). Round 4 timed "
+        "with a lineage-truncating localCheckpoint and releases every "
+        "internal cache (graph._CacheOwner.truncate; the returned "
+        "frame owns its final checkpoint). Round 4 timed "
         "a LAZY returned frame whose count() join-eliminated the "
         "final rounds entirely, and leaked the invariants + last "
         "checkpoint into the session. Same logical plan per round; "

@@ -63,6 +63,7 @@ python3 -m pytest -q -p no:cacheprovider perfbench/tests
 python3 -m pytest tests/test_sources.py -q -k local_frame
 python3 -m pytest tests/test_reference_pipelines.py -q -k job_count
 python3 -m pytest tests/test_graph.py -q -k job_count
+python3 -m pytest tests/test_python_stages.py -q
 python3 -c "import __spark_entry__, bench, airflow_spark"
 
 echo "ci_local: lint + smoke green (full-tests job: python -m pytest tests/ -q)"

@@ -2479,6 +2479,27 @@ def test_keep_best_ties_break_to_smallest_id(spark):
     assert kept == [5]
 
 
+@pytest.mark.parametrize("keep", ["keep_representatives", "keep_best_representatives"])
+def test_keep_representatives_release_cluster_cache(spark, keep):
+    """The kept frame owns the cluster labels' cache: ``unpersist()``
+    on it leaves no persistent RDD behind."""
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+
+    docs = spark.createDataFrame(
+        [(i, float(i % 3)) for i in range(1, 8)], "doc_id LONG, quality DOUBLE"
+    )
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (5, 6)], "id_a LONG, id_b LONG")
+    before = persisted()
+    if keep == "keep_representatives":
+        kept = dedup.keep_representatives(docs, pairs)
+    else:
+        kept = dedup.keep_best_representatives(docs, pairs, "quality")
+    assert len(kept.collect()) == 4  # 7 docs, clusters {1,2,3} and {5,6}
+    kept.unpersist()
+    assert persisted() - before == set()
+
+
 def _encode_bmp24(px) -> bytes:
     """Minimal BITMAPINFOHEADER 24-bpp BI_RGB encoder (bottom-up,
     4-byte padded rows) for decode-path tests."""
