@@ -31,6 +31,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import char_shingles, tokens_ws
+from .caching import _CacheOwner, _TruncatedFrame
 from .width import ensure_wide
 
 # canonical implementation lives in operators/width.py (shared by the
@@ -648,15 +649,12 @@ def incremental_neardup(
 
     Cost per batch: signature computation for the batch only + one
     banded join against the store (shuffle of signatures, never text).
-    Returns (id_a, id_b, jaccard_est, is_historical_pair=false-side).
+    Returns (id_a, id_b, jaccard_est, is_historical_pair=false-side),
+    materialized as a checkpoint that ``unpersist()`` releases; the
+    signature caches are released before it returns.
     """
     from ..sources.tables import upsert_parquet
 
-    new_sigs = (
-        minhash_signatures(new_docs, text_col, id_col, num_hashes, shingle_k)
-        .withColumn("sig_v", F.lit(SIGNATURE_VERSION))
-        .persist()
-    )
     # existence via the reader (driver-local os.path is always False on
     # remote stores, which would silently skip the history side)
     from pyspark.errors import AnalysisException
@@ -698,34 +696,39 @@ def incremental_neardup(
                 f"v{SIGNATURE_VERSION}); rebuild it from the corpus "
                 "(delete the store and re-ingest history)"
             )
-        # a re-delivered batch's ids already sit in the store: keep the
-        # new copy only, or the union holds each id twice and every
-        # band bucket emits (X, X) self-pairs with jaccard 1.0
-        history = history.join(
-            new_sigs.select("id"), "id", "left_anti"
+    with _CacheOwner() as caches:
+        new_sigs = caches.persist(
+            minhash_signatures(new_docs, text_col, id_col, num_hashes, shingle_k)
+            .withColumn("sig_v", F.lit(SIGNATURE_VERSION))
         )
-        allsigs = history.unionByName(new_sigs).persist()
-    else:
-        allsigs = new_sigs
-    pairs = minhash_candidate_pairs(allsigs, num_bands)
-    nid = new_sigs.select("id")
-    touching_new = (
-        pairs.join(nid.withColumnRenamed("id", "id_a"), "id_a", "left_semi")
-        .unionByName(
-            pairs.join(nid.withColumnRenamed("id", "id_b"), "id_b", "left_semi")
+        if have_store:
+            # a re-delivered batch's ids already sit in the store: keep the
+            # new copy only, or the union holds each id twice and every
+            # band bucket emits (X, X) self-pairs with jaccard 1.0
+            history = history.join(
+                new_sigs.select("id"), "id", "left_anti"
+            )
+            allsigs = caches.persist(history.unionByName(new_sigs))
+        else:
+            allsigs = new_sigs
+        pairs = minhash_candidate_pairs(allsigs, num_bands)
+        nid = new_sigs.select("id")
+        touching_new = (
+            pairs.join(nid.withColumnRenamed("id", "id_a"), "id_a", "left_semi")
+            .unionByName(
+                pairs.join(nid.withColumnRenamed("id", "id_b"), "id_b", "left_semi")
+            )
+            .distinct()
         )
-        .distinct()
-    )
-    out = minhash_estimate_jaccard(touching_new, allsigs).where(
-        F.col("jaccard_est") >= threshold
-    )
-    # sever lineage from the store BEFORE rewriting it (the upsert
-    # swaps the directory out from under the lazy plan)
-    out = out.localCheckpoint(eager=True)
-    upsert_parquet(spark, sig_store_path, new_sigs, "id")
-    _write_sig_version(sig_store_path)
-    new_sigs.unpersist()
-    return out
+        out = minhash_estimate_jaccard(touching_new, allsigs).where(
+            F.col("jaccard_est") >= threshold
+        )
+        # sever lineage from the store BEFORE rewriting it (the upsert
+        # swaps the directory out from under the lazy plan)
+        out = caches.truncate(out)
+        upsert_parquet(spark, sig_store_path, new_sigs, "id")
+        _write_sig_version(sig_store_path)
+        return caches.keep(out)
 
 
 def _read_sig_version(store_path: str) -> int | None:
@@ -768,7 +771,7 @@ def dedup_clusters(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
     with its columns renamed, so chains converge in O(log diameter)
     rounds and a non-converged run raises. The returned frame owns the
     final round's cache: ``unpersist()`` releases it."""
-    from .graph import _TruncatedFrame, connected_components
+    from .graph import connected_components
 
     cc = connected_components(pairs, max_iters, src="id_a", dst="id_b")
     return _TruncatedFrame(
@@ -782,8 +785,6 @@ def keep_representatives(
     """Drop every near-dup cluster member except the min-id survivor
     (the complete dedup: pairs → components → one kept per group). The
     result owns the cluster labels' cache: ``unpersist()`` releases it."""
-    from .graph import _TruncatedFrame
-
     clusters = dedup_clusters(pairs)
     losers = clusters.where(F.col("id") != F.col("cluster")).select(
         F.col("id").alias(id_col)
@@ -806,8 +807,6 @@ def keep_best_representatives(
     survivor pick is one window over the cluster-joined frame (cluster
     cardinality per partition, never corpus-wide). The result owns the
     cluster labels' cache: ``unpersist()`` releases it."""
-    from .graph import _TruncatedFrame
-
     clusters = dedup_clusters(pairs)  # (id, cluster)
     members = df.join(
         clusters.withColumnRenamed("id", id_col), id_col, "left"
@@ -859,8 +858,6 @@ def collapse_and_survivors(
     one cache: ``unpersist()`` on either releases it, so call it once
     both are consumed."""
     from pyspark.sql import Window
-
-    from .graph import _TruncatedFrame
 
     pairs = dedup_minhash_verified(
         df, id_col=id_col, threshold=threshold, **minhash_kwargs

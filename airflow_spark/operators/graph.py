@@ -1,11 +1,16 @@
-"""Iterative graph operators: PageRank and connected components.
+"""Iterative graph operators and one-pass graph statistics.
 
 Spark has no built-in iterative-graph operator; the idiomatic shape is
-a bounded loop of join+aggregate rounds over an edge DataFrame, with
-each round's result persisted so lineage stays linear (and, at real
-scale, checkpointed every ~10 rounds to truncate the plan). Both
-operators here follow that shape — no driver-side collects, no Python
-row work; each round is one shuffle keyed by node id.
+a bounded loop of join+aggregate rounds over an edge DataFrame whose
+lineage is truncated every few rounds, so the plan stays bounded.
+Four loop bodies follow that shape, with no driver-side collects and
+no Python row work:
+
+- :func:`_power_iteration`: ``pagerank`` and ``personalized_pagerank``;
+- :func:`connected_components`: also ``dedup.dedup_clusters``;
+- :func:`_relax`, frontier Bellman-Ford relaxation: ``bfs_distances``
+  (unit weights) and ``sssp_bounded``;
+- :func:`kcore`'s peel.
 
 Partitioning: PageRank persists its edge frame as
 ``repartition(defaultParallelism, "src")`` plus the out-degree as a
@@ -37,11 +42,11 @@ persisted previous round, materialized once and probed once; every
 
 Public algorithms: PageRank (Brin/Page), label-propagation connected
 components (the min-label hashmin variant used by e.g. GraphFrames,
-with pointer jumping).
+with pointer jumping), bounded Bellman-Ford, k-core peeling.
 
 Cache contract (uniform across the iterative ops, enforced by
-:class:`_CacheOwner`): the RETURNED frame is persisted and already
-materialized; every internal cache — adjacency, loop invariants,
+:class:`caching._CacheOwner`): the RETURNED frame is persisted and
+already materialized; every internal cache — adjacency, loop invariants,
 per-round checkpoints and frontiers — is released when the op exits,
 whether it returns, raises or has its jobs cancelled. The caller owns
 the single remaining cache and may ``result.unpersist()`` when done;
@@ -51,146 +56,36 @@ baseline after that, and after a raise or a cancelled job group.
 
 from __future__ import annotations
 
-import contextlib
-import uuid
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-
-# subclass the CLASSIC DataFrame: pyspark.sql.DataFrame is a
-# classic/connect dispatcher in 4.x whose __new__ would not honor a
-# plain subclass (this engine always runs a classic local JVM session)
-from pyspark.sql.classic.dataframe import (  # noqa: E402
-    DataFrame as _ClassicDataFrame,
-)
+from .caching import _CacheOwner, _TruncatedFrame
 
 
-class _TruncatedFrame(_ClassicDataFrame):
-    """A localCheckpoint-backed materialized frame whose ``unpersist()``
-    releases the pinned checkpoint blocks. After unpersist the frame is
-    NOT recomputable (its lineage was truncated away) — callers only
-    ever unpersist superseded or fully-consumed iteration frames.
-
-    ``jrdd`` is the checkpointed RDD; a projection of a checkpoint may
-    be wrapped with the same ``jrdd`` so that it owns those blocks. A
-    frame derived from a cached one is wrapped the same way with that
-    frame as ``jrdd``: its ``unpersist`` releases the frame's cache."""
-
-    def __init__(self, df: DataFrame, jrdd) -> None:
-        super().__init__(df._jdf, df.sparkSession)
-        self._ckpt_jrdd = jrdd
-
-    def unpersist(self, blocking: bool = False) -> DataFrame:
-        self._ckpt_jrdd.unpersist(blocking)
-        return self
-
-
-class _CacheOwner:
-    """Owns every frame an iterative loop caches.
-
-    ``persist`` and ``truncate`` cache a frame and track it; ``drop``
-    releases a tracked frame the loop has superseded (untracked frames,
-    ``None`` included, are left alone); ``keep`` hands a tracked frame
-    to the caller. On exit every tracked frame not kept is released, on
-    every path: return, raise, and a cancelled job group. A failure to
-    release never replaces the loop's own exception."""
-
-    def __init__(self) -> None:
-        self._held: list[DataFrame] = []
-
-    def __enter__(self) -> _CacheOwner:
-        return self
-
-    def __exit__(self, exc_type, exc, tb) -> None:
-        held, self._held = self._held, []
-        failed = None
-        for df in reversed(held):
-            try:
-                df.unpersist()
-            except Exception as e:  # release the rest first
-                failed = failed or e
-        if failed is not None and exc_type is None:
-            raise failed
-
-    def _untrack(self, df) -> bool:
-        n = len(self._held)
-        self._held = [h for h in self._held if h is not df]
-        return len(self._held) < n
-
-    def persist(self, df: DataFrame) -> DataFrame:
-        df = df.persist()
-        self._held.append(df)
-        return df
-
-    def truncate(self, df: DataFrame) -> DataFrame:
-        """Materialize ``df`` AND truncate its lineage with
-        ``localCheckpoint(eager=True)``: ONE job computes the segment
-        once and pins the blocks executor-local. A plain persist caches
-        the data but Catalyst still re-analyzes the full N-round logical
-        plan on every later action, so planning cost grows with rounds —
-        measured 2.4x on a 10-round PageRank whose final frame was
-        persisted but not truncated (and 95 s of pure planning on an
-        untruncated component loop at sf0.1)."""
-        sc = df.sparkSession.sparkContext
-        # The checkpoint RDD is pinned BEFORE its job runs, so a job
-        # that fails or is cancelled leaves it registered with no frame
-        # to release it by. A unique creation site (a thread-local
-        # property) identifies it on that path.
-        site = f"graph.truncate-{uuid.uuid4().hex}"
-        outer = sc.getLocalProperty("callSite.short")
-        sc.setLocalProperty("callSite.short", site)
-        try:
-            lc = df.localCheckpoint(eager=True)
-        except BaseException:
-            with contextlib.suppress(Exception):
-                pinned = sc._jsc.getPersistentRDDs()
-                for rid in pinned.keySet().toArray():
-                    r = pinned.get(rid)
-                    if r.rdd().creationSite().shortForm() == site:
-                        r.unpersist()
-            raise
-        finally:
-            sc.setLocalProperty("callSite.short", outer)
-        # DataFrame.unpersist only clears CacheManager entries, and a
-        # localCheckpoint never registers one — its blocks are pinned
-        # on the RDD itself (the LogicalRDD leaf of the plan)
-        out = _TruncatedFrame(lc, lc._jdf.queryExecution().analyzed().rdd())
-        self._held.append(out)
-        return out
-
-    def drop(self, df: DataFrame | None) -> None:
-        if self._untrack(df):
-            df.unpersist()
-
-    def keep(self, df: DataFrame) -> DataFrame:
-        self._untrack(df)
-        return df
-
-
-def _undirected(edges: DataFrame, src: str, dst: str, *extra) -> DataFrame:
-    """Canonical undirected edge set: one ``(lo, hi, *extra)`` row per
-    distinct non-loop edge, ``lo < hi``."""
+def _undirected(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """Canonical undirected edge set: one ``(lo, hi)`` row per distinct
+    non-loop edge, ``lo < hi``."""
     return (
         edges.select(
             F.least(F.col(src), F.col(dst)).alias("lo"),
             F.greatest(F.col(src), F.col(dst)).alias("hi"),
-            *extra,
         )
         .where(F.col("lo") != F.col("hi"))
         .distinct()
     )
 
 
-def _pair_rows(df: DataFrame, *pairs: tuple[str, str]) -> DataFrame:
-    """One ``(a, b)`` row per ``(a, b)`` column pair for each row of
-    ``df``. The rows come from one explode over a single pass, so a
-    derived ``df`` is evaluated once, not once per pair."""
+def _pair_rows(df: DataFrame, *pairs: tuple[str, str], carry: tuple[str, ...] = ()) -> DataFrame:
+    """One ``(a, b, *carry)`` row per ``(a, b)`` column pair for each
+    row of ``df``. The rows come from one explode over a single pass,
+    so a derived ``df`` is evaluated once, not once per pair."""
     return df.select(
         F.explode(
-            F.array(*(F.struct(F.col(x).alias("a"), F.col(y).alias("b")) for x, y in pairs))
+            F.array(
+                *(F.struct(F.col(x).alias("a"), F.col(y).alias("b"), *carry) for x, y in pairs)
+            )
         ).alias("e")
-    ).select("e.a", "e.b")
+    ).select("e.a", "e.b", *(f"e.{c}" for c in carry))
 
 
 def _power_iteration(
@@ -517,6 +412,71 @@ def link_predict_common_neighbors(
     )
 
 
+def _relax(
+    edges: DataFrame, source: int, rounds: int, src: str, dst: str, weight, dist_type: str
+) -> DataFrame:
+    """The one shortest-path body: at most ``rounds`` rounds of
+    Bellman-Ford relaxation from ``source`` over the undirected graph,
+    each edge costing ``weight`` (a column over ``edges``). Returns
+    ``(node, dist)`` for every node a path of at most ``rounds`` edges
+    reaches, with ``dist`` the least cost of such a path; ``source``
+    is always present with 0.
+
+    Each round aggregates ``best ∪ (frontier ⋈ adj)`` by node as
+    ``min(dist)``, carrying the old value as ``min(__prev)``, and
+    materializes it once (persisted; truncated every 4th round, as in
+    ``connected_components``). Counting its rows that are new or whose
+    ``dist`` fell is that materialization AND the convergence probe;
+    those rows are the next frontier, and a count of 0 ends the loop
+    early. Relaxing only the frontier is exact: a node whose distance
+    did not fall in round k−1 had its edges relaxed with that same
+    distance in an earlier round, so k rounds equal k rounds of full
+    Bellman-Ford.
+
+    Every round is materialized: each one reads the previous round
+    twice, and AQE does not reuse a repeated unpersisted subtree across
+    its query stages, so a lazy loop recomputes early rounds
+    exponentially (a depth-3 BFS ran 54 jobs in 10.4 s instead of 26 in
+    3.9 s)."""
+    with _CacheOwner() as caches:
+        # one explode of both directions and one distinct: parallel
+        # edges of equal cost collapse, cheaper ones stay for min to pick
+        adj = caches.persist(
+            _pair_rows(
+                edges.where(F.col(src) != F.col(dst)).select(src, dst, weight.alias("w")),
+                (src, dst),
+                (dst, src),
+                carry=("w",),
+            ).distinct()
+        )
+        best = edges.sparkSession.createDataFrame([(source,)], "node bigint").select(
+            "node", F.lit(0).cast(dist_type).alias("dist")
+        )
+        frontier = best
+        for i in range(rounds):
+            reached = frontier.join(adj.withColumnRenamed("a", "node"), "node").select(
+                F.col("b").alias("node"),
+                (F.col("dist") + F.col("w")).alias("dist"),
+                F.lit(None).cast(dist_type).alias("__prev"),
+            )
+            hop = (
+                best.select("node", "dist", F.col("dist").alias("__prev"))
+                .unionByName(reached)
+                .groupBy("node")
+                .agg(F.min("dist").alias("dist"), F.min("__prev").alias("__prev"))
+            )
+            stale = best
+            best = caches.truncate(hop) if (i + 1) % 4 == 0 else caches.persist(hop)
+            frontier = best.where(F.col("__prev").isNull() | (F.col("dist") < F.col("__prev")))
+            changed = frontier.count()
+            caches.drop(stale)
+            if changed == 0:
+                break
+        # the RETURNED projection owns the final round's cache
+        best = caches.keep(best)
+        return _TruncatedFrame(best.select("node", "dist"), best)
+
+
 def bfs_distances(
     edges: DataFrame,
     source: int,
@@ -527,62 +487,12 @@ def bfs_distances(
     """Unweighted shortest-path distances from ``source`` over the
     undirected graph, breadth-first to ``max_depth`` hops — the
     bounded-iteration answer to a recursive CTE (which Spark lacks;
-    the oracle twin IS one).
+    the oracle twin IS one). :func:`_relax` with unit weights, so each
+    round joins only the wavefront to the adjacency, and the loop ends
+    when the wavefront empties.
 
-    Frontier form: each round expands only the newly-discovered nodes
-    (frontier ⋈ adjacency, anti-join against everything seen), so a
-    round's cost tracks the frontier size, not the visited set — on a
-    high-diameter graph the per-round joins stay proportional to the
-    BFS wavefront. Early exit when the frontier empties; the emptiness
-    probe is one tiny action per round, the price of not running
-    max_depth dead rounds.
-
-    Returns (node, dist) including (source, 0)."""
-    spark = edges.sparkSession
-    und = _undirected(edges, src, dst)
-    with _CacheOwner() as caches:
-        adj = caches.persist(
-            und.select(
-                F.explode(
-                    F.array(
-                        F.struct(F.col("lo").alias("node"), F.col("hi").alias("nbr")),
-                        F.struct(F.col("hi").alias("node"), F.col("lo").alias("nbr")),
-                    )
-                ).alias("e")
-            )
-            .select("e.node", "e.nbr")
-            .repartition("node")
-        )
-        dist = spark.createDataFrame([(source, 0)], "node bigint, dist int")
-        frontier = dist
-        # (A lazy probe-free variant for small depths was measured and
-        # REJECTED: each round references the previous frontier and the
-        # accumulator more than once, and AQE does NOT reuse the
-        # repeated subtrees across its runtime query stages, so the
-        # depth-3 op recomputed early rounds exponentially — 10.4 s vs
-        # 3.9 s, 54 jobs vs 26. The per-round persist + emptiness probe
-        # below is what keeps every round computed exactly once.)
-        for d in range(1, max_depth + 1):
-            nxt = caches.persist(
-                frontier.join(adj, "node")
-                .select(F.col("nbr").alias("node"))
-                .distinct()
-                .join(dist, "node", "left_anti")
-                .select("node", F.lit(d).alias("dist"))
-            )
-            if nxt.isEmpty():
-                break
-            # no per-round persist on the accumulator: it is a union of
-            # ALREADY-persisted frontiers, so recompute on reuse just
-            # reads cached blocks — a per-round persist here only adds a
-            # materialization barrier (measured 5× slower in pagerank)
-            dist = dist.unionByName(nxt)
-            frontier = nxt
-        # the returned accumulator is materialized from the cached
-        # frontiers before the owner releases them
-        dist = caches.persist(dist)
-        dist.count()
-        return caches.keep(dist)
+    Returns (node, dist) including (source, 0); ``dist`` is an int."""
+    return _relax(edges, source, max_depth, src, dst, F.lit(1), "int")
 
 
 def sssp_bounded(
@@ -596,56 +506,12 @@ def sssp_bounded(
     """Single-source shortest path costs over the undirected weighted
     graph, restricted to paths of at most ``rounds`` edges —
     Bellman-Ford relaxation rounds, the bounded-iteration form of the
-    weighted recursive CTE. Parallel edges are kept (min picks the
-    lightest); prefer integer-valued weights when hash-attesting so
-    path sums are exact.
+    weighted recursive CTE: :func:`_relax` with ``weight_col`` cast to
+    double. Parallel edges are kept (min picks the lightest); prefer
+    integer-valued weights when hash-attesting so path sums are exact.
 
-    Each round is one join (current dists ⋈ adjacency) + one min-agg —
-    both shuffles keyed by node; adjacency is co-partitioned once.
     Returns (node, dist) for nodes reachable within ``rounds`` hops."""
-    spark = edges.sparkSession
-    und = _undirected(edges, src, dst, F.col(weight_col).cast("double").alias("w"))
-    with _CacheOwner() as caches:
-        adj = caches.persist(
-            und.select(
-                F.explode(
-                    F.array(
-                        F.struct(
-                            F.col("lo").alias("node"),
-                            F.col("hi").alias("nbr"),
-                            F.col("w"),
-                        ),
-                        F.struct(
-                            F.col("hi").alias("node"),
-                            F.col("lo").alias("nbr"),
-                            F.col("w"),
-                        ),
-                    )
-                ).alias("e")
-            )
-            .select("e.node", "e.nbr", "e.w")
-            .repartition("node")
-        )
-        dist = spark.createDataFrame([(source, 0.0)], "node bigint, dist double")
-        for _ in range(rounds):
-            cand = dist.join(adj, "node").select(
-                F.col("nbr").alias("node"),
-                (F.col("dist") + F.col("w")).alias("dist"),
-            )
-            nxt = caches.persist(
-                dist.unionByName(cand).groupBy("node").agg(F.min("dist").alias("dist"))
-            )
-            # materialize the new round, then drop the superseded one —
-            # the relaxation only ever reads the latest dist frame. (A
-            # lazy no-materialization variant was measured and REJECTED:
-            # each round references the previous dist twice — join +
-            # union — and AQE does NOT reuse the repeated subtree across
-            # its runtime query stages, so the 3-round op recomputed
-            # early rounds exponentially: 5.4 s vs 2.8 s, 29 jobs vs 21.)
-            nxt.count()
-            caches.drop(dist)
-            dist = nxt
-        return caches.keep(dist)
+    return _relax(edges, source, rounds, src, dst, F.col(weight_col).cast("double"), "double")
 
 
 def kcore(
@@ -759,16 +625,9 @@ def degree_stats(
     map-side combinable, no windows, no joins. At 100 TB the edge
     distinct is the only real shuffle; everything after it works on
     the much smaller node set."""
-    lo, hi = F.col(src), F.col(dst)
-    canon = (
-        edges.where(lo != hi)
-        .select(
-            F.least(lo, hi).alias("a"), F.greatest(lo, hi).alias("b")
-        )
-        .distinct()
-    )
-    sym = canon.select(F.col("a").alias("node")).unionByName(
-        canon.select(F.col("b").alias("node"))
+    und = _undirected(edges, src, dst)
+    sym = und.select(F.col("lo").alias("node")).unionByName(
+        und.select(F.col("hi").alias("node"))
     )
     deg = sym.groupBy("node").agg(F.count(F.lit(1)).alias("deg"))
     return (
@@ -824,14 +683,9 @@ def assortativity(
     corr is spelled covar/(σ·σ) under try_divide so a degree-regular
     graph (zero variance) yields NULL, matching ANSI engines instead
     of raising."""
-    lo, hi = F.col(src), F.col(dst)
-    canon = (
-        edges.where(lo != hi)
-        .select(F.least(lo, hi).alias("a"), F.greatest(lo, hi).alias("b"))
-        .distinct()
-    )
-    sym = canon.unionByName(
-        canon.select(F.col("b").alias("a"), F.col("a").alias("b"))
+    und = _undirected(edges, src, dst)
+    sym = und.select(F.col("lo").alias("a"), F.col("hi").alias("b")).unionByName(
+        und.select(F.col("hi").alias("a"), F.col("lo").alias("b"))
     )
     deg = sym.groupBy("a").agg(F.count(F.lit(1)).alias("deg"))
     paired = (
@@ -861,19 +715,14 @@ def clustering_coefficient(
     Shape: the triangle enumeration dominates (see triangle_count);
     the degree join adds one |V|-sized frame. Output: (node, deg,
     n_triangles, coeff) for every node of the graph."""
-    lo, hi = F.col(src), F.col(dst)
-    canon = (
-        edges.where(lo != hi)
-        .select(F.least(lo, hi).alias("a"), F.greatest(lo, hi).alias("b"))
-        .distinct()
-    )
+    und = _undirected(edges, src, dst)
     deg = (
-        canon.select(F.col("a").alias("node"))
-        .unionByName(canon.select(F.col("b").alias("node")))
+        und.select(F.col("lo").alias("node"))
+        .unionByName(und.select(F.col("hi").alias("node")))
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("deg"))
     )
-    tri = triangle_count(canon, "a", "b", edges_canonical=True)
+    tri = triangle_count(und, "lo", "hi", edges_canonical=True)
     pairs = (F.col("deg") * (F.col("deg") - 1) / 2.0).cast("double")
     coeff = F.when(
         F.col("deg") >= 2,

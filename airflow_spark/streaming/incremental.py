@@ -205,59 +205,64 @@ def neardup_ingest(
     from pyspark.sql import functions as F
 
     from ..operators import dedup as _dedup
+    from ..operators.caching import _CacheOwner
 
     def _handle(batch: DataFrame, _bid: int) -> None:
         if not batch.take(1):
             return
-        batch = batch.localCheckpoint(eager=True)
-        pairs = _dedup.incremental_neardup(
-            spark,
-            batch,
-            sig_store_dir,
-            text_col=text_col,
-            id_col=id_col,
-            threshold=threshold,
-        ).localCheckpoint(eager=True)
-        batch_ids = batch.select(F.col(id_col).alias("id"))
-        if pairs.take(1):
-            clusters = _dedup.dedup_clusters(pairs)
-            # a batch doc survives iff it IS its cluster's min label
-            # AND that label is not a historical doc (history ids in
-            # the pair graph are exactly the non-batch ids)
-            member = clusters.join(batch_ids, "id", "left_semi")
-            hist_labels = clusters.join(
-                batch_ids, "id", "left_anti"
-            ).select(F.col("cluster").alias("__hc")).distinct()
-            drop = (
-                member.join(
-                    hist_labels,
-                    member.cluster == F.col("__hc"),
-                    "left_semi",
+        # every checkpoint and cache of the batch is released when it
+        # has been appended, so a long-running stream holds none of them
+        with _CacheOwner() as caches:
+            batch = caches.truncate(batch)
+            pairs = caches.own(
+                _dedup.incremental_neardup(
+                    spark,
+                    batch,
+                    sig_store_dir,
+                    text_col=text_col,
+                    id_col=id_col,
+                    threshold=threshold,
                 )
-                .select("id")
-                .unionByName(
-                    member.where(F.col("id") != F.col("cluster")).select("id")
-                )
-                .distinct()
-                .withColumnRenamed("id", id_col)
             )
-            survivors = batch.join(drop, id_col, "left_anti")
-        else:
-            survivors = batch
-        # replay safety: foreachBatch is at-least-once — a crash between
-        # this append and the checkpoint commit replays the batch, so
-        # re-filter against ids already IN history (same self-healing
-        # contract as dedup_ingest) before appending
-        from pyspark.errors import AnalysisException
+            batch_ids = batch.select(F.col(id_col).alias("id"))
+            if pairs.take(1):
+                clusters = caches.own(_dedup.dedup_clusters(pairs))
+                # a batch doc survives iff it IS its cluster's min label
+                # AND that label is not a historical doc (history ids in
+                # the pair graph are exactly the non-batch ids)
+                member = clusters.join(batch_ids, "id", "left_semi")
+                hist_labels = clusters.join(
+                    batch_ids, "id", "left_anti"
+                ).select(F.col("cluster").alias("__hc")).distinct()
+                drop = (
+                    member.join(
+                        hist_labels,
+                        member.cluster == F.col("__hc"),
+                        "left_semi",
+                    )
+                    .select("id")
+                    .unionByName(
+                        member.where(F.col("id") != F.col("cluster")).select("id")
+                    )
+                    .distinct()
+                    .withColumnRenamed("id", id_col)
+                )
+                survivors = batch.join(drop, id_col, "left_anti")
+            else:
+                survivors = batch
+            # replay safety: foreachBatch is at-least-once — a crash between
+            # this append and the checkpoint commit replays the batch, so
+            # re-filter against ids already IN history (same self-healing
+            # contract as dedup_ingest) before appending
+            from pyspark.errors import AnalysisException
 
-        try:
-            seen = spark.read.parquet(history_dir).select(id_col)
-        except AnalysisException:
-            seen = None
-        if seen is not None:
-            survivors = survivors.join(seen, id_col, "left_anti")
-            survivors = survivors.localCheckpoint(eager=True)
-        survivors.write.mode("append").parquet(history_dir)
+            try:
+                seen = spark.read.parquet(history_dir).select(id_col)
+            except AnalysisException:
+                seen = None
+            if seen is not None:
+                survivors = caches.truncate(survivors.join(seen, id_col, "left_anti"))
+            survivors.write.mode("append").parquet(history_dir)
 
     stream = spark.readStream.schema(schema).format(source_format).load(
         source_dir

@@ -320,7 +320,7 @@ _SEMANTIC_CHANGES = {
     "op_pagerank": (
         "round-5 cache contract: the op now materializes its result "
         "with a lineage-truncating localCheckpoint and releases every "
-        "internal cache (graph._CacheOwner.truncate; the returned "
+        "internal cache (caching._CacheOwner.truncate; the returned "
         "frame owns its final checkpoint). Round 4 timed "
         "a LAZY returned frame whose count() join-eliminated the "
         "final rounds entirely, and leaked the invariants + last "

@@ -6,6 +6,7 @@ import threading
 
 import pytest
 from pyspark.sql import Row
+from pyspark.sql import functions as F
 
 from airflow_spark.operators import dedup, graph
 
@@ -475,7 +476,15 @@ def test_iterative_ops_error_paths_leave_no_cache(spark):
 
 
 @pytest.mark.parametrize(
-    "opname", ["pagerank", "connected_components", "kcore", "dedup_clusters"]
+    "opname",
+    [
+        "pagerank",
+        "connected_components",
+        "bfs_distances",
+        "sssp_bounded",
+        "kcore",
+        "dedup_clusters",
+    ],
 )
 def test_cancelled_iterative_ops_leave_no_cache(spark, opname):
     # a task timeout cancels the op's job group mid-loop (the pipeline
@@ -486,6 +495,10 @@ def test_cancelled_iterative_ops_leave_no_cache(spark, opname):
         "pagerank": lambda: graph.pagerank(chain, iters=200),
         "connected_components": lambda: graph.connected_components(
             chain, max_iters=400
+        ),
+        "bfs_distances": lambda: graph.bfs_distances(chain, 0, max_depth=400),
+        "sssp_bounded": lambda: graph.sssp_bounded(
+            chain.withColumn("w", F.lit(1.0)), 0, rounds=400
         ),
         "kcore": lambda: graph.kcore(chain, k=2, max_iters=400),
         "dedup_clusters": lambda: dedup.dedup_clusters(
@@ -540,6 +553,8 @@ def test_cancelled_iterative_ops_leave_no_cache(spark, opname):
         ("dedup_clusters_chain", 24),
         ("kcore_no_peel", 6),
         ("kcore_one_peel", 13),
+        ("bfs_distances_chain", 33),
+        ("sssp_bounded_chain", 18),
     ],
 )
 def test_iterative_op_job_count(spark, untagged_jobs, case, jobs):
@@ -547,6 +562,7 @@ def test_iterative_op_job_count(spark, untagged_jobs, case, jobs):
     sym = _edges(spark, [(0, 1), (1, 0), (0, 2), (2, 0), (0, 3), (3, 0), (1, 2), (2, 1)])
     directed = _edges(spark, [(0, 1), (1, 2), (2, 0), (2, 3), (3, 1)])
     chain = _edges(spark, [(i, i + 1) for i in range(5)])
+    wchain = chain.withColumn("w", (chain.src + 1).cast("double"))
     no_peel, one_peel = _edges(spark, k4), _edges(spark, k4 + [(0, 10)])
     calls = {
         "pagerank_symmetric": lambda: graph.pagerank(
@@ -562,7 +578,45 @@ def test_iterative_op_job_count(spark, untagged_jobs, case, jobs):
         ),
         "kcore_no_peel": lambda: graph.kcore(no_peel, k=2),
         "kcore_one_peel": lambda: graph.kcore(one_peel, k=2),
+        "bfs_distances_chain": lambda: graph.bfs_distances(chain, 0),
+        "sssp_bounded_chain": lambda: graph.sssp_bounded(wchain, 0, rounds=3),
     }
     out, n = untagged_jobs(calls[case])
     out.unpersist()
     assert n == jobs, f"{case}: {n} jobs, pinned at {jobs}"
+
+
+def test_sssp_bounded_job_count_exits_early(spark, untagged_jobs):
+    # a 3-node path settles in round 3 (round 3 relaxes node 2 and
+    # improves nothing), so a larger round bound adds no job
+    e = spark.createDataFrame([(0, 1, 1.0), (1, 2, 1.0)], "src bigint, dst bigint, w double")
+
+    def run(rounds):
+        out, n = untagged_jobs(lambda: graph.sssp_bounded(e, 0, rounds=rounds))
+        assert {(r.node, r.dist) for r in out.collect()} == {(0, 0.0), (1, 1.0), (2, 2.0)}
+        out.unpersist()
+        return n
+
+    assert run(10) <= run(3)
+
+
+def test_bfs_distances_long_path_truncates_rounds(spark):
+    # a 40-edge path needs 41 rounds at depth 42: the last one finds no
+    # improvement. Every 4th round truncates the lineage, so the
+    # returned frame's plan holds only the rounds since the last
+    # truncation: 41 rounds end one round past one, like the 5 rounds
+    # of a 4-edge path
+    def run(n, depth):
+        before = _persisted_ids(spark)
+        out = graph.bfs_distances(_edges(spark, [(i, i + 1) for i in range(n)]), 0, depth)
+        got = {r.node: r.dist for r in out.collect()}
+        joins = _plan_joins(out)
+        out.unpersist()
+        assert _persisted_ids(spark) - before == set()
+        return got, joins
+
+    got4, j4 = run(4, 6)
+    assert got4 == {i: i for i in range(5)}
+    got40, j40 = run(40, 42)
+    assert got40 == {i: i for i in range(41)}  # the far end at 40
+    assert j4 == j40 > 0

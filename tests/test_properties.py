@@ -434,6 +434,54 @@ def test_kcore_fixpoint_properties(spark, edge_bits, k):
         }
 
 
+def _bounded_bellman_ford(edges, source, rounds):
+    """Reference: ``rounds`` rounds of full Bellman-Ford over the
+    undirected graph, self-loops dropped."""
+    dist = {source: 0}
+    for _ in range(rounds):
+        nxt = dict(dist)
+        for a, b, w in edges:
+            if a == b:
+                continue
+            for u, v in ((a, b), (b, a)):
+                if u in dist and dist[u] + w < nxt.get(v, float("inf")):
+                    nxt[v] = dist[u] + w
+        dist = nxt
+    return dist
+
+
+@given(
+    edges=st.lists(
+        st.tuples(st.integers(0, 5), st.integers(0, 5), st.integers(1, 9)),
+        min_size=1,
+        max_size=9,
+    ),
+)
+@settings(max_examples=3, deadline=None)
+def test_shortest_paths_match_bounded_bellman_ford(spark, edges):
+    """For ANY small weighted graph and every round bound 1..5,
+    ``sssp_bounded`` equals bounded Bellman-Ford over the weights and
+    ``bfs_distances`` equals it over unit weights, though both relax
+    only the nodes whose distance fell in the previous round."""
+    from airflow_spark.operators.graph import bfs_distances, sssp_bounded
+
+    df = spark.createDataFrame(
+        [(a, b, float(w)) for a, b, w in edges], "src LONG, dst LONG, w DOUBLE"
+    )
+    unit = [(a, b, 1) for a, b, _ in edges]
+    for rounds in range(1, 6):
+        out = sssp_bounded(df, 0, rounds=rounds)
+        assert {r.node: r.dist for r in out.collect()} == _bounded_bellman_ford(
+            edges, 0, rounds
+        )
+        out.unpersist()
+        out = bfs_distances(df, 0, max_depth=rounds)
+        assert {r.node: r.dist for r in out.collect()} == _bounded_bellman_ford(
+            unit, 0, rounds
+        )
+        out.unpersist()
+
+
 # ---------------------------------------------------------------------------
 # Media metadata walkers: total functions over arbitrary bytes
 # ---------------------------------------------------------------------------

@@ -838,6 +838,37 @@ def test_neardup_ingest_across_batches(spark, tmp_path):
     assert kept2 == {1, 3, 11}  # 10 dropped against history
 
 
+def test_neardup_ingest_releases_batch_caches(spark, tmp_path):
+    """Each micro-batch's checkpoints and caches (the batch, its pairs,
+    the cluster labels, the signatures and the survivors) are released
+    once the batch is appended: the persistent-RDD ledger is back at
+    its baseline after a first batch and after one against history."""
+    from airflow_spark.streaming.incremental import neardup_ingest
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+
+    src = tmp_path / "nd_in"
+    src.mkdir()
+    args = [str(tmp_path / d) for d in ("nd_ckpt", "nd_hist", "nd_sigs")]
+    schema = "doc_id LONG, text STRING"
+    base = ("the quick brown fox jumps over the lazy dog and then "
+            "runs far away into the quiet green forest tonight")
+    before = persisted()
+    for rows in (
+        [(1, base), (2, base.replace("tonight", "today")),
+         (3, "completely different content about query engines")],
+        [(10, base.replace("quiet", "silent")), (11, "an unrelated new document")],
+    ):
+        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
+            "append"
+        ).parquet(str(src))
+        assert neardup_ingest(spark, str(src), schema, *args, threshold=0.5)
+        assert persisted() - before == set()
+    kept = {r.doc_id for r in spark.read.parquet(args[1]).collect()}
+    assert kept == {1, 3, 11}
+
+
 def test_heavy_hitter_ingest_merges_and_replay_safe(spark, tmp_path):
     """Cross-run Count-Min: two availableNow runs build mergeable
     per-batch sketches; estimates never undercount the true totals,
