@@ -3,10 +3,12 @@
 :class:`_CacheOwner` tracks every frame an operator caches and releases
 the ones it does not hand to its caller, on return, raise and a
 cancelled job group. :class:`_TruncatedFrame` is a frame whose
-``unpersist()`` releases a cache it was derived from: a
-``localCheckpoint``'s pinned blocks, or a persisted frame it projects.
-The iterative graph loops, the dedup cluster family and the streaming
-near-dup ingest all use these two classes.
+``unpersist()`` releases the caches it was derived from: a
+``localCheckpoint``'s pinned blocks, or the persisted frames it reads.
+The iterative graph loops, the dedup cluster family, the near-duplicate
+pair operators (MinHash, the exact n-gram trio, their exact
+verification) and the streaming near-dup ingest all use these two
+classes.
 """
 
 from __future__ import annotations
@@ -23,22 +25,27 @@ from pyspark.sql.classic.dataframe import DataFrame as _ClassicDataFrame
 
 
 class _TruncatedFrame(_ClassicDataFrame):
-    """A localCheckpoint-backed materialized frame whose ``unpersist()``
-    releases the pinned checkpoint blocks. After unpersist the frame is
-    NOT recomputable (its lineage was truncated away) — callers only
-    ever unpersist superseded or fully-consumed iteration frames.
+    """A frame whose ``unpersist()`` releases the caches it reads.
 
-    ``jrdd`` is the checkpointed RDD; a projection of a checkpoint may
-    be wrapped with the same ``jrdd`` so that it owns those blocks. A
-    frame derived from a cached one is wrapped the same way with that
-    frame as ``jrdd``: its ``unpersist`` releases the frame's cache."""
+    Each of ``owners`` is released by its own ``unpersist``: a
+    checkpointed RDD (a projection of a checkpoint wrapped with it owns
+    those blocks; after unpersist the frame is NOT recomputable, its
+    lineage was truncated away), or a cached frame it is derived from,
+    itself possibly a ``_TruncatedFrame``. A lazy result that reads
+    several caches owns them all, so one ``unpersist()`` frees them."""
 
-    def __init__(self, df: DataFrame, jrdd) -> None:
+    def __new__(cls, df: DataFrame, *owners) -> _TruncatedFrame:
+        # the classic __new__ takes exactly (jdf, session) and runs
+        # __init__ itself; Python runs this class's __init__ instead
+        return object.__new__(cls)
+
+    def __init__(self, df: DataFrame, *owners) -> None:
         super().__init__(df._jdf, df.sparkSession)
-        self._ckpt_jrdd = jrdd
+        self._owners = owners
 
     def unpersist(self, blocking: bool = False) -> DataFrame:
-        self._ckpt_jrdd.unpersist(blocking)
+        for owner in self._owners:
+            owner.unpersist(blocking)
         return self
 
 
@@ -49,10 +56,11 @@ class _CacheOwner:
     tracks a frame that something else already materialized and whose
     ``unpersist()`` releases it; ``drop`` releases a tracked frame the
     operator has superseded (untracked frames, ``None`` included, are
-    left alone); ``keep`` hands a tracked frame to the caller. On exit
-    every tracked frame not kept is released, on every path: return,
-    raise, and a cancelled job group. A failure to release never
-    replaces the operator's own exception."""
+    left alone); ``keep`` hands a tracked frame to the caller, and
+    ``handoff`` hands every tracked frame to a lazy result that reads
+    them. On exit every tracked frame not kept is released, on every
+    path: return, raise, and a cancelled job group. A failure to
+    release never replaces the operator's own exception."""
 
     def __init__(self) -> None:
         self._held: list[DataFrame] = []
@@ -128,3 +136,7 @@ class _CacheOwner:
     def keep(self, df: DataFrame) -> DataFrame:
         self._untrack(df)
         return df
+
+    def handoff(self, df: DataFrame) -> _TruncatedFrame:
+        held, self._held = self._held, []
+        return _TruncatedFrame(df, *held)

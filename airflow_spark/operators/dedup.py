@@ -19,6 +19,28 @@ Five strategies, all shuffle-light by construction (the 100 TB posture):
 - **embedding cosine** (see similarity.py `cosine_neardup_pairs`):
   random-hyperplane LSH buckets, exact cosine only within buckets.
 
+The near-duplicate pair family shares one copy of each building block:
+
+- **`bucket_pairs`** is the one bucket-pair kernel: a hot-bucket cap,
+  one sorted member array per bucket and the id_a < id_b enumeration.
+  MinHash banding, SimHash banding, the embedding and k-means cell
+  pairs (similarity.py) and the audio fingerprint pairs (multimodal.py)
+  all call it.
+- **The shingle index** (`_shingle_set`, `_shingle_index`) is each
+  document's set of xxhash64 shingle values, exploded to (id, sh) rows
+  for the signatures and the exact trio (`ngram_jaccard_pairs`,
+  `ngram_jaccard_pairs_prefix`, `ngram_containment_pairs`), kept as an
+  array for exact verification. `ngram_jaccard_pairs` and
+  `ngram_containment_pairs` share one inverted-index pair count and
+  differ only in their score.
+- **The candidate budget guard** (`_fits_budget`) counts the trio's
+  self-join candidates before the join runs, then raises or
+  downgrades to banded LSH.
+- **Every cache has an owner.** Each persisted frame goes through
+  `caching._CacheOwner`, so a raise releases it, and each pair
+  operator's lazy result owns the caches it reads: one `unpersist()`
+  on the result frees them all.
+
 Reference analog: the corpus has no dedup (it is an orchestrator); this
 implements the north-star LLM-pipeline extension declared in
 SURVEY.md §2 M5. Everything is built-in-function DataFrame code — no
@@ -27,17 +49,14 @@ Python UDFs anywhere in the hot path.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import char_shingles, tokens_ws
+from ..functions.text import char_shingles, tokens_ws, word_shingles
 from .caching import _CacheOwner, _TruncatedFrame
 from .width import ensure_wide
-
-# canonical implementation lives in operators/width.py (shared by the
-# curation / corpus-stats / text modules); the old private name is kept
-# for existing call sites
-_ensure_parallelism = ensure_wide
 
 
 # ---------------------------------------------------------------------------
@@ -83,38 +102,112 @@ def dedup_exact_text(
 
 
 # ---------------------------------------------------------------------------
-# Bucket guard (shared by every bucket-then-pair operator)
+# Bucket pairs (the one kernel of every bucket-then-pair operator)
 # ---------------------------------------------------------------------------
 
 
-def bucket_members(rows: DataFrame, keys: list[str], max_bucket: int) -> DataFrame:
-    """The rows of ``rows`` whose bucket (equal ``keys``) holds
-    2..``max_bucket`` members: the hot-bucket cap of every LSH / banding
-    pair operator. It runs before the caller's ``collect_list``, so a
-    degenerate bucket (millions of identical docs) never materializes a
-    member array; singletons, which pair with nothing, drop here too.
+def bucket_pairs(
+    rows: DataFrame,
+    keys: list[str],
+    max_bucket: int,
+    score: Callable[[Column, Column], Column] | None = None,
+) -> DataFrame:
+    """Every pair of ``rows`` in one bucket (equal ``keys``) that holds
+    2..``max_bucket`` members: ``(*keys, id_a, id_b)`` with
+    ``id_a < id_b``, plus the aliased column ``score(a, b)`` returns
+    for two members when given. A pair sharing several buckets appears
+    once per bucket; callers dedupe or count the votes.
 
+    A member is the bare ``id`` when ``rows`` holds nothing but ``id``
+    and ``keys``; otherwise it is ``struct(id, <other columns>)``, whose
+    fields ``score`` reads.
+
+    The hot-bucket cap runs before the ``collect_list``, so a
+    degenerate bucket (millions of identical docs) never materializes a
+    member array; singletons, which pair with nothing, drop there too.
     The count is a window over the bucket, so ``rows`` is referenced
     ONCE. A ``groupBy(keys).count()`` semi-joined back onto ``rows``
     reads the input in two branches, and Spark evaluates the whole
-    subtree in each: a Python decode stage beneath it runs twice per
-    query. The window's exchange also serves the caller's
-    ``groupBy(keys)``, so the guard adds no shuffle of its own. Jobs
-    per query (build and collect), semi-join → window: sf0.001
-    ``op_image_neardup`` 8 → 6, ``op_audio_neardup`` 7 → 5,
-    ``op_dedup_simhash`` 10 → 8; sf0.1, first call in a process,
-    ``op_dedup_minhash`` 24 → 21."""
+    subtree in each: a Python decode stage beneath it ran twice per
+    query. The window's exchange also serves the ``groupBy(keys)``, so
+    the cap adds no shuffle of its own.
+
+    The member array is sorted ONCE, in the aggregate, and bound to an
+    attribute outside the enumeration lambdas: an ``array_sort``
+    inlined at every reference inside the nested transforms made
+    codegen re-emit (and re-run) the sort per member — measured 16.5 s
+    cold / 2 s warm for ~1k SimHash pairs."""
+    payload = [c for c in rows.columns if c != "id" and c not in keys]
     n = F.count(F.lit(1)).over(Window.partitionBy(*keys))
-    return (
+    buckets = (
         rows.withColumn("__bucket_n", n)
         .where((F.col("__bucket_n") > 1) & (F.col("__bucket_n") <= max_bucket))
-        .drop("__bucket_n")
+        .groupBy(*keys)
+        .agg(
+            F.array_sort(
+                F.collect_list(F.struct("id", *payload) if payload else "id")
+            ).alias("__members")
+        )
     )
+    members = F.col("__members")
+
+    def pair(a: Column, b: Column) -> Column:
+        id_a, id_b = (a["id"], b["id"]) if payload else (a, b)
+        extra = [score(a, b)] if score is not None else []
+        return F.struct(id_a.alias("id_a"), id_b.alias("id_b"), *extra)
+
+    return buckets.select(
+        *keys,
+        F.explode(
+            F.flatten(
+                F.transform(
+                    members,
+                    lambda a, i: F.transform(
+                        F.slice(members, i + 2, F.size(members)),
+                        lambda b: pair(a, b),
+                    ),
+                )
+            )
+        ).alias("__p"),
+    ).select(*keys, "__p.*")
 
 
 # ---------------------------------------------------------------------------
 # MinHash + LSH
 # ---------------------------------------------------------------------------
+
+
+def _shingle_set(text: Column, k: int, mode: str) -> Column:
+    """The distinct ``xxhash64`` values of ``text``'s k-shingles: char
+    k-grams (``mode='char'``) or word k-grams (``'word'``) — the one
+    shingle-set definition of MinHash, exact verification and the
+    exact trio.
+
+    Each shingle STRING is hashed once, INSIDE the array, and the
+    8-byte values are deduped instead of the strings: the k salted
+    MinHash hashes then mix a long rather than re-hashing text k times,
+    set sizes and intersections compare longs, and every shuffle or
+    cache carries 8 bytes per shingle instead of text. Counts are
+    hash-domain counts, identical on any corpus without a 64-bit
+    shingle collision (~1e-13 per doc pair); a collision cannot change
+    a MinHash component at all, since min over the multiset of hashed
+    values equals min over its set. Measured sf0.1 char-5/k=128
+    signatures (noop, 4 runs): 2.23 s -> 1.83 s warm, 9.3 s -> 2.9 s
+    cold, bit-identical."""
+    mk = char_shingles if mode == "char" else word_shingles
+    return F.array_distinct(F.transform(mk(text, k), lambda s: F.xxhash64(s)))
+
+
+def _shingle_index(
+    df: DataFrame, text_col: str, id_col: str, k: int, mode: str
+) -> DataFrame:
+    """(id, sh): one row per distinct shingle hash of each document —
+    the inverted index the signatures aggregate and the exact trio
+    self-joins."""
+    return ensure_wide(df, id_col).select(
+        F.col(id_col).alias("id"),
+        F.explode(_shingle_set(F.col(text_col), k, mode)).alias("sh"),
+    )
 
 
 def minhash_signatures(
@@ -142,35 +235,13 @@ def minhash_signatures(
     ``mode='word'`` shingles on word k-grams instead of char k-grams so
     the signatures estimate the SAME Jaccard space as the exact word-
     shingle pair operators (their over-budget LSH fallback)."""
-    from ..functions.text import word_shingles
-
-    mk = char_shingles if mode == "char" else word_shingles
-    shingled = _ensure_parallelism(df, id_col).select(
-        F.col(id_col).alias("id"),
-        # hash each shingle STRING once, INSIDE the array, and dedupe
-        # the 8-byte hash values instead of the strings: the k salted
-        # hashes then mix the long (xxhash64 over (int, long)) rather
-        # than re-hashing variable-length text k times, the distinct
-        # compares longs rather than strings, and the exploded rows
-        # carry 8 bytes each. A hash collision merging two distinct
-        # shingles cannot change any signature component — min over
-        # the multiset of hashed values equals min over its set.
-        # Measured sf0.1 char-5/k=128 (noop, 4 runs): 2.23 s -> 1.83 s
-        # warm, 9.3 s -> 2.9 s cold; signatures bit-identical.
-        F.explode(
-            F.array_distinct(
-                F.transform(
-                    mk(F.col(text_col), shingle_k), lambda s: F.xxhash64(s)
-                )
-            )
-        ).alias("sh"),
-    )
     aggs = [
         F.min(F.xxhash64(F.lit(i), F.col("sh"))).alias(f"mh_{i}")
         for i in range(num_hashes)
     ]
     return (
-        shingled.groupBy("id")
+        _shingle_index(df, text_col, id_col, shingle_k, mode)
+        .groupBy("id")
         .agg(*aggs)
         .select("id", F.array(*[f"mh_{i}" for i in range(num_hashes)]).alias("sig"))
     )
@@ -240,31 +311,9 @@ def minhash_candidate_pairs(
             )
         ).alias("band_id", "band_hash"),
     )
-    # sort ONCE in its own projection: inlining array_sort at every
-    # reference inside the nested pair-enumeration lambdas made codegen
-    # re-emit (and re-run) the sort per member — measured 16.5 s cold /
-    # 2 s warm for ~1k pairs on the simhash twin of this block; with
-    # the sorted array bound to an attribute it is sorted once and the
-    # generated code shrinks to the enumeration itself
-    buckets = (
-        bucket_members(banded, ["band_id", "band_hash"], max_bucket)
-        .groupBy("band_id", "band_hash")
-        .agg(F.array_sort(F.collect_list("id")).alias("ids"))
+    pairs = bucket_pairs(banded, ["band_id", "band_hash"], max_bucket).select(
+        "id_a", "id_b"
     )
-    ids_sorted = F.col("ids")
-    pairs = buckets.select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    ids_sorted,
-                    lambda a, i: F.transform(
-                        F.slice(ids_sorted, i + 2, F.size(ids_sorted)),
-                        lambda b: F.struct(a.alias("id_a"), b.alias("id_b")),
-                    ),
-                )
-            )
-        ).alias("p")
-    ).select("p.id_a", "p.id_b")
     if min_band_matches <= 1:
         return pairs.distinct()
     # same shuffle as distinct(): a pair appears at most once per band
@@ -313,12 +362,29 @@ def dedup_minhash(
     The signature frame feeds the banding AND both sides of the
     verification join — persist it so the shingle+128-min aggregation
     runs once, not three times (signatures are ~1 KB/doc: safely
-    cacheable at any scale, spills to disk if not)."""
-    sigs = minhash_signatures(df, text_col, id_col, num_hashes, shingle_k).persist()
-    pairs = minhash_candidate_pairs(sigs, num_bands)
-    return minhash_estimate_jaccard(pairs, sigs).where(
-        F.col("jaccard_est") >= threshold
-    )
+    cacheable at any scale, spills to disk if not). The result owns
+    that cache: ``unpersist()`` releases it."""
+    with _CacheOwner() as caches:
+        sigs = caches.persist(
+            minhash_signatures(df, text_col, id_col, num_hashes, shingle_k)
+        )
+        pairs = minhash_candidate_pairs(sigs, num_bands)
+        return caches.handoff(
+            minhash_estimate_jaccard(pairs, sigs).where(F.col("jaccard_est") >= threshold)
+        )
+
+
+def _jaccard() -> Column:
+    """``|A ∩ B| / |A ∪ B|`` from the ``n_common``, ``n_a`` and ``n_b``
+    set-size columns."""
+    return (
+        F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
+    ).alias("jaccard")
+
+
+def _containment() -> Column:
+    """``|A ∩ B| / min(|A|, |B|)`` from the same columns."""
+    return (F.col("n_common") / F.least("n_a", "n_b")).alias("containment")
 
 
 def verify_pairs_exact_jaccard(
@@ -350,63 +416,39 @@ def verify_pairs_exact_jaccard(
     per-pair count-aggregate → two size joins (four extra exchanges,
     with the widest one keyed on shingle text). Pairs sharing zero
     shingles drop out (their Jaccard is 0 — below any useful
-    threshold)."""
-    from ..functions.text import word_shingles
-
-    mk = char_shingles if mode == "char" else word_shingles
+    threshold). The result owns the cached shingle sets:
+    ``unpersist()`` releases them."""
     ids = (
         pairs.select(F.col("id_a").alias("id"))
         .union(pairs.select(F.col("id_b").alias("id")))
         .distinct()
     )
-    # semi-join BEFORE shingling: Catalyst cannot prune rows through
-    # the shingle expression, so restricting afterwards would still
-    # shingle the entire corpus — the exact cost this function exists
-    # to avoid. The set frame feeds both join sides: persist so the
-    # shingling runs once. Sets are hashed INSIDE the array and deduped
-    # as 8-byte longs (the ngram_jaccard_pairs_prefix convention): the
-    # per-pair intersection compares longs, and the cached/joined
-    # arrays carry 8 bytes per shingle instead of text.
-    sets = (
-        df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__t"))
-        .join(ids, "id", "left_semi")
-        .select(
-            "id",
-            F.array_distinct(
-                F.transform(
-                    mk(F.col("__t"), shingle_k), lambda s: F.xxhash64(s)
-                )
-            ).alias("shs"),
+    with _CacheOwner() as caches:
+        # semi-join BEFORE shingling: Catalyst cannot prune rows through
+        # the shingle expression, so restricting afterwards would still
+        # shingle the entire corpus — the exact cost this function
+        # exists to avoid. The set frame feeds both join sides: persist
+        # so the shingling runs once.
+        sets = caches.persist(
+            df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__t"))
+            .join(ids, "id", "left_semi")
+            .select("id", _shingle_set(F.col("__t"), shingle_k, mode).alias("shs"))
         )
-        .persist()
-    )
-    joined = pairs.join(
-        sets.select(F.col("id").alias("id_a"), F.col("shs").alias("__sa")),
-        "id_a",
-    ).join(
-        sets.select(F.col("id").alias("id_b"), F.col("shs").alias("__sb")),
-        "id_b",
-    ).select(
-        "id_a",
-        "id_b",
-        F.size(F.array_intersect("__sa", "__sb")).alias("n_common"),
-        F.size("__sa").alias("n_a"),
-        F.size("__sb").alias("n_b"),
-    ).where(F.col("n_common") > 0)
-    cols = [
-        F.col("id_a"),
-        F.col("id_b"),
-        (
-            F.col("n_common")
-            / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
-        ).alias("jaccard"),
-    ]
-    if include_containment:
-        cols.insert(
-            2,
-            (F.col("n_common") / F.least("n_a", "n_b")).alias("containment"),
-        )
-    return joined.select(*cols)
+        joined = pairs.join(
+            sets.select(F.col("id").alias("id_a"), F.col("shs").alias("__sa")),
+            "id_a",
+        ).join(
+            sets.select(F.col("id").alias("id_b"), F.col("shs").alias("__sb")),
+            "id_b",
+        ).select(
+            "id_a",
+            "id_b",
+            F.size(F.array_intersect("__sa", "__sb")).alias("n_common"),
+            F.size("__sa").alias("n_a"),
+            F.size("__sb").alias("n_b"),
+        ).where(F.col("n_common") > 0)
+        scores = [_containment(), _jaccard()] if include_containment else [_jaccard()]
+        return caches.handoff(joined.select("id_a", "id_b", *scores))
 
 
 def dedup_minhash_verified(
@@ -434,10 +476,11 @@ def dedup_minhash_verified(
     3. exact verification re-touches shingles ONLY for the estimate
        survivors, so the expensive join is bounded by true-pair count,
        not candidate count.
+
+    The result owns every cache it reads (signatures, estimate
+    survivors, verification shingle sets): ``unpersist()`` releases
+    them all.
     """
-    sigs = minhash_signatures(
-        df, text_col, id_col, num_hashes, shingle_k, mode=mode
-    ).persist()
     # band VOTING: require a second band collision when that is
     # recall-free at this threshold (miss probability < 1e-5 for a
     # pair AT the final threshold — e.g. t=0.8, 32 bands of 4 rows:
@@ -453,20 +496,24 @@ def dedup_minhash_verified(
         < 1e-5
         else 1
     )
-    cand = minhash_candidate_pairs(
-        sigs, num_bands, max_bucket=max_bucket, min_band_matches=votes
-    )
-    # survivors are ~true-pair-count sized and feed verification three
-    # times (both sides of the id restriction + the pair join): persist
-    survivors = (
-        minhash_estimate_jaccard(cand, sigs)
-        .where(F.col("jaccard_est") >= threshold - est_margin)
-        .select("id_a", "id_b")
-        .persist()
-    )
-    return verify_pairs_exact_jaccard(
-        survivors, df, text_col, id_col, shingle_k, mode=mode
-    ).where(F.col("jaccard") >= threshold)
+    with _CacheOwner() as caches:
+        sigs = caches.persist(
+            minhash_signatures(df, text_col, id_col, num_hashes, shingle_k, mode=mode)
+        )
+        cand = minhash_candidate_pairs(
+            sigs, num_bands, max_bucket=max_bucket, min_band_matches=votes
+        )
+        # survivors are ~true-pair-count sized and feed verification
+        # three times (both sides of the id restriction + the pair join)
+        survivors = caches.persist(
+            minhash_estimate_jaccard(cand, sigs)
+            .where(F.col("jaccard_est") >= threshold - est_margin)
+            .select("id_a", "id_b")
+        )
+        verified = caches.own(
+            verify_pairs_exact_jaccard(survivors, df, text_col, id_col, shingle_k, mode=mode)
+        )
+        return caches.handoff(verified.where(F.col("jaccard") >= threshold))
 
 
 # ---------------------------------------------------------------------------
@@ -510,7 +557,7 @@ def simhash_signatures(
     else:
         raise ValueError(f"hash_fn must be 'xxhash64' or 'md5', got {hash_fn!r}")
 
-    base = _ensure_parallelism(df, id_col).select(
+    base = ensure_wide(df, id_col).select(
         F.col(id_col).alias("id"),
         tokens_ws(F.col(text_col)).alias("__t"),
     )
@@ -586,43 +633,17 @@ def simhash_neardup_pairs(
             )
         ).alias("bk"),
     ).select("id", "simhash", "bk.band", "bk.chunk")
-    # sort once, outside the nested enumeration lambdas — see the
-    # identical rewrite in minhash_candidate_pairs (an inlined
-    # array_sort re-ran per member and dominated the op's wall)
-    buckets = (
-        bucket_members(banded, ["band", "chunk"], max_bucket)
-        .groupBy("band", "chunk")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("id", "simhash"))
-            ).alias("docs")
-        )
+    pairs = bucket_pairs(
+        banded,
+        ["band", "chunk"],
+        max_bucket,
+        lambda a, b: F.bit_count(a["simhash"].bitwiseXOR(b["simhash"])).alias("hamming"),
     )
-    docs_sorted = F.col("docs")
-    pairs = (
-        buckets.select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        docs_sorted,
-                        lambda a, i: F.transform(
-                            F.slice(docs_sorted, i + 2, F.size(docs_sorted)),
-                            lambda b: F.struct(
-                                a.id.alias("id_a"),
-                                b.id.alias("id_b"),
-                                F.bit_count(
-                                    a.simhash.bitwiseXOR(b.simhash)
-                                ).alias("hamming"),
-                            ),
-                        ),
-                    )
-                )
-            ).alias("p")
-        )
-        .select("p.id_a", "p.id_b", "p.hamming")
+    return (
+        pairs.select("id_a", "id_b", "hamming")
         .where(F.col("hamming") <= max_hamming)
+        .distinct()
     )
-    return pairs.distinct()
 
 
 #: MinHash signature definition version, persisted with every store
@@ -859,12 +880,14 @@ def collapse_and_survivors(
     both are consumed."""
     from pyspark.sql import Window
 
-    pairs = dedup_minhash_verified(
-        df, id_col=id_col, threshold=threshold, **minhash_kwargs
-    ).select("id_a", "id_b")
-    # dedup_clusters returns its labels materialized and cached, so
-    # both outputs read them without recomputing the component loop
-    clusters = dedup_clusters(pairs)
+    with _CacheOwner() as caches:
+        pairs = caches.own(
+            dedup_minhash_verified(df, id_col=id_col, threshold=threshold, **minhash_kwargs)
+        )
+        # dedup_clusters returns its labels materialized and cached, so
+        # both outputs read them without recomputing the component
+        # loop, and the pair graph's caches are released here
+        clusters = dedup_clusters(pairs.select("id_a", "id_b"))
     collapse = (
         clusters.groupBy(F.col("cluster").alias("keep_id"))
         .agg(F.count("*").alias("n_members"), F.sum("id").alias("id_sum"))
@@ -906,36 +929,69 @@ class CandidateBudgetExceeded(RuntimeError):
     or pass ``on_over_budget='lsh'`` to downgrade automatically."""
 
 
-def _candidate_pair_count(keyed: DataFrame, key: str, df_cap: int | None) -> int:
-    """Σ C(n, 2) over the per-``key`` group sizes of ``keyed`` — the
-    EXACT number of (pre-dedup) pair rows the inverted-index self-join
-    on ``key`` will emit. One map-side-combined aggregate over an
-    already-persisted frame: control-plane cheap next to the join it
-    guards, and runs BEFORE any quadratic task is launched."""
-    counts = keyed.groupBy(key).agg(F.count(F.lit(1)).alias("n"))
+def _fits_budget(
+    op_name: str,
+    index: DataFrame,
+    df_cap: int | None,
+    budget: int | None,
+    on_over_budget: str,
+) -> bool:
+    """The candidate budget guard of the exact trio: whether the
+    self-join of ``index`` (id, sh) on ``sh`` stays within ``budget``
+    candidate pairs (always, when ``budget`` is None).
+
+    The count is Σ C(n, 2) over the per-shingle document counts ``n``
+    (those ≤ ``df_cap``, when given) — the EXACT number of (pre-dedup)
+    pair rows the join will emit. It is one map-side-combined
+    aggregate over the already-persisted index: control-plane cheap
+    next to the join it guards, and run BEFORE any quadratic task is
+    launched. Over budget the guard raises
+    :class:`CandidateBudgetExceeded`, or returns False when the caller
+    opted into the LSH downgrade (``on_over_budget='lsh'``); the
+    caller's cache owner then releases the index."""
+    if budget is None:
+        return True
+    counts = index.groupBy("sh").agg(F.count(F.lit(1)).alias("n"))
     if df_cap is not None:
         counts = counts.where(F.col("n") <= df_cap)
     row = counts.select(
         F.sum(F.col("n").cast("bigint") * (F.col("n") - 1) / 2).alias("c")
     ).first()
-    return int(row["c"] or 0)
-
-
-def _over_budget(
-    op_name: str, n_candidates: int, budget: int, on_over_budget: str
-) -> None:
-    """Raise (the default) unless the caller opted into the LSH
-    downgrade; callers handle the 'lsh' branch themselves."""
+    n_cand = int(row["c"] or 0)
+    if n_cand <= budget:
+        return True
     if on_over_budget != "lsh":
         raise CandidateBudgetExceeded(
             f"{op_name}: inverted-index self-join would materialize "
-            f"{n_candidates:,} candidate pairs (> candidate_budget="
+            f"{n_cand:,} candidate pairs (> candidate_budget="
             f"{budget:,}). The corpus is duplication-dense; use "
             f"dedup_minhash_verified (banded LSH with bucket caps, "
             f"exact-verified) or pass on_over_budget='lsh' to "
             f"downgrade automatically, or raise candidate_budget "
             f"if the cluster can absorb the shuffle."
         )
+    return False
+
+
+def _common_shingles(index: DataFrame, df_cap: int) -> DataFrame:
+    """The inverted-index pair count of :func:`ngram_jaccard_pairs` and
+    :func:`ngram_containment_pairs`: ``(id_a, id_b, n_common, n_a,
+    n_b)`` for every id_a < id_b pair of ``index`` (id, sh) sharing a
+    shingle whose document frequency is ≤ ``df_cap``, with both set
+    sizes."""
+    sizes = index.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
+    sh_df = index.groupBy("sh").agg(F.count(F.lit(1)).alias("sh_df"))
+    kept = index.join(sh_df.where(F.col("sh_df") <= df_cap).select("sh"), "sh")
+    common = (
+        kept.select(F.col("id").alias("id_a"), "sh")
+        .join(kept.select(F.col("id").alias("id_b"), "sh"), "sh")
+        .where(F.col("id_a") < F.col("id_b"))
+        .groupBy("id_a", "id_b")
+        .agg(F.count(F.lit(1)).alias("n_common"))
+    )
+    return common.join(
+        sizes.select(F.col("id").alias("id_a"), F.col("n_sh").alias("n_a")), "id_a"
+    ).join(sizes.select(F.col("id").alias("id_b"), F.col("n_sh").alias("n_b")), "id_b")
 
 
 def ngram_jaccard_pairs(
@@ -976,70 +1032,21 @@ def ngram_jaccard_pairs(
     1024 copies are fully recovered and larger ones should be
     collapsed by exact dedup first — the designed 100 TB posture).
     ``candidate_budget=None`` disables the guard (trusted inputs).
+    The result owns the persisted index: ``unpersist()`` releases it.
     """
-    from ..functions.text import word_shingles
-
-    mk = char_shingles if mode == "char" else word_shingles
-    # the inverted index feeds doc sizes, shingle DF counts, and both
-    # join sides — persist so shingling runs once, not four times.
-    # Shingles are hashed INSIDE the array and deduped as 8-byte longs
-    # (the convention ngram_jaccard_pairs_prefix already ships): the
-    # self-join key — the widest shuffle here — carries 8 bytes instead
-    # of shingle text, and the distinct compares longs. Set sizes and
-    # intersections are then hash-domain counts, identical on any
-    # corpus without a 64-bit shingle collision (~1e-13 per doc pair).
-    shingled = _ensure_parallelism(df, id_col).select(
-        F.col(id_col).alias("id"),
-        F.explode(
-            F.array_distinct(
-                F.transform(
-                    mk(F.col(text_col), shingle_k), lambda s: F.xxhash64(s)
-                )
-            )
-        ).alias("sh"),
-    ).persist()
-    if candidate_budget is not None:
-        n_cand = _candidate_pair_count(shingled, "sh", df_cap)
-        if n_cand > candidate_budget:
-            shingled.unpersist()
-            _over_budget(
-                "ngram_jaccard_pairs", n_cand, candidate_budget, on_over_budget
-            )
-            # identical copies share every band, so a duplicate clique
-            # lands in ONE bucket per band — the cap must exceed the
-            # clique sizes worth recovering (1024 -> <=0.5M pairs per
-            # bucket); collapse mega-cliques with exact dedup first
-            return dedup_minhash_verified(
-                df, text_col, id_col, threshold,
-                shingle_k=shingle_k, mode=mode, max_bucket=1024,
-            )
-    sizes = shingled.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
-    sh_df = shingled.groupBy("sh").agg(F.count(F.lit(1)).alias("sh_df"))
-    filtered = shingled.join(
-        sh_df.where(F.col("sh_df") <= df_cap).select("sh"), "sh"
-    )
-    left = filtered.select(F.col("id").alias("id_a"), "sh")
-    right = filtered.select(F.col("id").alias("id_b"), "sh")
-    common = (
-        left.join(right, "sh")
-        .where(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sizes.select(F.col("id").alias("id_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col("id").alias("id_b"), F.col("n_sh").alias("n_b"))
-    return (
-        common.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            (
-                F.col("n_common")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
-            ).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= threshold)
+    with _CacheOwner() as caches:
+        # the index feeds doc sizes, shingle DF counts, the guard and
+        # both join sides: persist so shingling runs once
+        index = caches.persist(_shingle_index(df, text_col, id_col, shingle_k, mode))
+        if _fits_budget("ngram_jaccard_pairs", index, df_cap, candidate_budget, on_over_budget):
+            pairs = _common_shingles(index, df_cap).select("id_a", "id_b", _jaccard())
+            return caches.handoff(pairs.where(F.col("jaccard") >= threshold))
+    # identical copies share every band, so a duplicate clique lands in
+    # ONE bucket per band — the cap must exceed the clique sizes worth
+    # recovering (1024 -> <=0.5M pairs per bucket); collapse
+    # mega-cliques with exact dedup first
+    return dedup_minhash_verified(
+        df, text_col, id_col, threshold, shingle_k=shingle_k, mode=mode, max_bucket=1024
     )
 
 
@@ -1075,93 +1082,65 @@ def ngram_jaccard_pairs_prefix(
     (N exact copies keep identical prefixes), so the same
     ``candidate_budget`` guard as :func:`ngram_jaccard_pairs` applies:
     candidates counted over the (persisted) prefix index before the
-    self-join; over budget → raise or LSH downgrade.
+    self-join; over budget → raise or LSH downgrade. The result owns
+    the persisted indexes: ``unpersist()`` releases them.
     """
-    from ..functions.text import word_shingles
-
-    mk = char_shingles if mode == "char" else word_shingles
-    # hash INSIDE the array and dedupe the longs (cheaper than string
-    # dedup followed by a post-explode hash projection; same values)
-    shingled = (
-        _ensure_parallelism(df, id_col)
-        .select(
-            F.col(id_col).alias("id"),
-            F.explode(
-                F.array_distinct(
-                    F.transform(
-                        mk(F.col(text_col), shingle_k), lambda s: F.xxhash64(s)
-                    )
+    with _CacheOwner() as caches:
+        index = caches.persist(_shingle_index(df, text_col, id_col, shingle_k, mode))
+        sh_df = index.groupBy("sh").agg(F.count(F.lit(1)).alias("sh_df"))
+        # rarest-first canonical order; (sh_df, sh) is a total order
+        w_doc = Window.partitionBy("id").orderBy("sh_df", "sh")
+        ranked = index.join(sh_df, "sh").select(
+            "id",
+            "sh",
+            F.row_number().over(w_doc).alias("rn"),
+            F.count(F.lit(1)).over(Window.partitionBy("id")).alias("n_sh"),
+        )
+        prefix_len = F.ceil((1.0 - threshold) * F.col("n_sh")).cast("int") + 1
+        prefix = ranked.where(F.col("rn") <= prefix_len).select("id", "sh", "n_sh")
+        if candidate_budget is not None:
+            prefix = caches.persist(prefix)  # feeds the guard count + both join sides
+        if _fits_budget(
+            "ngram_jaccard_pairs_prefix", prefix, None, candidate_budget, on_over_budget
+        ):
+            # size filter inside the bucket join: t·|A| ≤ |B| ≤ |A|/t
+            cand = (
+                prefix.select(F.col("id").alias("id_a"), "sh", F.col("n_sh").alias("n_a"))
+                .join(
+                    prefix.select(F.col("id").alias("id_b"), "sh", F.col("n_sh").alias("n_b")),
+                    "sh",
                 )
-            ).alias("h"),
-        )
-        .persist()
-    )
-    sh_df = shingled.groupBy("h").agg(F.count(F.lit(1)).alias("sh_df"))
-    # rarest-first canonical order; (sh_df, h) is a total order
-    w_doc = Window.partitionBy("id").orderBy("sh_df", "h")
-    ranked = shingled.join(sh_df, "h").select(
-        "id",
-        "h",
-        F.row_number().over(w_doc).alias("rn"),
-        F.count(F.lit(1)).over(Window.partitionBy("id")).alias("n_sh"),
-    )
-    prefix_len = F.ceil((1.0 - threshold) * F.col("n_sh")).cast("int") + 1
-    prefix = ranked.where(F.col("rn") <= prefix_len).select("id", "h", "n_sh")
-    if candidate_budget is not None:
-        prefix = prefix.persist()  # feeds the guard count + both join sides
-        n_cand = _candidate_pair_count(prefix, "h", None)
-        if n_cand > candidate_budget:
-            prefix.unpersist()
-            shingled.unpersist()
-            _over_budget(
-                "ngram_jaccard_pairs_prefix", n_cand, candidate_budget,
-                on_over_budget,
+                .where(
+                    (F.col("id_a") < F.col("id_b"))
+                    & (F.col("n_b") * F.lit(threshold) <= F.col("n_a"))
+                    & (F.col("n_a") * F.lit(threshold) <= F.col("n_b"))
+                )
+                .select("id_a", "id_b")
+                .distinct()
             )
-            return dedup_minhash_verified(
-                df, text_col, id_col, threshold,
-                shingle_k=shingle_k, mode=mode, max_bucket=1024,
+            sets = index.groupBy("id").agg(F.sort_array(F.collect_list("sh")).alias("hs"))
+            verified = (
+                cand.join(
+                    sets.select(F.col("id").alias("id_a"), F.col("hs").alias("hs_a")), "id_a"
+                )
+                .join(
+                    sets.select(F.col("id").alias("id_b"), F.col("hs").alias("hs_b")), "id_b"
+                )
+                .select(
+                    "id_a",
+                    "id_b",
+                    F.size(F.array_intersect("hs_a", "hs_b")).alias("n_common"),
+                    F.size("hs_a").alias("n_a"),
+                    F.size("hs_b").alias("n_b"),
+                )
+                .select("id_a", "id_b", _jaccard())
+                .where(F.col("jaccard") >= threshold)
             )
-    # size filter inside the bucket join: t·|A| ≤ |B| ≤ |A|/t
-    cand = (
-        prefix.select(F.col("id").alias("id_a"), "h", F.col("n_sh").alias("n_a"))
-        .join(
-            prefix.select(F.col("id").alias("id_b"), "h", F.col("n_sh").alias("n_b")),
-            "h",
-        )
-        .where(
-            (F.col("id_a") < F.col("id_b"))
-            & (F.col("n_b") * F.lit(threshold) <= F.col("n_a"))
-            & (F.col("n_a") * F.lit(threshold) <= F.col("n_b"))
-        )
-        .select("id_a", "id_b")
-        .distinct()
+            return caches.handoff(verified)
+    # over budget: the same downgrade as ngram_jaccard_pairs
+    return dedup_minhash_verified(
+        df, text_col, id_col, threshold, shingle_k=shingle_k, mode=mode, max_bucket=1024
     )
-    sets = shingled.groupBy("id").agg(F.sort_array(F.collect_list("h")).alias("hs"))
-    verified = (
-        cand.join(
-            sets.select(F.col("id").alias("id_a"), F.col("hs").alias("hs_a")), "id_a"
-        )
-        .join(
-            sets.select(F.col("id").alias("id_b"), F.col("hs").alias("hs_b")), "id_b"
-        )
-        .select(
-            "id_a",
-            "id_b",
-            F.size(F.array_intersect("hs_a", "hs_b")).alias("n_common"),
-            F.size("hs_a").alias("n_a"),
-            F.size("hs_b").alias("n_b"),
-        )
-        .select(
-            "id_a",
-            "id_b",
-            (
-                F.col("n_common")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
-            ).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= threshold)
-    )
-    return verified
 
 
 def ngram_containment_pairs(
@@ -1197,70 +1176,30 @@ def ngram_containment_pairs(
     cliques up to its bucket cap (1024 members here; collapse larger
     identical-copy cliques with exact dedup first — their pair lists
     are output-infeasible regardless of algorithm); the raise default
-    stays right when embedded-copy recall matters.
+    stays right when embedded-copy recall matters. The result owns
+    the caches it reads: ``unpersist()`` releases them.
     """
-    from ..functions.text import word_shingles
-
-    # hash-in-array + dedupe-as-longs, exactly as ngram_jaccard_pairs:
-    # the shingle self-join shuffles 8-byte keys, never n-gram text
-    shingled = _ensure_parallelism(df, id_col).select(
-        F.col(id_col).alias("id"),
-        F.explode(
-            F.array_distinct(
-                F.transform(
-                    word_shingles(F.col(text_col), shingle_n),
-                    lambda s: F.xxhash64(s),
-                )
+    with _CacheOwner() as caches:
+        index = caches.persist(_shingle_index(df, text_col, id_col, shingle_n, "word"))
+        if _fits_budget(
+            "ngram_containment_pairs", index, df_cap, candidate_budget, on_over_budget
+        ):
+            pairs = _common_shingles(index, df_cap).select(
+                "id_a", "id_b", _containment(), _jaccard()
             )
-        ).alias("sh"),
-    ).persist()
-    if candidate_budget is not None:
-        n_cand = _candidate_pair_count(shingled, "sh", df_cap)
-        if n_cand > candidate_budget:
-            shingled.unpersist()
-            _over_budget(
-                "ngram_containment_pairs", n_cand, candidate_budget,
-                on_over_budget,
-            )
-            sigs = minhash_signatures(
-                df, text_col, id_col, shingle_k=shingle_n, mode="word"
-            ).persist()
-            cand = minhash_candidate_pairs(sigs, max_bucket=1024)
-            return verify_pairs_exact_jaccard(
-                cand, df, text_col, id_col, shingle_n, mode="word",
-                include_containment=True,
-            ).where(F.col("containment") >= threshold)
-    sizes = shingled.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
-    sh_df = shingled.groupBy("sh").agg(F.count(F.lit(1)).alias("sh_df"))
-    filtered = shingled.join(
-        sh_df.where(F.col("sh_df") <= df_cap).select("sh"), "sh"
-    )
-    left = filtered.select(F.col("id").alias("id_a"), "sh")
-    right = filtered.select(F.col("id").alias("id_b"), "sh")
-    common = (
-        left.join(right, "sh")
-        .where(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sizes.select(F.col("id").alias("id_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col("id").alias("id_b"), F.col("n_sh").alias("n_b"))
-    return (
-        common.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            (
-                F.col("n_common") / F.least(F.col("n_a"), F.col("n_b"))
-            ).alias("containment"),
-            (
-                F.col("n_common")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
-            ).alias("jaccard"),
+            return caches.handoff(pairs.where(F.col("containment") >= threshold))
+    # over budget (the index is released): banded LSH candidates, exact scores
+    with _CacheOwner() as caches:
+        sigs = caches.persist(
+            minhash_signatures(df, text_col, id_col, shingle_k=shingle_n, mode="word")
         )
-        .where(F.col("containment") >= threshold)
-    )
+        verified = caches.own(
+            verify_pairs_exact_jaccard(
+                minhash_candidate_pairs(sigs, max_bucket=1024), df, text_col, id_col,
+                shingle_n, mode="word", include_containment=True,
+            )
+        )
+        return caches.handoff(verified.where(F.col("containment") >= threshold))
 
 
 # ---------------------------------------------------------------------------

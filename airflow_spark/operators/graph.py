@@ -426,7 +426,9 @@ def _relax(
     ``min(dist)``, carrying the old value as ``min(__prev)``, and
     materializes it once (persisted; truncated every 4th round, as in
     ``connected_components``). Counting its rows that are new or whose
-    ``dist`` fell is that materialization AND the convergence probe;
+    ``dist`` fell (from NULL to a value counts; a NULL-weight path's
+    NULL that stays NULL does not) is that materialization AND the
+    convergence probe;
     those rows are the next frontier, and a count of 0 ends the loop
     early. Relaxing only the frontier is exact: a node whose distance
     did not fall in round k−1 had its edges relaxed with that same
@@ -458,16 +460,27 @@ def _relax(
                 F.col("b").alias("node"),
                 (F.col("dist") + F.col("w")).alias("dist"),
                 F.lit(None).cast(dist_type).alias("__prev"),
+                F.lit(None).cast("boolean").alias("__seen"),
             )
             hop = (
-                best.select("node", "dist", F.col("dist").alias("__prev"))
+                best.select(
+                    "node", "dist", F.col("dist").alias("__prev"), F.lit(True).alias("__seen")
+                )
                 .unionByName(reached)
                 .groupBy("node")
-                .agg(F.min("dist").alias("dist"), F.min("__prev").alias("__prev"))
+                .agg(
+                    F.min("dist").alias("dist"),
+                    F.min("__prev").alias("__prev"),
+                    F.max("__seen").alias("__seen"),
+                )
             )
             stale = best
             best = caches.truncate(hop) if (i + 1) % 4 == 0 else caches.persist(hop)
-            frontier = best.where(F.col("__prev").isNull() | (F.col("dist") < F.col("__prev")))
+            # min never raises a dist, so a changed one fell (NULL → a
+            # value included); a NULL that stays NULL is no change
+            frontier = best.where(
+                F.col("__seen").isNull() | ~F.col("dist").eqNullSafe(F.col("__prev"))
+            )
             changed = frontier.count()
             caches.drop(stale)
             if changed == 0:

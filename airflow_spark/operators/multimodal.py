@@ -34,7 +34,7 @@ Scale notes:
   samples its child in a job of its own, so a ``mapInPandas`` child
   would decode every row once for the sample and again for the sort.
   Likewise a Python stage's output is referenced once per plan
-  (``dedup.bucket_members``), since each reference re-runs the stage.
+  (``dedup.bucket_pairs``), since each reference re-runs the stage.
 """
 
 from __future__ import annotations
@@ -47,7 +47,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .dedup import bucket_members
+from .dedup import bucket_pairs
 
 #: Canonical media column convention: payload + typed metadata.
 MEDIA_META_SCHEMA = T.StructType(
@@ -504,7 +504,7 @@ def audio_fingerprint_pairs(
 
     Returns (id_a, id_b, fp) with id_a < id_b. Scale shape: only the
     (id, fp) longs shuffle — one groupBy on the fingerprint behind
-    ``dedup.bucket_members``' hot-bucket cap; payloads never leave the
+    ``dedup.bucket_pairs``' hot-bucket cap; payloads never leave the
     decode scan."""
     import numpy as np
 
@@ -531,30 +531,7 @@ def audio_fingerprint_pairs(
             yield pd.DataFrame({"id": ids, "fp": fps})
 
     sigs = df.select(id_col, data_col).mapInPandas(_fp, "id LONG, fp LONG")
-    buckets = (
-        bucket_members(sigs, ["fp"], max_bucket)
-        .groupBy("fp")
-        .agg(F.array_sort(F.collect_list("id")).alias("ids"))
-    )
-    return (
-        buckets.select(
-            "fp",
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        F.col("ids"),
-                        lambda a, i: F.transform(
-                            F.slice(F.col("ids"), i + 2, F.size("ids")),
-                            lambda b: F.struct(
-                                a.alias("id_a"), b.alias("id_b")
-                            ),
-                        ),
-                    )
-                )
-            ).alias("p"),
-        )
-        .select("p.id_a", "p.id_b", "fp")
-    )
+    return bucket_pairs(sigs, ["fp"], max_bucket).select("id_a", "id_b", "fp")
 
 
 AUDIO_FEATURES_SCHEMA = T.StructType(

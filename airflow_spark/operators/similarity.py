@@ -26,7 +26,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine_similarity, lit_vector
-from .dedup import bucket_members, keep_representatives
+from .dedup import bucket_pairs, keep_representatives
 
 
 def cosine_topk(
@@ -352,6 +352,12 @@ def kmeans_cluster_stats(
     )
 
 
+def _rounded_cosine(a: Column, b: Column) -> Column:
+    """Cosine of two bucket members' ``v``, rounded to 6 decimals: the
+    score of the embedding pair operators."""
+    return F.round(cosine_similarity(a["v"], b["v"]), 6).alias("cosine")
+
+
 def semantic_dedup(
     df: DataFrame,
     threshold: float = 0.95,
@@ -381,39 +387,8 @@ def semantic_dedup(
         F.col(vec_col).alias("v"),
         index.cell_col(vec_col).alias("bucket"),
     )
-    buckets = (
-        bucket_members(b, ["bucket"], max_cell)
-        .groupBy("bucket")
-        .agg(
-            # sort once outside the enumeration lambdas (see
-            # dedup.minhash_candidate_pairs: an inlined array_sort
-            # re-ran per member inside the nested transform)
-            F.array_sort(F.collect_list(F.struct("id", "v"))).alias("docs")
-        )
-    )
-    docs_sorted = F.col("docs")
-    pairs = (
-        buckets.select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        docs_sorted,
-                        lambda a, i: F.transform(
-                            F.slice(docs_sorted, i + 2, F.size(docs_sorted)),
-                            lambda c: F.struct(
-                                a["id"].alias("id_a"),
-                                c["id"].alias("id_b"),
-                                F.round(
-                                    cosine_similarity(a["v"], c["v"]), 6
-                                ).alias("cosine"),
-                            ),
-                        ),
-                    )
-                )
-            ).alias("p")
-        )
-        .select("p.id_a", "p.id_b", "p.cosine")
-        .where(F.col("cosine") >= threshold)
+    pairs = bucket_pairs(b, ["bucket"], max_cell, _rounded_cosine).where(
+        F.col("cosine") >= threshold
     )
     return keep_representatives(df, pairs, id_col=id_col)
 
@@ -460,37 +435,12 @@ def cosine_neardup_pairs(
         F.col(vec_col).alias("v"),
         lsh.bucket_col(vec_col).alias("bucket"),
     )
-    buckets = (
-        bucket_members(b, ["bucket"], max_bucket)
-        .groupBy("bucket")
-        .agg(
-            # sort once outside the enumeration lambdas (see
-            # dedup.minhash_candidate_pairs: an inlined array_sort
-            # re-ran per member inside the nested transform)
-            F.array_sort(F.collect_list(F.struct("id", "v"))).alias("docs")
-        )
+    pairs = bucket_pairs(b, ["bucket"], max_bucket, _rounded_cosine)
+    return (
+        pairs.select("id_a", "id_b", "cosine")
+        .where(F.col("cosine") >= threshold)
+        .distinct()
     )
-    docs_sorted = F.col("docs")
-    pairs = buckets.select(
-        F.explode(
-            F.flatten(
-                F.transform(
-                    docs_sorted,
-                    lambda a, i: F.transform(
-                        F.slice(docs_sorted, i + 2, F.size(docs_sorted)),
-                        lambda c: F.struct(
-                            a["id"].alias("id_a"),
-                            c["id"].alias("id_b"),
-                            F.round(cosine_similarity(a["v"], c["v"]), 6).alias(
-                                "cosine"
-                            ),
-                        ),
-                    ),
-                )
-            )
-        ).alias("p")
-    ).select("p.id_a", "p.id_b", "p.cosine")
-    return pairs.where(F.col("cosine") >= threshold).distinct()
 
 
 def mmr_topk(

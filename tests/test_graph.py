@@ -588,16 +588,23 @@ def test_iterative_op_job_count(spark, untagged_jobs, case, jobs):
 
 def test_sssp_bounded_job_count_exits_early(spark, untagged_jobs):
     # a 3-node path settles in round 3 (round 3 relaxes node 2 and
-    # improves nothing), so a larger round bound adds no job
-    e = spark.createDataFrame([(0, 1, 1.0), (1, 2, 1.0)], "src bigint, dst bigint, w double")
+    # improves nothing), so a larger round bound adds no job. With a
+    # NULL weight the nodes past it keep a NULL dist, which is no
+    # change from round to round either
+    cases = [
+        ([(0, 1, 1.0), (1, 2, 1.0)], {(0, 0.0), (1, 1.0), (2, 2.0)}, 10),
+        ([(0, 1, None), (1, 2, 1.0)], {(0, 0.0), (1, None), (2, None)}, 8),
+    ]
+    for edges, want, many in cases:
+        e = spark.createDataFrame(edges, "src bigint, dst bigint, w double")
 
-    def run(rounds):
-        out, n = untagged_jobs(lambda: graph.sssp_bounded(e, 0, rounds=rounds))
-        assert {(r.node, r.dist) for r in out.collect()} == {(0, 0.0), (1, 1.0), (2, 2.0)}
-        out.unpersist()
-        return n
+        def run(rounds):
+            out, n = untagged_jobs(lambda: graph.sssp_bounded(e, 0, rounds=rounds))
+            assert {(r.node, r.dist) for r in out.collect()} == want
+            out.unpersist()
+            return n
 
-    assert run(10) <= run(3)
+        assert run(many) <= run(3), edges
 
 
 def test_bfs_distances_long_path_truncates_rounds(spark):

@@ -2500,6 +2500,48 @@ def test_keep_representatives_release_cluster_cache(spark, keep):
     assert persisted() - before == set()
 
 
+_TRIO = {
+    "ngram_jaccard_pairs": dict(threshold=0.8, mode="word", shingle_k=3),
+    "ngram_jaccard_pairs_prefix": dict(threshold=0.8, mode="word", shingle_k=3),
+    "ngram_containment_pairs": dict(threshold=0.6, shingle_n=3),
+}
+
+
+@pytest.mark.parametrize(
+    "op, budget",
+    [("dedup_minhash", None), ("dedup_minhash_verified", None),
+     ("verify_pairs_exact_jaccard", None)]
+    + [(op, b) for b in ("under", "lsh", "raise") for op in _TRIO],
+)
+def test_pair_operators_release_their_caches(spark, docs, op, budget):
+    """A pair operator's result owns every cache it reads: after
+    ``collect()`` and one ``unpersist()`` no new persistent RDD is
+    left, on the exact path, the LSH downgrade and the raise path."""
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+
+    fn = getattr(dedup, op)
+    before = persisted()
+    if op == "verify_pairs_exact_jaccard":
+        pairs = spark.createDataFrame([(0, 1), (0, 2), (0, 3)], "id_a LONG, id_b LONG")
+        out = fn(pairs, docs)
+    elif budget is None:
+        out = fn(docs, threshold=0.5)
+    elif budget == "under":
+        out = fn(docs, **_TRIO[op])
+    elif budget == "lsh":
+        out = fn(_clique_corpus(spark, n_cliques=3, clique=4), candidate_budget=10,
+                 on_over_budget="lsh", **_TRIO[op])
+    else:
+        with pytest.raises(dedup.CandidateBudgetExceeded):
+            fn(docs, candidate_budget=0, **_TRIO[op])
+        out = None
+    if out is not None:
+        assert out.collect()
+        out.unpersist()
+    assert persisted() - before == set()
+
+
 def _encode_bmp24(px) -> bytes:
     """Minimal BITMAPINFOHEADER 24-bpp BI_RGB encoder (bottom-up,
     4-byte padded rows) for decode-path tests."""

@@ -4,8 +4,8 @@ A ``mapInPandas`` stage is re-run whenever its output is read twice in
 one plan: by two branches of a self-join, or by a range-partitioned
 ``orderBy``, which samples its child in a job of its own before the
 shuffle reads it again. The registry entries with a Python stage must
-do neither, and the shared bucket guard (``dedup.bucket_members``)
-keeps its ``max_bucket`` boundary.
+do neither, and the shared bucket-pair kernel (``dedup.bucket_pairs``)
+keeps its ``max_bucket`` boundary in every operator that calls it.
 """
 
 from __future__ import annotations
@@ -19,8 +19,9 @@ from pyspark.sql import Row
 from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 
 from airflow_spark.catalog import load_tables
-from airflow_spark.operators.dedup import simhash_neardup_pairs
+from airflow_spark.operators.dedup import minhash_candidate_pairs, simhash_neardup_pairs
 from airflow_spark.operators.multimodal import audio_fingerprint_pairs
+from airflow_spark.operators.similarity import cosine_neardup_pairs
 from airflow_spark.operators.registry import OPERATOR_QUERIES
 
 #: Spark jobs of one build and collect at sf0.001 (8 cores, 8 shuffle
@@ -135,3 +136,30 @@ def test_audio_fingerprint_pairs_bucket_cap_boundary(spark):
         for r in audio_fingerprint_pairs(df, max_bucket=cap).collect()
     )
     assert got == [(a, b, 200) for a in range(cap) for b in range(a + 1, cap)]
+
+
+@pytest.mark.parametrize("op", ["minhash_candidate_pairs", "cosine_neardup_pairs"])
+def test_bucket_pairs_cap_boundary(spark, op):
+    # three groups of equal rows, one bucket each: exactly `cap` members
+    # (all C(cap, 2) pairs kept), `cap + 1` members (dropped) and one
+    # member (pairs with nothing)
+    cap = 4
+    groups = [range(cap), range(10, 11 + cap), [20]]
+    if op == "minhash_candidate_pairs":
+        # equal signatures share every band's bucket
+        sigs = spark.createDataFrame(
+            [(i, [g] * 4) for g, ids in enumerate(groups) for i in ids],
+            "id LONG, sig ARRAY<LONG>",
+        )
+        got = minhash_candidate_pairs(sigs, num_bands=2, max_bucket=cap).collect()
+    else:
+        # opposite vectors differ in every sign bit
+        unit = [[1.0, 0.0, 0.0, 0.0], [-1.0, 0.0, 0.0, 0.0], [0.0, 0.0, 1.0, 0.0]]
+        vecs = spark.createDataFrame(
+            [(i, unit[g]) for g, ids in enumerate(groups) for i in ids],
+            "vec_id LONG, embedding ARRAY<FLOAT>",
+        )
+        got = cosine_neardup_pairs(vecs, max_bucket=cap, dim=4).collect()
+    assert sorted((r.id_a, r.id_b) for r in got) == [
+        (a, b) for a in range(cap) for b in range(a + 1, cap)
+    ]
