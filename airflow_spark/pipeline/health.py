@@ -4,6 +4,8 @@ Reference analog: ``config/healthcheck.sh:20-40`` polls
 ``/api/v2/monitor/health`` for metadatabase / scheduler / triggerer
 status. Here ``health()`` returns the same shape as a dict: Spark
 driver liveness, state-store reachability, scheduler registration.
+A probe launches no Spark job: the state store's run count comes from
+its parquet footers (``RunStateStore.n_runs``).
 """
 
 from __future__ import annotations
@@ -48,7 +50,7 @@ def health(
             out["state_store"] = {
                 "status": "healthy",
                 "path": state_store.path,
-                "n_runs": state_store.runs().count(),
+                "n_runs": state_store.n_runs(),
             }
         except Exception as e:  # noqa: BLE001
             out["state_store"] = {"status": "unhealthy", "error": str(e)}

@@ -15,7 +15,10 @@ Writes and reads take different paths:
   parquet reader and ``DatasetTrigger`` both skip ``.``/``_`` names —
   see whole files or nothing, and concurrent writers never collide.
 - Reads (``runs()``, ``xcoms()`` and everything built on them) stay
-  Spark queries over the directory.
+  Spark queries over the directory. The one exception is the run count
+  that ``/health`` reports (``n_runs``): it sums the row counts in the
+  parquet footers of the files Spark's reader would list, so a probe
+  launches no Spark job and a corrupt file still fails it.
 - ``vacuum`` writes the kept rows as one new file *before* deleting the
   files it supersedes: a crash in between leaves duplicate rows, never
   lost history.
@@ -204,6 +207,19 @@ class RunStateStore:
 
     def runs(self) -> DataFrame:
         return self.spark.read.schema(RUN_SCHEMA).parquet(self.path)
+
+    def n_runs(self) -> int:
+        """``runs().count()`` from the parquet footers, with no Spark job.
+
+        Reads the files Spark's reader lists in the store: names that
+        start with ``.`` or ``_`` (in-flight writes, the XCom table) are
+        hidden. Raises ``OSError`` when the store is gone and
+        ``pyarrow``'s error on a corrupt file."""
+        return sum(
+            pq.read_metadata(os.path.join(self.path, f)).num_rows
+            for f in os.listdir(self.path)
+            if not f.startswith((".", "_"))
+        )
 
     def latest(self, pipeline: str):
         df = (

@@ -235,6 +235,31 @@ def test_cloudflare_apps_updates_only_drifted_records(spark):
     assert sum(u.startswith("policies/pol-1") for u in urls) == 4
 
 
+@pytest.mark.parametrize(
+    "names, policy",
+    [
+        (["deny", "Default Allow List", "ALLOW"], "pol-1"),
+        (["deny", "ALLOW"], "pol-1"),
+        (["deny"], None),
+    ],
+)
+def test_cloudflare_apps_policy_match_ignores_case(spark, names, policy):
+    # the first policy whose name contains "allow" in any case (:120-137)
+    src = _cf_sources(spark)
+    src["cloudflare_policies"] = fx.cloudflare_policies(
+        spark, [(f"pol-{i}", n) for i, n in enumerate(names)]
+    )
+    sink = CollectingSink()
+    run = build_cloudflare_apps(src, sink).test(spark, run_ts=RUN_TS, profile="prod")
+    posted = {u.split("/")[1] for u, _ in sink.posts if u.startswith("policies/")}
+    if policy is None:
+        assert run.tasks["rebuild_policy"].status == "failed"
+        assert "no matching policy" in run.tasks["rebuild_policy"].error
+        assert posted == set()
+    else:
+        assert run.ok and posted == {policy}
+
+
 def test_cloudflare_apps_dev_profile_posts_nothing(spark):
     sink = CollectingSink()
     p = build_cloudflare_apps(_cf_sources(spark), sink)
@@ -329,7 +354,7 @@ def test_cleanup_job_count_reads_expired_once(spark, untagged_jobs):
 #: (``local_frame``). A rise means a check scans a Spark source again.
 JOB_BUDGETS = {
     "DNS-Requests": 5,
-    "Speedtest": 6,
+    "Speedtest": 5,
     "Backups": 6,
     "Cloudflare-Apps": 6,
     "Cloudflare-DDNS": 1,
