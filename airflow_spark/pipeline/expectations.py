@@ -11,13 +11,13 @@ check never materializes more than a sample.
 A passing check still pays for every Spark job it launches, and a limit
 that finds nothing runs more than one: Spark scans the first partition,
 then the rest. Measured with ``expect_empty`` on ``local[4]``: 2 jobs
-in 220–330 ms together over a 4-partition ``createDataFrame`` of a
-Python list, 0 jobs (about 20 ms) over an Arrow-backed
-``LocalRelation`` (``sources.http.local_frame``), whose filter and limit
-Catalyst folds on the driver. Most of the 560–680 ms that the 2 jobs
-took before was Python-worker start-up, each task re-reading
-``pyspark.zip``; ``session.get_session`` now starts workers from
-``airflow_spark.pydaemon``, which skips that re-read.
+in 255–265 ms together (session medians) over a 4-partition
+``createDataFrame`` of a Python list, 0 jobs (about 20 ms) over an
+Arrow-backed ``LocalRelation`` (``sources.http.local_frame``), whose
+filter and limit Catalyst folds on the driver. Most of the 589–653 ms
+that the 2 jobs took before was Python-worker start-up, each task
+re-reading ``pyspark.zip``; ``session.get_session`` now starts workers
+from ``airflow_spark.pydaemon``, which skips that re-read.
 """
 
 from __future__ import annotations

@@ -92,6 +92,17 @@ def _write_parquet(dirpath: str, schema: T.StructType, rows) -> None:
     os.replace(tmp, os.path.join(dirpath, name))
 
 
+def _data_files(dirpath: str) -> list[str]:
+    """Paths of the files Spark's parquet reader lists in ``dirpath``:
+    regular files whose names do not start with ``.`` or ``_``, so
+    in-flight ``.tmp`` writes and the ``_xcom`` table are left out."""
+    return [
+        os.path.join(dirpath, f)
+        for f in os.listdir(dirpath)
+        if not f.startswith((".", "_")) and os.path.isfile(os.path.join(dirpath, f))
+    ]
+
+
 class RunStateStore:
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
@@ -211,15 +222,10 @@ class RunStateStore:
     def n_runs(self) -> int:
         """``runs().count()`` from the parquet footers, with no Spark job.
 
-        Reads the files Spark's reader lists in the store: names that
-        start with ``.`` or ``_`` (in-flight writes, the XCom table) are
-        hidden. Raises ``OSError`` when the store is gone and
+        Reads the footers of the files Spark's reader lists in the store
+        (``_data_files``). Raises ``OSError`` when the store is gone and
         ``pyarrow``'s error on a corrupt file."""
-        return sum(
-            pq.read_metadata(os.path.join(self.path, f)).num_rows
-            for f in os.listdir(self.path)
-            if not f.startswith((".", "_"))
-        )
+        return sum(pq.read_metadata(f).num_rows for f in _data_files(self.path))
 
     def latest(self, pipeline: str):
         df = (
@@ -249,14 +255,16 @@ class RunStateStore:
     def _compact(self, dirpath, schema, ts_col, cutoff) -> int:
         # Only the files listed here are read and then superseded, so a
         # record appended meanwhile is neither duplicated nor deleted.
-        # In-flight ``.tmp`` files belong to concurrent writers.
-        names = [
-            f
+        # Hidden side files (checksums, markers) go with the data, listed
+        # after it; in-flight ``.tmp`` files belong to concurrent writers.
+        data = _data_files(dirpath)
+        superseded = data + [
+            os.path.join(dirpath, f)
             for f in os.listdir(dirpath)
-            if not f.endswith(".tmp") and os.path.isfile(os.path.join(dirpath, f))
+            if f.startswith((".", "_"))
+            and not f.endswith(".tmp")
+            and os.path.isfile(os.path.join(dirpath, f))
         ]
-        superseded = [os.path.join(dirpath, f) for f in names]
-        data = [os.path.join(dirpath, f) for f in names if not f.startswith((".", "_"))]
         rows = (
             self.spark.read.schema(schema)
             .parquet(*data)

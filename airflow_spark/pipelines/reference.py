@@ -135,14 +135,15 @@ def build_speedtest(sources: dict[str, Provider], **pipeline_kw) -> Pipeline:
             raise ValueError("no speedtest devices configured")  # :43-44
         return devs
 
-    @p.task
-    def entities(ctx: Context) -> None:
-        # read once per run, not once per device: held on the driver
-        ctx.outputs["_entities_df"] = local_frame(sources["ha_entities"](ctx))
+    @p.task(depends_on=["devices"])
+    def entities(ctx: Context) -> DataFrame:
+        # read once per run, not once per device: held on the driver; a
+        # DataFrame output is not persisted, so a resumed run re-reads it
+        return local_frame(sources["ha_entities"](ctx))
 
     @p.task(expand_over="devices", depends_on=["entities"])
     def speed_test(ctx: Context, device: str) -> None:
-        entities = ctx.outputs["_entities_df"].where(F.col("device") == device)
+        entities = ctx.xcom("entities").where(F.col("device") == device)
         # tolerant float cast, default 0.0 on non-castable (:70-89, F8)
         val = F.coalesce(F.col("state").try_cast("double"), F.lit(0.0))
         # The reference defaults a missing sensor reading to 0.0 and
@@ -259,14 +260,14 @@ def build_cloudflare_apps(
                  default_retries=1, **pipeline_kw)
 
     @p.task
-    def ip_inventory(ctx: Context) -> None:
+    def ip_inventory(ctx: Context) -> DataFrame:
         ips = local_frame(sources["ip_inventory"](ctx))
         expect_nonempty(ips, "no IPs returned")  # cloudflare_api.py:51-54
-        ctx.outputs["_ips_df"] = ips
+        return ips  # not persisted: a resumed run re-reads it
 
     @p.task(depends_on=["ip_inventory"])
     def update_dns_records(ctx: Context) -> None:
-        ips: DataFrame = ctx.outputs["_ips_df"]
+        ips: DataFrame = ctx.xcom("ip_inventory")
         # CASE mapping id → dns name, unknown → null (:79-90, P12)
         dns_name = (
             F.when(F.col("id") == "racknerd", "vps.example.net")
@@ -322,7 +323,7 @@ def build_cloudflare_apps(
 
     @p.task(depends_on=["ip_inventory"])
     def rebuild_policy(ctx: Context) -> None:
-        ips: DataFrame = ctx.outputs["_ips_df"]
+        ips: DataFrame = ctx.xcom("ip_inventory")
         # UNION ALL of ipv4 + non-null ipv6 (:134-136)
         allowed = ips.select(F.col("ipv4_address").alias("ip")).unionAll(
             ips.where(F.col("ipv6_address").isNotNull()).select(

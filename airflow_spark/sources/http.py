@@ -116,9 +116,9 @@ def local_frame(df: DataFrame) -> DataFrame:
 
     A source built from a Python list (``http_json_source``, the
     fixtures) makes that one job a Python-fed one, with one Python task
-    per partition. On ``local[4]`` it takes 210–290 ms, down from
-    430–560 ms when every Python task re-read ``pyspark.zip`` (see
-    ``airflow_spark.pydaemon``).
+    per partition. On ``local[4]`` it takes 224–251 ms (session
+    medians), down from 438–459 ms when every Python task re-read
+    ``pyspark.zip`` (see ``airflow_spark.pydaemon``).
     """
     table = df.limit(MAX_ROWS + 1).toArrow()
     if table.num_rows > MAX_ROWS:

@@ -143,10 +143,32 @@ def test_speedtest_noncastable_state_uses_default(spark):
     assert run.ok
 
 
+def test_speedtest_resume_after_threshold_fix(spark, tmp_path):
+    # the shared entities read is a DataFrame output: not persisted, so
+    # the resumed run re-reads it for the devices that re-run
+    from airflow_spark.pipeline.state import RunStateStore
+
+    store = RunStateStore(spark, str(tmp_path / "state"))
+    src = {"ha_entities": fx.ha_entities(spark, {"dev1": ("50.5", "200.0"),
+                                                 "dev2": ("8.0", "90.0")})}
+    p = build_speedtest(src)
+    variables = {
+        "SPEEDTEST_DEVICES": "dev1|dev2",
+        "SPEEDTEST_dev2_UPLOAD": "10.0",   # dev2 upload 8.0 < 10.0 → fail
+    }
+    run = p.run(spark, run_id="s1", state_store=store, variables=variables,
+                run_ts=RUN_TS)
+    assert run.tasks["speed_test"].status == "failed"
+    variables["SPEEDTEST_dev2_UPLOAD"] = "5.0"
+    run2 = p.resume(spark, store, "s1", variables=variables, run_ts=RUN_TS)
+    assert run2.ok, {k: (v.status, v.error) for k, v in run2.tasks.items()}
+
+
 def test_speedtest_no_devices_fails(spark):
     p = build_speedtest({"ha_entities": fx.ha_entities(spark)})
     run = p.test(spark, variables={}, run_ts=RUN_TS)
     assert run.tasks["devices"].status == "failed"
+    assert run.tasks["entities"].status == "upstream_failed"  # no read
 
 
 # ---------------------------------------------------------------------------
@@ -278,6 +300,29 @@ def test_cloudflare_apps_missing_record_fails(spark):
     run = p.test(spark, run_ts=RUN_TS, profile="prod")
     assert run.tasks["update_dns_records"].status == "failed"
     assert "not found" in run.tasks["update_dns_records"].error
+
+
+def test_cloudflare_apps_resume_after_record_fix(spark, tmp_path):
+    # ``ip_inventory`` succeeded but its frame is not persisted: the
+    # resumed run re-reads it for ``update_dns_records``
+    from airflow_spark.pipeline.state import RunStateStore
+
+    store = RunStateStore(spark, str(tmp_path / "state"))
+    records = {"current": fx.cloudflare_dns_records(
+        spark, rows=[("rec-a-iowa", "iowa.example.net", "A", "203.0.113.20")]
+    )}
+    sources = _cf_sources(spark)
+    sources["cloudflare_dns_records"] = lambda ctx: records["current"](ctx)
+    sink = CollectingSink()
+    p = build_cloudflare_apps(sources, sink)
+    run = p.run(spark, run_id="c1", state_store=store, run_ts=RUN_TS,
+                profile="prod")
+    assert run.tasks["update_dns_records"].status == "failed"
+    assert run.tasks["rebuild_policy"].status == "success"
+    records["current"] = fx.cloudflare_dns_records(spark)
+    run2 = p.resume(spark, store, "c1", run_ts=RUN_TS, profile="prod")
+    assert run2.ok, {k: (v.status, v.error) for k, v in run2.tasks.items()}
+    assert "records/rec-a-vps" in [u for u, _ in sink.posts]
 
 
 def test_cloudflare_ddns_posts_and_null_fails(spark):
