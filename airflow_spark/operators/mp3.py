@@ -493,11 +493,6 @@ def _mdct18(z36: np.ndarray) -> np.ndarray:
     return _MDCT_COS @ z36
 
 
-def _imdct18(lines: np.ndarray) -> np.ndarray:
-    """18 lines -> 36 windowed time samples (for 50% overlap-add)."""
-    return (lines @ _MDCT_COS) * _MDCT_WIN
-
-
 def _imdct_hybrid(lines18: np.ndarray, block_type: int) -> np.ndarray:
     """One subband's 18 lines -> 36 windowed time samples for 50%
     overlap-add, honoring the block type: 0/1/3 run the 36-point IMDCT

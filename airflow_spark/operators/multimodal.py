@@ -25,13 +25,15 @@ real codec (PIL/ffmpeg) changes ONE function per modality
 Scale notes:
 - media rows are large → ``media_repartition`` right-sizes partitions
   by estimated bytes, not row count, to keep Arrow batches bounded;
-- feature extraction is ``mapInPandas`` (one Python worker per
-  partition, Arrow transfer) — never a row-at-a-time UDF;
+- every Python stage is one ``pystage.map_rows`` call (one
+  ``mapInPandas`` node, Arrow transfer; never a row-at-a-time UDF):
+  per-partition setup (FFT windows, the AVI parse cache) runs once in
+  ``make_row``, and each row maps to one output tuple or none;
 - derived features (small) are split from payloads (huge) early, so
   downstream joins/aggregations never shuffle the binary column;
 - a Python stage's output reaches a global sort only across an
   exchange (``repartition`` before ``orderBy``): the range partitioner
-  samples its child in a job of its own, so a ``mapInPandas`` child
+  samples its child in a job of its own, so a ``map_rows`` child
   would decode every row once for the sample and again for the sort.
   Likewise a Python stage's output is referenced once per plan
   (``dedup.bucket_pairs``), since each reference re-runs the stage.
@@ -40,7 +42,6 @@ Scale notes:
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -48,6 +49,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .dedup import bucket_pairs
+from .pystage import long_schema, map_rows
 
 #: Canonical media column convention: payload + typed metadata.
 MEDIA_META_SCHEMA = T.StructType(
@@ -234,6 +236,12 @@ def _luma_features(luma) -> dict:
     return {"mean_luma": mean, "embedding": [float(x) for x in emb]}
 
 
+_NO_IMAGE_CODEC = (
+    "no codec could decode this payload (bundled path handles baseline "
+    "JPEG + 8-bit PNG; install Pillow for WebP/progressive JPEG/...)"
+)
+
+
 def _decode_image_impl(data: bytes, strict: bool = False) -> dict:
     """Image decode: REAL when a codec can handle the payload (Pillow
     if installed; a pure-stdlib PNG decoder otherwise — so 8-bit PNGs
@@ -251,11 +259,7 @@ def _decode_image_impl(data: bytes, strict: bool = False) -> dict:
             **_luma_features(real["luma"]),
         }
     if strict:
-        raise NotImplementedError(
-            "no codec could decode this payload (bundled path handles "
-            "baseline JPEG + 8-bit PNG; install Pillow for "
-            "WebP/progressive JPEG/...)"
-        )
+        raise NotImplementedError(_NO_IMAGE_CODEC)
     h = hashlib.sha256(data).digest()
     width = 64 + h[0] % 192
     height = 64 + h[1] % 192
@@ -281,33 +285,21 @@ def extract_image_features(
     stays behind, so downstream plans never shuffle megabyte rows.
     """
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, mime, data in zip(
-                pdf[id_col], pdf["__mime"], pdf[data_col]
-            ):
-                raw = bytes(data)
-                dec = _decode_image_impl(raw, strict=strict)
-                out.append(
-                    {
-                        "media_id": int(mid),
-                        "mime": mime,
-                        "n_bytes": len(raw),
-                        "sha256": hashlib.sha256(raw).hexdigest(),
-                        "width": dec["width"],
-                        "height": dec["height"],
-                        "mean_luma": dec["mean_luma"],
-                        "embedding": dec["embedding"],
-                    }
-                )
-            yield pd.DataFrame(out, columns=[f.name for f in IMAGE_FEATURES_SCHEMA])
+    def image_features():
+        def row(mid, mime, raw):
+            dec = _decode_image_impl(raw, strict=strict)
+            return (
+                mid, mime, len(raw), hashlib.sha256(raw).hexdigest(),
+                dec["width"], dec["height"], dec["mean_luma"], dec["embedding"],
+            )
+
+        return row
 
     src = df.withColumn("__mime", F.col("meta.mime")) if "meta" in df.columns else (
         df.withColumn("__mime", F.lit(None).cast("string"))
     )
-    return src.select(id_col, "__mime", data_col).mapInPandas(
-        _extract, IMAGE_FEATURES_SCHEMA
+    return map_rows(
+        src.select(id_col, "__mime", data_col), IMAGE_FEATURES_SCHEMA, image_features
     )
 
 
@@ -343,11 +335,15 @@ def _dhash(luma, hash_size: int = 8) -> int:
             grid[r, c] = (
                 ii[r1, c1] - ii[r0, c1] - ii[r1, c0] + ii[r0, c0]
             ) / area
-    bits = (grid[:, 1:] > grid[:, :-1]).flatten()
+    return _signed64((grid[:, 1:] > grid[:, :-1]).flatten())
+
+
+def _signed64(bits) -> int:
+    """Bits, most significant first, as a two's-complement signed
+    64-bit long (Spark LongType)."""
     v = 0
     for b in bits:
         v = (v << 1) | int(b)
-    # two's-complement into a signed 64-bit long (Spark LongType)
     return v - (1 << 64) if v >= (1 << 63) else v
 
 
@@ -364,34 +360,18 @@ def extract_image_hashes(
     decoded=false (quarantine row, same posture as the corrupt-record
     readers)."""
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, data in zip(pdf[id_col], pdf[data_col]):
-                raw = bytes(data)
-                real = _try_real_decode(raw)
-                if real is None and strict:
-                    raise NotImplementedError(
-                        "no codec could decode this payload (bundled path "
-                        "handles baseline JPEG + 8-bit PNG; install "
-                        "Pillow for WebP/progressive JPEG/...)"
-                    )
-                out.append(
-                    {
-                        "media_id": int(mid),
-                        "dhash": (
-                            _dhash(real["luma"], hash_size)
-                            if real is not None
-                            else None
-                        ),
-                        "decoded": real is not None,
-                    }
-                )
-            yield pd.DataFrame(
-                out, columns=[f.name for f in IMAGE_HASH_SCHEMA]
-            )
+    def image_hash():
+        def row(mid, raw):
+            real = _try_real_decode(raw)
+            if real is None:
+                if strict:
+                    raise NotImplementedError(_NO_IMAGE_CODEC)
+                return mid, None, False
+            return mid, _dhash(real["luma"], hash_size), True
 
-    return df.select(id_col, data_col).mapInPandas(_extract, IMAGE_HASH_SCHEMA)
+        return row
+
+    return map_rows(df.select(id_col, data_col), IMAGE_HASH_SCHEMA, image_hash)
 
 
 def image_neardup_pairs(
@@ -443,43 +423,33 @@ def video_neardup_pairs(
 
     from . import dedup as _dedup
 
-    def _sig(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, sigs = [], []
-            for mid, data in zip(pdf[id_col], pdf[data_col]):
-                raw = bytes(data)
-                avi = _parse_avi(raw)
-                if not _avi_decodable(avi):
-                    continue
-                nf = len(avi["frames"])
-                take = sorted({
-                    round(i * (nf - 1) / max(n_sample - 1, 1))
-                    for i in range(min(n_sample, nf))
-                })
-                hashes = []
-                for fi in take:
-                    luma = _avi_frame_luma(avi, raw, fi)
-                    if luma is None:
-                        break
-                    h = _dhash(luma)
-                    hashes.append(np.uint64(h & ((1 << 64) - 1)))
-                if not hashes or len(hashes) != len(take):
-                    continue
-                bits = np.array(
-                    [[(int(h) >> j) & 1 for j in range(64)]
-                     for h in hashes],
-                    dtype=np.int64,
-                )
-                maj = (bits.sum(axis=0) * 2 > len(hashes)).astype(int)
-                v = 0
-                for j in range(63, -1, -1):
-                    v = (v << 1) | int(maj[j])
-                ids.append(int(mid))
-                sigs.append(v - (1 << 64) if v >= (1 << 63) else v)
-            yield pd.DataFrame({"id": ids, "simhash": sigs})
+    def video_signature():
+        def row(mid, raw):
+            avi = _parse_avi(raw)
+            if not _avi_decodable(avi):
+                return None
+            nf = len(avi["frames"])
+            take = sorted({
+                round(i * (nf - 1) / max(n_sample - 1, 1))
+                for i in range(min(n_sample, nf))
+            })
+            hashes = []
+            for fi in take:
+                luma = _avi_frame_luma(avi, raw, fi)
+                if luma is None:
+                    return None
+                hashes.append(_dhash(luma) & ((1 << 64) - 1))
+            if not hashes:
+                return None
+            bits = np.array(
+                [[(h >> j) & 1 for j in range(63, -1, -1)] for h in hashes]
+            )
+            return mid, _signed64(bits.sum(axis=0) * 2 > len(hashes))
 
-    sigs = df.select(id_col, data_col).mapInPandas(
-        _sig, "id LONG, simhash LONG"
+        return row
+
+    sigs = map_rows(
+        df.select(id_col, data_col), long_schema("id", "simhash"), video_signature
     )
     return _dedup.simhash_neardup_pairs(
         sigs, max_hamming=max_hamming, max_bucket=max_bucket
@@ -508,29 +478,23 @@ def audio_fingerprint_pairs(
     decode scan."""
     import numpy as np
 
-    from .mp3 import Mp3DecodeError, decode_mp3
+    from .mp3 import Mp3DecodeError
 
-    def _fp(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def audio_peak_bin():
         win = np.hanning(nfft)
-        for pdf in batches:
-            ids, fps = [], []
-            for mid, data in zip(pdf[id_col], pdf[data_col]):
-                raw = bytes(data)
-                dec = _decode_wav(raw)
-                if dec is None:
-                    try:
-                        dec = decode_mp3(raw)
-                    except Mp3DecodeError:
-                        continue  # undecodable: quarantine
-                x, _sr = dec
-                if len(x) < skip + nfft:
-                    x = np.pad(x, (0, skip + nfft - len(x)))
-                seg = x[skip:skip + nfft] * win
-                ids.append(int(mid))
-                fps.append(int(np.argmax(np.abs(np.fft.rfft(seg)))))
-            yield pd.DataFrame({"id": ids, "fp": fps})
 
-    sigs = df.select(id_col, data_col).mapInPandas(_fp, "id LONG, fp LONG")
+        def row(mid, raw):
+            try:
+                x, _sr, _fmt = _decode_pcm(raw)
+            except Mp3DecodeError:
+                return None  # undecodable: quarantine
+            if len(x) < skip + nfft:
+                x = np.pad(x, (0, skip + nfft - len(x)))
+            return mid, int(np.argmax(np.abs(np.fft.rfft(x[skip:skip + nfft] * win))))
+
+        return row
+
+    sigs = map_rows(df.select(id_col, data_col), long_schema("id", "fp"), audio_peak_bin)
     return bucket_pairs(sigs, ["fp"], max_bucket).select("id_a", "id_b", "fp")
 
 
@@ -576,6 +540,19 @@ def _decode_wav(data: bytes):
     if nch > 1:
         x = x[: len(x) - len(x) % nch].reshape(-1, nch).mean(axis=1)
     return x, sr
+
+
+def _decode_pcm(data: bytes):
+    """PCM of a RIFF/WAVE payload, else of an MPEG-1 Layer III stream
+    through the bundled ``mp3`` codec: ``(samples, sample_rate, fmt)``
+    with ``fmt`` ``"wav"`` or ``"mp3"``. Raises ``mp3.Mp3DecodeError``
+    when neither decodes."""
+    wav = _decode_wav(data)
+    if wav is not None:
+        return (*wav, "wav")
+    from .mp3 import decode_mp3
+
+    return (*decode_mp3(data), "mp3")
 
 
 def _mfcc(samples, sr: int, n_coef: int = 13, max_s: float = 10.0):
@@ -748,13 +725,11 @@ def _decode_audio_impl(
             "mfcc": [float(c) for c in _mfcc(x, sr)],
         }
 
-    wav = _decode_wav(data)
-    if wav is not None:
-        return _features(*wav)
-    try:
-        from .mp3 import Mp3DecodeError, decode_mp3
+    from .mp3 import Mp3DecodeError
 
-        return _features(*decode_mp3(data))
+    try:
+        x, sr, _fmt = _decode_pcm(data)
+        return _features(x, sr)
     except Mp3DecodeError:
         # not MP3, or outside the bundled subset (e.g. big-values
         # Huffman tables 16-23): try the optional external decoder
@@ -812,31 +787,22 @@ def extract_audio_features(
     if external_decoder == "auto":
         external_decoder = _resolve_external_audio_decoder()
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, data, dur, sr in zip(
-                pdf[id_col], pdf[data_col], pdf["__dur"], pdf["__sr"]
-            ):
-                raw = bytes(data)
-                meta = {
-                    "duration_ms": None if pd.isna(dur) else int(dur),
-                    "sample_rate": None if pd.isna(sr) else int(sr),
-                }
-                dec = _decode_audio_impl(
-                    raw, meta, strict=strict, external_decoder=external_decoder
-                )
-                out.append(
-                    {
-                        "media_id": int(mid),
-                        "n_bytes": len(raw),
-                        "sha256": hashlib.sha256(raw).hexdigest(),
-                        "duration_ms": dec["duration_ms"],
-                        "sample_rate": dec["sample_rate"],
-                        "mfcc": [float(x) for x in dec["mfcc"]],
-                    }
-                )
-            yield pd.DataFrame(out, columns=[f.name for f in AUDIO_FEATURES_SCHEMA])
+    def audio_features():
+        def row(mid, raw, dur, sr):
+            meta = {
+                "duration_ms": None if pd.isna(dur) else int(dur),
+                "sample_rate": None if pd.isna(sr) else int(sr),
+            }
+            dec = _decode_audio_impl(
+                raw, meta, strict=strict, external_decoder=external_decoder
+            )
+            return (
+                mid, len(raw), hashlib.sha256(raw).hexdigest(),
+                dec["duration_ms"], dec["sample_rate"],
+                [float(x) for x in dec["mfcc"]],
+            )
+
+        return row
 
     # meta is optional (the image path guards identically): WAV
     # payloads derive duration/rate from the file itself
@@ -848,8 +814,10 @@ def extract_audio_features(
         src = df.withColumn(
             "__dur", F.lit(None).cast("long")
         ).withColumn("__sr", F.lit(None).cast("int"))
-    return src.select(id_col, data_col, "__dur", "__sr").mapInPandas(
-        _extract, AUDIO_FEATURES_SCHEMA
+    return map_rows(
+        src.select(id_col, data_col, "__dur", "__sr"),
+        AUDIO_FEATURES_SCHEMA,
+        audio_features,
     )
 
 
@@ -895,49 +863,22 @@ def audio_quarantine_report(
     if external_decoder == "auto":
         external_decoder = _resolve_external_audio_decoder()
 
-    def _probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .mp3 import Mp3DecodeError, decode_mp3
+    def audio_quarantine():
+        from .mp3 import Mp3DecodeError
 
-        for pdf in batches:
-            out = []
-            for mid, data in zip(pdf[id_col], pdf[data_col]):
-                raw = bytes(data)
-                fmt, status, reason = "unknown", "quarantined", None
-                if _decode_wav(raw) is not None:
-                    fmt, status = "wav", "inline"
-                else:
-                    try:
-                        decode_mp3(raw)
-                        fmt, status = "mp3", "inline"
-                    except Mp3DecodeError as ex:
-                        reason = _classify_mp3_error(str(ex))
-                        fmt = (
-                            "mp3"
-                            if _parse_mp3_metadata(raw) is not None
-                            else "unknown"
-                        )
-                        if (
-                            try_external
-                            and _try_external_audio_decode(
-                                raw, external_decoder
-                            )
-                            is not None
-                        ):
-                            status, reason = "external", None
-                out.append(
-                    {
-                        "media_id": int(mid),
-                        "fmt": fmt,
-                        "status": status,
-                        "reason": reason,
-                    }
-                )
-            yield pd.DataFrame(
-                out, columns=[f.name for f in AUDIO_QUARANTINE_SCHEMA]
-            )
+        def row(mid, raw):
+            try:
+                return mid, _decode_pcm(raw)[2], "inline", None
+            except Mp3DecodeError as ex:
+                fmt = "mp3" if _parse_mp3_metadata(raw) is not None else "unknown"
+                if try_external and _try_external_audio_decode(raw, external_decoder) is not None:
+                    return mid, fmt, "external", None
+                return mid, fmt, "quarantined", _classify_mp3_error(str(ex))
 
-    return df.select(id_col, data_col).mapInPandas(
-        _probe, AUDIO_QUARANTINE_SCHEMA
+        return row
+
+    return map_rows(
+        df.select(id_col, data_col), AUDIO_QUARANTINE_SCHEMA, audio_quarantine
     )
 
 
@@ -957,10 +898,6 @@ def quarantine_rates(report: DataFrame) -> DataFrame:
     )
 
 
-#: back-compat name from round 9's audio-first probe
-audio_quarantine_rates = quarantine_rates
-
-
 def video_quarantine_report(
     df: DataFrame,
     data_col: str = "data",
@@ -977,39 +914,22 @@ def video_quarantine_report(
     Run BEFORE a frame-feature pass over an externally-sourced corpus
     to see what fraction the boundary affects."""
 
-    def _probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, data in zip(pdf[id_col], pdf[data_col]):
-                raw = bytes(data)
-                fmt, status, reason = "unknown", "quarantined", None
-                avi = _parse_avi(raw)
-                if avi is not None:
-                    fmt = "avi"
-                    if _avi_decodable(avi):
-                        status = "inline"
-                    elif not avi.get("frames"):
-                        reason = "no_frames"
-                    else:
-                        reason = "unsupported_codec"
-                elif _parse_mp4_metadata(raw) is not None:
-                    fmt, reason = "mp4", "unsupported_codec"
-                else:
-                    reason = "unsupported_container"
-                out.append(
-                    {
-                        "media_id": int(mid),
-                        "fmt": fmt,
-                        "status": status,
-                        "reason": reason,
-                    }
-                )
-            yield pd.DataFrame(
-                out, columns=[f.name for f in AUDIO_QUARANTINE_SCHEMA]
-            )
+    def video_quarantine():
+        def row(mid, raw):
+            avi = _parse_avi(raw)
+            if avi is not None:
+                if _avi_decodable(avi):
+                    return mid, "avi", "inline", None
+                reason = "unsupported_codec" if avi.get("frames") else "no_frames"
+                return mid, "avi", "quarantined", reason
+            if _parse_mp4_metadata(raw) is not None:
+                return mid, "mp4", "quarantined", "unsupported_codec"
+            return mid, "unknown", "quarantined", "unsupported_container"
 
-    return df.select(id_col, data_col).mapInPandas(
-        _probe, AUDIO_QUARANTINE_SCHEMA
+        return row
+
+    return map_rows(
+        df.select(id_col, data_col), AUDIO_QUARANTINE_SCHEMA, video_quarantine
     )
 
 
@@ -1357,38 +1277,22 @@ def extract_audio_metadata(
     plumbing contract as the feature extractors — payloads stay
     behind, only the small metadata frame flows on."""
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, data in zip(pdf[id_col], pdf[data_col]):
-                raw = bytes(data)
-                meta = _parse_mp3_metadata(raw) or _wav_metadata(raw) or {}
-                out.append(
-                    {
-                        "media_id": int(mid),
-                        "n_bytes": len(raw),
-                        "sha256": hashlib.sha256(raw).hexdigest(),
-                        "container": meta.get("container"),
-                        "mpeg_version": meta.get("mpeg_version"),
-                        "layer": meta.get("layer"),
-                        "bitrate_kbps": meta.get("bitrate_kbps"),
-                        "sample_rate": meta.get("sample_rate"),
-                        "channels": meta.get("channels"),
-                        "n_frames": meta.get("n_frames"),
-                        "duration_ms": meta.get("duration_ms"),
-                        "vbr": meta.get("vbr"),
-                        "xing": meta.get("xing"),
-                        "id3v2": meta.get("id3v2"),
-                        "title": meta.get("title"),
-                        "artist": meta.get("artist"),
-                    }
-                )
-            yield pd.DataFrame(
-                out, columns=[f.name for f in AUDIO_METADATA_SCHEMA]
-            )
+    def audio_metadata():
+        def row(mid, raw):
+            meta = _parse_mp3_metadata(raw) or _wav_metadata(raw) or {}
+            return _metadata_row(mid, raw, meta, AUDIO_METADATA_SCHEMA)
 
-    return df.select(id_col, data_col).mapInPandas(
-        _extract, AUDIO_METADATA_SCHEMA
+        return row
+
+    return map_rows(df.select(id_col, data_col), AUDIO_METADATA_SCHEMA, audio_metadata)
+
+
+def _metadata_row(mid, raw: bytes, meta: dict, schema: T.StructType) -> tuple:
+    """``(media_id, n_bytes, sha256, ...)`` with the rest of ``schema``'s
+    columns read from ``meta`` by name (NULL where absent)."""
+    return (
+        mid, len(raw), hashlib.sha256(raw).hexdigest(),
+        *(meta.get(k) for k in schema.fieldNames()[3:]),
     )
 
 
@@ -1556,34 +1460,14 @@ def extract_video_metadata(
     (profiling pass, never a raise); Arrow-batched ``mapInPandas``,
     payloads stay behind."""
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, data in zip(pdf[id_col], pdf[data_col]):
-                raw = bytes(data)
-                meta = _parse_mp4_metadata(raw) or _avi_metadata(raw) or {}
-                out.append(
-                    {
-                        "media_id": int(mid),
-                        "n_bytes": len(raw),
-                        "sha256": hashlib.sha256(raw).hexdigest(),
-                        **{
-                            k: meta.get(k)
-                            for k in (
-                                "container", "brand", "duration_ms",
-                                "width", "height", "n_frames",
-                                "video_codec", "audio_codec",
-                            )
-                        },
-                    }
-                )
-            yield pd.DataFrame(
-                out, columns=[f.name for f in VIDEO_METADATA_SCHEMA]
-            )
+    def video_metadata():
+        def row(mid, raw):
+            meta = _parse_mp4_metadata(raw) or _avi_metadata(raw) or {}
+            return _metadata_row(mid, raw, meta, VIDEO_METADATA_SCHEMA)
 
-    return df.select(id_col, data_col).mapInPandas(
-        _extract, VIDEO_METADATA_SCHEMA
-    )
+        return row
+
+    return map_rows(df.select(id_col, data_col), VIDEO_METADATA_SCHEMA, video_metadata)
 
 
 RESIZED_SCHEMA = T.StructType(
@@ -1612,45 +1496,25 @@ def resize_images(
     is still exercised."""
     w, h = target
 
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def resize_image():
         import numpy as np
 
-        for pdf in batches:
-            out = []
-            for mid, data in zip(pdf[id_col], pdf[data_col]):
-                raw = bytes(data)
-                real = _try_real_decode(raw)
-                if real is not None:
-                    luma = real["luma"]
-                    yi = np.minimum(
-                        np.arange(h) * luma.shape[0] // h, luma.shape[0] - 1
-                    )
-                    xi = np.minimum(
-                        np.arange(w) * luma.shape[1] // w, luma.shape[1] - 1
-                    )
-                    payload = (
-                        luma[np.ix_(yi, xi)].round().astype(np.uint8).tobytes()
-                    )
-                elif strict:
-                    raise NotImplementedError(
-                        "image resize: no codec could decode this payload "
-                        "(bundled path handles baseline JPEG + 8-bit "
-                        "PNG; install Pillow for WebP/...)"
-                    )
-                else:
-                    fake = hashlib.sha256(raw).digest() * ((w * h) // 32 + 1)
-                    payload = fake[: w * h]
-                out.append(
-                    {
-                        "media_id": int(mid),
-                        "data": payload,  # 1 byte/px grayscale
-                        "width": w,
-                        "height": h,
-                    }
-                )
-            yield pd.DataFrame(out, columns=[f.name for f in RESIZED_SCHEMA])
+        def row(mid, raw):
+            real = _try_real_decode(raw)
+            if real is not None:
+                luma = real["luma"]
+                yi = np.minimum(np.arange(h) * luma.shape[0] // h, luma.shape[0] - 1)
+                xi = np.minimum(np.arange(w) * luma.shape[1] // w, luma.shape[1] - 1)
+                payload = luma[np.ix_(yi, xi)].round().astype(np.uint8).tobytes()
+            elif strict:
+                raise NotImplementedError("image resize: " + _NO_IMAGE_CODEC)
+            else:
+                payload = (hashlib.sha256(raw).digest() * ((w * h) // 32 + 1))[: w * h]
+            return mid, payload, w, h  # 1 byte/px grayscale
 
-    return df.select(id_col, data_col).mapInPandas(_resize, RESIZED_SCHEMA)
+        return row
+
+    return map_rows(df.select(id_col, data_col), RESIZED_SCHEMA, resize_image)
 
 
 VIDEO_FEATURES_SCHEMA = T.StructType(
@@ -1708,11 +1572,7 @@ def _audio_fingerprint(samples, sr: int, n_bands: int = 12, n_frames: int = 5) -
     # otherwise compare quantization noise (which does NOT scale with
     # gain) against itself and flip under re-encoding/gain changes.
     # The margin scales with the signal, so gain invariance holds.
-    bits = (spectra > ref + 1e-3 * spectra.max()).flatten()
-    v = 0
-    for b in bits:
-        v = (v << 1) | int(b)
-    return v - (1 << 64) if v >= (1 << 63) else v
+    return _signed64((spectra > ref + 1e-3 * spectra.max()).flatten())
 
 
 def extract_audio_fingerprints(
@@ -1725,30 +1585,21 @@ def extract_audio_fingerprints(
     8-byte fingerprint leaves the scan. Undecodable payloads: strict
     raises, else NULL + decoded=false (quarantine posture)."""
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, data in zip(pdf[id_col], pdf[data_col]):
-                dec = _decode_wav(bytes(data))
-                if dec is None and strict:
+    def audio_fingerprint():
+        def row(mid, raw):
+            dec = _decode_wav(raw)
+            if dec is None:
+                if strict:
                     raise NotImplementedError(
                         "no codec could decode this payload (stdlib path "
                         "handles PCM WAV; install soundfile for more)"
                     )
-                out.append(
-                    {
-                        "media_id": int(mid),
-                        "afp": (
-                            _audio_fingerprint(dec[0], dec[1])
-                            if dec is not None
-                            else None
-                        ),
-                        "decoded": dec is not None,
-                    }
-                )
-            yield pd.DataFrame(out, columns=[f.name for f in AUDIO_FP_SCHEMA])
+                return mid, None, False
+            return mid, _audio_fingerprint(*dec), True
 
-    return df.select(id_col, data_col).mapInPandas(_extract, AUDIO_FP_SCHEMA)
+        return row
+
+    return map_rows(df.select(id_col, data_col), AUDIO_FP_SCHEMA, audio_fingerprint)
 
 
 def audio_neardup_pairs(
@@ -1952,64 +1803,43 @@ def extract_video_features(
         df.sparkSession.sparkContext.defaultParallelism, id_col
     )
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        avi_cache: dict[int, tuple] = {}
-        for pdf in batches:
-            out = []
-            for mid, ts, data in zip(
-                pdf[id_col], pdf["frame_ts_ms"], pdf[data_col]
-            ):
-                raw = bytes(data)
-                key = int(mid)
-                if key not in avi_cache:
-                    # bounded per-key cache: co-partitioned rows can
-                    # still INTERLEAVE media ids within a partition
-                    # (shuffle readers merge map outputs), so evicting
-                    # wholesale would re-parse the container per frame
-                    if len(avi_cache) >= 64:
-                        avi_cache.pop(next(iter(avi_cache)))
-                    avi_cache[key] = _parse_avi(raw)
-                avi = avi_cache[key]
-                if _avi_decodable(avi):
-                    us = avi["us_per_frame"] or 1
-                    idx = min(
-                        int(ts) * 1000 // us, len(avi["frames"]) - 1
-                    )
-                    off, size = avi["frames"][idx]
-                    luma = _avi_frame_luma(avi, raw, idx)
-                    if luma is not None:
-                        fbytes = raw[off : off + size]
-                        out.append(
-                            {
-                                "media_id": int(mid),
-                                "frame_ts_ms": int(ts),
-                                "sha256": hashlib.sha256(fbytes).hexdigest(),
-                                "mean_luma": float(luma.mean() / 255.0),
-                                "embedding": _luma_embedding(luma),
-                            }
-                        )
-                        continue
-                if strict:
-                    raise NotImplementedError(
-                        "video decode beyond uncompressed RGB AVI and "
-                        "Motion-JPEG requires a codec (e.g. ffmpeg); not "
-                        "available here — see docs/adr/0002"
-                    )
-                h = hashlib.sha256(raw + int(ts).to_bytes(8, "big")).digest()
-                out.append(
-                    {
-                        "media_id": int(mid),
-                        "frame_ts_ms": int(ts),
-                        "sha256": h.hex(),
-                        "mean_luma": h[0] / 255.0,
-                        "embedding": [((h[(1 + i) % 32] / 127.5) - 1.0) for i in range(8)],
-                    }
-                )
-            yield pd.DataFrame(
-                out, columns=[f.name for f in VIDEO_FEATURES_SCHEMA]
-            )
+    def video_frame_features():
+        avi_cache: dict[int, dict | None] = {}
 
-    return joined.mapInPandas(_extract, VIDEO_FEATURES_SCHEMA)
+        def row(mid, ts, raw):
+            if mid not in avi_cache:
+                # bounded per-key cache: co-partitioned rows can still
+                # INTERLEAVE media ids within a partition (shuffle
+                # readers merge map outputs), so evicting wholesale
+                # would re-parse the container per frame
+                if len(avi_cache) >= 64:
+                    avi_cache.pop(next(iter(avi_cache)))
+                avi_cache[mid] = _parse_avi(raw)
+            avi = avi_cache[mid]
+            if _avi_decodable(avi):
+                us = avi["us_per_frame"] or 1
+                idx = min(ts * 1000 // us, len(avi["frames"]) - 1)
+                off, size = avi["frames"][idx]
+                luma = _avi_frame_luma(avi, raw, idx)
+                if luma is not None:
+                    return (
+                        mid, ts, hashlib.sha256(raw[off : off + size]).hexdigest(),
+                        float(luma.mean() / 255.0), _luma_embedding(luma),
+                    )
+            if strict:
+                raise NotImplementedError(
+                    "video decode beyond uncompressed RGB AVI and "
+                    "Motion-JPEG requires a codec (e.g. ffmpeg); not "
+                    "available here — see docs/adr/0002"
+                )
+            h = hashlib.sha256(raw + ts.to_bytes(8, "big")).digest()
+            emb = [((h[(1 + i) % 32] / 127.5) - 1.0) for i in range(8)]
+            return mid, ts, h.hex(), h[0] / 255.0, emb
+
+        return row
+
+    # joined columns: id_col, frame_ts_ms, data_col
+    return map_rows(joined, VIDEO_FEATURES_SCHEMA, video_frame_features)
 
 
 def media_repartition(

@@ -15,6 +15,7 @@ import os
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..catalog import load_tables, register_views
 from ..functions import text as textfn
@@ -38,6 +39,7 @@ from . import (
     timeseries,
     versioning,
 )
+from .pystage import long_schema, map_rows
 
 # ---------------------------------------------------------------------------
 # SQL-expressible operator queries (oracle-checked)
@@ -3639,6 +3641,23 @@ def op_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     return graph.assortativity(edges)
 
 
+#: The synthetic media frames the multimodal entries decode.
+_PAYLOAD_SCHEMA = T.StructType(
+    [T.StructField("media_id", T.LongType()), T.StructField("data", T.BinaryType())]
+)
+
+
+def _payload_frame(ids: DataFrame, payload_for) -> DataFrame:
+    """``(media_id, data)`` with ``data = payload_for(media_id)``, built
+    in a Python stage named after ``payload_for``."""
+
+    def make_row():
+        return lambda m: (m, payload_for(m))
+
+    make_row.__name__ = payload_for.__name__
+    return map_rows(ids, _PAYLOAD_SCHEMA, make_row)
+
+
 def op_audio_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Metadata-level MP3 ingest (``multimodal.extract_audio_metadata``
     — ISO/IEC 11172-3 frame-header walk + Xing/Info/VBRI stream-info
@@ -3653,8 +3672,6 @@ def op_audio_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle: duration from the declared frame count, average bitrate
     floor((bytes·8·44100)/(n·1152·1000)) exactly as the walker
     computes it."""
-    import pandas as _pd
-
     from . import multimodal
 
     t = load_tables(spark, sf_dir)
@@ -3676,21 +3693,10 @@ def op_audio_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
         xing[off + 12:off + 16] = (417 + len(audio)).to_bytes(4, "big")
         return bytes(xing) + audio
 
-    def _synth(batches):
-        for pdf in batches:
-            yield _pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "data": [
-                        f128 * (1 + int(m) % 40)
-                        if int(m) % 14 == 0
-                        else _vbr_payload(1 + int(m) % 40)
-                        for m in pdf["media_id"]
-                    ],
-                }
-            )
+    def _mp3_for(m: int) -> bytes:
+        return f128 * (1 + m % 40) if m % 14 == 0 else _vbr_payload(1 + m % 40)
 
-    payloads = ids.mapInPandas(_synth, "media_id LONG, data BINARY")
+    payloads = _payload_frame(ids, _mp3_for)
     return (
         multimodal.extract_audio_metadata(payloads)
         .select(
@@ -3721,21 +3727,20 @@ def op_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     bins equal the planted one — if any codec stage shifted or
     dropped the tone, the hash breaks."""
     import numpy as _np
-    import pandas as _pd
 
     from . import mp3 as mp3codec
 
     t = load_tables(spark, sf_dir)
     # the corpus parquet is a handful of files; the codec work is
     # ~50 ms/row of pure Python, so spread rows across every core
-    # BEFORE the mapInPandas (same pattern as media_repartition)
+    # BEFORE the Python stage (same pattern as media_repartition)
     ids = (
         t.documents.select(F.col("doc_id").alias("media_id"))
         .where(F.col("doc_id") % 13 == 0)
         .repartition(spark.sparkContext.defaultParallelism)
     )
 
-    def _fp(batches):
+    def mp3_roundtrip_peaks():
         sr, nfft = 44100, 8192
         tt = _np.arange(int(sr * 0.3)) / sr
         win = _np.hanning(nfft)
@@ -3744,30 +3749,17 @@ def op_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
             seg = sig[4000:4000 + nfft] * win
             return int(_np.argmax(_np.abs(_np.fft.rfft(seg))))
 
-        for pdf in batches:
-            bins, mp3_bins, wav_bins = [], [], []
-            for m in pdf["media_id"]:
-                bin_k = 60 + 28 * (int(m) % 30)
-                x = 0.8 * _np.sin(2 * _np.pi * (bin_k * sr / nfft) * tt)
-                y, _sr = mp3codec.decode_mp3(mp3codec.encode_mp3(x, sr))
-                bins.append(bin_k)
-                mp3_bins.append(peak(y))
-                wav_bins.append(peak(x))
-            yield _pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "freq_bin": bins,
-                    "mp3_peak_bin": mp3_bins,
-                    "wav_peak_bin": wav_bins,
-                }
-            )
+        def row(m):
+            bin_k = 60 + 28 * (m % 30)
+            x = 0.8 * _np.sin(2 * _np.pi * (bin_k * sr / nfft) * tt)
+            y, _sr = mp3codec.decode_mp3(mp3codec.encode_mp3(x, sr))
+            return m, bin_k, peak(y), peak(x)
 
+        return row
+
+    schema = long_schema("media_id", "freq_bin", "mp3_peak_bin", "wav_peak_bin")
     return (
-        ids.mapInPandas(
-            _fp,
-            "media_id LONG, freq_bin LONG, mp3_peak_bin LONG, "
-            "wav_peak_bin LONG",
-        )
+        map_rows(ids, schema, mp3_roundtrip_peaks)
         # exchange first: the sort's range-sampling job re-runs its child
         .repartition(spark.sparkContext.defaultParallelism)
         .orderBy("media_id")
@@ -3790,7 +3782,6 @@ def op_audio_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash attests both the classifier and the patched stream really
     exercising the table-16 raise."""
     import numpy as _np
-    import pandas as _pd
 
     from . import mp3 as mp3codec
     from . import multimodal
@@ -3802,7 +3793,7 @@ def op_audio_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(spark.sparkContext.defaultParallelism)
     )
 
-    def _synth(batches):
+    def audio_class_payload():
         import io
         import wave
 
@@ -3819,29 +3810,19 @@ def op_audio_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
             0.5 * _np.sin(2 * _np.pi * 1000.0 * tt), sr
         )
         bad_mp3 = mp3codec.patch_table_select(good_mp3, 16)
-        for pdf in batches:
-            payloads = []
-            for m in pdf["media_id"]:
-                cls = (int(m) // 13) % 4
-                if cls == 0:
-                    payloads.append(wav_bytes)
-                elif cls == 1:
-                    payloads.append(good_mp3)
-                elif cls == 2:
-                    payloads.append(bad_mp3)
-                else:
-                    payloads.append(
-                        b"OggS" + bytes([int(m) % 251] * 64)
-                    )
-            yield _pd.DataFrame(
-                {"media_id": pdf["media_id"], "data": payloads}
-            )
+        fixed = (wav_bytes, good_mp3, bad_mp3)
 
-    payloads = ids.mapInPandas(_synth, "media_id LONG, data BINARY")
+        def row(m):
+            cls = (m // 13) % 4
+            return m, fixed[cls] if cls < 3 else b"OggS" + bytes([m % 251] * 64)
+
+        return row
+
+    payloads = map_rows(ids, _PAYLOAD_SCHEMA, audio_class_payload)
     report = multimodal.audio_quarantine_report(
         payloads, try_external=False
     )
-    return multimodal.audio_quarantine_rates(report)
+    return multimodal.quarantine_rates(report)
 
 
 def op_video_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3860,7 +3841,6 @@ def op_video_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     import struct as _struct
 
     import numpy as _np
-    import pandas as _pd
 
     from . import multimodal
 
@@ -3910,29 +3890,22 @@ def op_video_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
                     + (2000).to_bytes(4, "big") + bytes(80))
         return ftyp + _box(b"moov", mvhd)
 
-    def _synth(batches):
+    def video_class_payload():
         w, h = 16, 8
         stride = ((w * 3 + 3) // 4) * 4
         rows = _np.zeros((h, stride), dtype=_np.uint8)
         rows[:, : w * 3] = 128
         dib = _avi(b"DIB ", 0, rows.tobytes())
         h264 = _avi(b"H264", 0x34363248, b"\x00\x00\x00\x01" + b"\x65" * 64)
-        mp4 = _mp4()
-        for pdf in batches:
-            payloads = []
-            for m in pdf["media_id"]:
-                cls = (int(m) // 17) % 4
-                payloads.append(
-                    dib if cls == 0
-                    else h264 if cls == 1
-                    else mp4 if cls == 2
-                    else b"FLV\x01" + bytes([int(m) % 251] * 32)
-                )
-            yield _pd.DataFrame(
-                {"media_id": pdf["media_id"], "data": payloads}
-            )
+        fixed = (dib, h264, _mp4())
 
-    payloads = ids.mapInPandas(_synth, "media_id LONG, data BINARY")
+        def row(m):
+            cls = (m // 17) % 4
+            return m, fixed[cls] if cls < 3 else b"FLV\x01" + bytes([m % 251] * 32)
+
+        return row
+
+    payloads = map_rows(ids, _PAYLOAD_SCHEMA, video_class_payload)
     return multimodal.quarantine_rates(
         multimodal.video_quarantine_report(payloads)
     )
@@ -3954,7 +3927,6 @@ def op_image_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import struct as _struct
 
     import numpy as _np
-    import pandas as _pd
 
     from . import multimodal
 
@@ -4001,16 +3973,7 @@ def op_image_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
             gray = gray + 4  # brightness-shifted near-duplicate
         return _bmp24_gray(_np.kron(gray, _np.ones((8, 8), _np.int64)))
 
-    def _synth(batches):
-        for pdf in batches:
-            yield _pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "data": [_image_for(int(m)) for m in pdf["media_id"]],
-                }
-            )
-
-    payloads = ids.mapInPandas(_synth, "media_id LONG, data BINARY")
+    payloads = _payload_frame(ids, _image_for)
     return (
         multimodal.image_neardup_pairs(payloads, max_hamming=6)
         .orderBy("id_a", "id_b")
@@ -4038,7 +4001,6 @@ def op_audio_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import wave as _wave
 
     import numpy as _np
-    import pandas as _pd
 
     from . import mp3 as mp3codec
     from . import multimodal
@@ -4051,7 +4013,7 @@ def op_audio_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(spark.sparkContext.defaultParallelism)
     )
 
-    def _payload(m: int) -> bytes:
+    def _audio_for(m: int) -> bytes:
         sr, nfft = 44100, 8192
         g = (m - 6 if m % 12 == 6 else m) // 12
         bin_k = 40 + g % 2400
@@ -4107,16 +4069,7 @@ def op_audio_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
             w.writeframes((x * 32767).astype("<i2").tobytes())
         return buf.getvalue()
 
-    def _synth(batches):
-        for pdf in batches:
-            yield _pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "data": [_payload(int(m)) for m in pdf["media_id"]],
-                }
-            )
-
-    payloads = ids.mapInPandas(_synth, "media_id LONG, data BINARY")
+    payloads = _payload_frame(ids, _audio_for)
     return (
         multimodal.audio_fingerprint_pairs(payloads)
         .orderBy("id_a", "id_b")
@@ -4144,7 +4097,6 @@ def op_video_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import struct as _struct
 
     import numpy as _np
-    import pandas as _pd
 
     from . import multimodal
     from .jpeg import encode_baseline_jpeg as _enc_jpeg
@@ -4235,16 +4187,7 @@ def op_video_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
             b"RIFF" + _struct.pack("<I", 4 + len(body)) + b"AVI " + body
         )
 
-    def _synth(batches):
-        for pdf in batches:
-            yield _pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "data": [_avi_for(int(m)) for m in pdf["media_id"]],
-                }
-            )
-
-    payloads = ids.mapInPandas(_synth, "media_id LONG, data BINARY")
+    payloads = _payload_frame(ids, _avi_for)
     return (
         multimodal.video_neardup_pairs(payloads, max_hamming=6)
         .orderBy("id_a", "id_b")
@@ -4259,8 +4202,6 @@ def op_video_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     avc1 video track with ``1 + doc_id % 24`` stsz samples), the
     walker parses the boxes back, and the synthesis parameters are the
     DuckDB oracle."""
-    import pandas as _pd
-
     from . import multimodal
 
     t = load_tables(spark, sf_dir)
@@ -4271,7 +4212,8 @@ def op_video_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _box(typ: bytes, payload: bytes) -> bytes:
         return (len(payload) + 8).to_bytes(4, "big") + typ + payload
 
-    def _mp4(duration_ms: int, n_frames: int) -> bytes:
+    def _mp4_for(m: int) -> bytes:
+        duration_ms, n_frames = (1 + m % 50) * 500, 1 + m % 24
         ftyp = _box(b"ftyp", b"isom" + (0).to_bytes(4, "big"))
         mvhd = _box(b"mvhd", bytes(12) + (1000).to_bytes(4, "big")
                     + duration_ms.to_bytes(4, "big") + bytes(80))
@@ -4285,19 +4227,7 @@ def op_video_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
             b"mdia", hdlr + _box(b"minf", _box(b"stbl", stsd + stsz))))
         return ftyp + _box(b"moov", mvhd + trak)
 
-    def _synth(batches):
-        for pdf in batches:
-            yield _pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "data": [
-                        _mp4((1 + int(m) % 50) * 500, 1 + int(m) % 24)
-                        for m in pdf["media_id"]
-                    ],
-                }
-            )
-
-    payloads = ids.mapInPandas(_synth, "media_id LONG, data BINARY")
+    payloads = _payload_frame(ids, _mp4_for)
     return (
         multimodal.extract_video_metadata(payloads)
         .select(

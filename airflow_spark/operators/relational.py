@@ -54,7 +54,6 @@ def asof_join(
     if right_cols is None:
         right_cols = [c for c in right.columns if c != key]
     lcols = left.columns
-    rtypes = dict(right.dtypes)
     # carry the right timestamp internally for the tolerance check
     carry_cols = list(right_cols)
     if right_ts not in carry_cols:
@@ -66,7 +65,6 @@ def asof_join(
     # different right rows (and a tolerance check against the wrong
     # row's timestamp). The struct is non-null exactly when a right row
     # exists, so the whole row matches or none of it does.
-    _ = rtypes  # kept for signature stability of older callers
     r_struct = F.struct(*[F.col(c).alias(c) for c in carry_cols])
     struct_type = right.select(r_struct.alias("__r")).schema["__r"].dataType
     l_tag = left.select(

@@ -3,11 +3,11 @@
 Byte-pair-encoding is inherently sequential per word (each merge
 depends on the previous one), so it cannot be a Catalyst expression —
 this is one of the few legitimately Python operators in the repo, run
-as an Arrow-batched ``mapInPandas`` with the learned merge table
-broadcast as a plan literal (the IVF-centroid pattern:
+as one Arrow-batched ``pystage.map_rows`` stage with the learned merge
+table broadcast as a plan literal (the IVF-centroid pattern:
 ``operators/similarity.py``). Everything around it stays engine-side:
-the corpus is never collected, and per-batch word caching means each
-distinct word in a batch is tokenized once.
+the corpus is never collected, and a per-partition word cache means
+each distinct word in a partition is tokenized once.
 
 Training is deliberately ENGINE-INDEPENDENT pure Python over the
 parquet word counts (via duckdb) — merges are model parameters, like
@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F  # noqa: F401  (parity with siblings)
 from pyspark.sql import types as T
 
+from .pystage import map_rows
 from .width import ensure_wide
 
 _WS = re.compile(r"\s+")
@@ -136,9 +137,9 @@ def bpe_token_counts(
     (id, n_words, n_tokens, roundtrip_ok) where roundtrip_ok attests
     every word reassembles exactly from its subword tokens.
 
-    Arrow-batched ``mapInPandas``; ``merges`` ride the closure as plan
-    literals (train once, broadcast everywhere), and a per-batch word
-    cache collapses the per-word cost to once per distinct word."""
+    One ``map_rows`` stage; ``merges`` ride the closure as plan
+    literals (train once, broadcast everywhere), and a per-partition
+    word cache collapses the per-word cost to once per distinct word."""
     ranks = {tuple(p): i for i, p in enumerate(merges)}
     schema = T.StructType(
         [
@@ -148,51 +149,29 @@ def bpe_token_counts(
             T.StructField("roundtrip_ok", T.BooleanType()),
         ]
     )
-    id_name, text_name = id_col, text_col
 
-    def run(batches):
-        import pandas as pd
-
+    def bpe_tokens():
         cache: dict[str, list[str]] = {}
 
-        def toks(w: str) -> list[str]:
-            got = cache.get(w)
-            if got is None:
-                got = bpe_word_tokens(w, ranks)
-                cache[w] = got
-            return got
+        def row(i, txt):
+            # NULL text arrives as None (or NaN via pandas) — that is
+            # zero words, not the literal string 'none'/'nan'
+            text = txt if isinstance(txt, str) else ""
+            words = [w for w in _WS.split(text.lower()) if w]
+            n_tok = 0
+            rt = True
+            for w in words:
+                tk = cache.get(w)
+                if tk is None:
+                    tk = cache[w] = bpe_word_tokens(w, ranks)
+                n_tok += len(tk)
+                rt = rt and "".join(tk) == w
+            return i, len(words), n_tok, rt
 
-        for pdf in batches:
-            ids, nw, nt, ok = [], [], [], []
-            for i, txt in zip(pdf[id_name], pdf[text_name]):
-                # NULL text arrives as None (or NaN via pandas) — that
-                # is zero words, not the literal string 'none'/'nan'
-                text = txt if isinstance(txt, str) else ""
-                words = [w for w in _WS.split(text.lower()) if w]
-                n_tok = 0
-                rt = True
-                for w in words:
-                    tk = toks(w)
-                    n_tok += len(tk)
-                    if "".join(tk) != w:
-                        rt = False
-                ids.append(int(i))
-                nw.append(len(words))
-                nt.append(n_tok)
-                ok.append(rt)
-            yield pd.DataFrame(
-                {
-                    "id": ids,
-                    "n_words": nw,
-                    "n_tokens": nt,
-                    "roundtrip_ok": ok,
-                }
-            )
+        return row
 
     # 1-file scans would run the whole Arrow pipeline on one core
-    return ensure_wide(df.select(id_col, text_col), id_col).mapInPandas(
-        run, schema
-    )
+    return map_rows(ensure_wide(df.select(id_col, text_col), id_col), schema, bpe_tokens)
 
 
 def word_counts_from_df(

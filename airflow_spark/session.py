@@ -51,27 +51,6 @@ _SESSION_CONFS = {
     "spark.sql.adaptive.skewJoin.enabled": "true",
 }
 
-#: Cluster-scale runtime filters, OPT-IN via SPARK_GRAFT_RUNTIME_FILTERS=1.
-#: - runtime bloomFilter: inject a bloom filter built from the smaller
-#:   join side into the larger side's scan — row-group-level pruning on
-#:   shuffle joins that broadcast can't handle (the big⋈big case that
-#:   matters at 100 TB). Correctness-neutral (false positives only
-#:   relax the filter); verified by a full-registry oracle pass with
-#:   the flag on.
-#: - parquet aggregatePushdown: answer bare min/max/count aggregates
-#:   from parquet footer statistics without scanning row data.
-#: MEASURED at sf0.1/local[32]: enabling both cost ~45% total bench
-#: time (166 s vs 114 s; extra bloom-build aggregates + planning on
-#: every eligible join dwarf any pruning win when scans take
-#: milliseconds), so the default is off locally — flip it on for real
-#: multi-TB scans where a row group skipped pays for the build.
-_RUNTIME_FILTER_CONFS = {
-    "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
-    "spark.sql.parquet.aggregatePushdown": "true",
-}
-if os.environ.get("SPARK_GRAFT_RUNTIME_FILTERS", "") in ("1", "true"):
-    _SESSION_CONFS.update(_RUNTIME_FILTER_CONFS)
-
 
 def normalize_session(spark: SparkSession) -> SparkSession:
     """Apply required session confs to an existing session (idempotent)."""

@@ -64,6 +64,7 @@ python3 -m pytest tests/test_sources.py -q -k local_frame
 python3 -m pytest tests/test_reference_pipelines.py -q -k job_count
 python3 -m pytest tests/test_graph.py -q -k "job_count or leave_only_the_returned_cache"
 python3 -m pytest tests/test_python_stages.py -q
+python3 -m pytest tests/test_pystage.py -q
 python3 -m pytest tests/test_llm_ops.py -q -k release_their_caches
 python3 -m pytest tests/test_fixed_costs.py -q
 python3 -c "import __spark_entry__, bench, airflow_spark"
